@@ -1,6 +1,6 @@
 package graft.crawl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -47,23 +47,25 @@ final case class CrawlConfig(
 /** One row of the frontier / admitted-wave tables. */
 final case class FrontierRow(kind: String, url: String, depth: Int, host: String)
 
-/** Output of the fetch+parse flatMap for one admitted page. */
-final case class PageResult(
-    purl: String, phost: String, pdepth: Int, ok: Boolean,
-    children: Seq[Finding]
-)
-
-final case class ImageResult(
-    image_id: String, ok: Boolean, bytes: Array[Byte], w: Int, h: Int,
-    fmt: String, caption: String, phash: Long, basename: String
+/** Outcome of fetching one admitted row. Pages and images share the row
+  * type so one salted stage fetches both: a page carries its resolved
+  * `children`, an image its payload and derived fields (empty for the
+  * other kind and for failed fetches). */
+final case class Fetched(
+    kind: String, url: String, depth: Int, host: String, ok: Boolean,
+    children: Seq[Finding],
+    bytes: Array[Byte], w: Int, h: Int, fmt: String, caption: String,
+    phash: Long, basename: String
 )
 
 /** The Spark-native wave engine. Each crawl wave is one typed Dataset
   * transform (SURVEY.md §3.2):
   *
   *   frontier_k --window+broadcast-join--> admitted
-  *     --salted mapPartitions(synthetic fetch + tokenize + canon)-->
-  *   children --distinct--> candidates --bloom prefilter + left-anti(seen)-->
+  *     --salted mapPartitions(fetch pages AND images)--> fetched (cached)
+  *   fetched --> images_{k+1}, budget_{k+1}
+  *   fetched --explode--> children --one (kind,url,depth) exchange + agg-->
+  *   candidates --bloom prefilter + left-anti(bucketed seen)--> novel
   *   novel --depth gate--> frontier_{k+1};  seen += novel (atomic commit)
   *
   * All coordination state the reference keeps in driver HashMaps
@@ -75,6 +77,30 @@ object Crawler {
     * independent of the storage bucketing (seenBuckets), which is a
     * layout knob; metrics stay comparable across configs. */
   val MetricsHostBuckets = 32
+
+  /** The per-wave metrics counters, in table column order. */
+  private val Counters = Seq("candidates", "admitted", "fetch_ok", "fetch_err",
+    "novel", "dup_dropped", "images_written", "robots_dropped")
+
+  /** Fetch one admitted row. fetchFollowing mirrors reqwest's
+    * <=10-redirect follow; page links resolve against the REQUEST url
+    * r.url (pre-redirect), exactly the reference's quirk
+    * (src/main.rs:157,163-164). A body of the other kind is a failed
+    * fetch, as in RefSim. */
+  private def fetch(r: FrontierRow, web: SynthWeb.WebConfig): Fetched = {
+    val failed = Fetched(r.kind, r.url, r.depth, r.host, ok = false, Seq.empty,
+      Array.emptyByteArray, 0, 0, "", "", 0L, "")
+    SynthWeb.fetchFollowing(r.url, web) match {
+      case SynthWeb.PageBody(html) if r.kind == Finding.Page =>
+        failed.copy(ok = true, children = PageKernel.processPage(r.url, html, r.depth).toSeq)
+      case SynthWeb.ImageBody(bytes, iw, ih, fmt) if r.kind == Finding.Image =>
+        failed.copy(ok = true, bytes = bytes, w = iw, h = ih, fmt = fmt,
+          caption = SynthWeb.caption(r.url),
+          phash = Imaging.aHash(Imaging.decode(bytes)),
+          basename = r.url.substring(r.url.lastIndexOf('/') + 1))
+      case _ => failed
+    }
+  }
 }
 
 class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
@@ -103,8 +129,12 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
   /** host without port from a canonical URL — stays in codegen
     * (no UDF): scheme '://' then a bracketed IPv6 literal or everything
     * up to :, /, ?, # (mirrors Canon.hostOf on canonical urls). */
-  private def hostCol(url: org.apache.spark.sql.Column) =
+  private def hostCol(url: Column) =
     regexp_extract(url, "^[a-z][a-z0-9+.-]*://(\\[[^\\]]*\\]|[^/:?#]+)", 1)
+
+  /** Metrics host bucket of a host column (Crawler.MetricsHostBuckets). */
+  private def hostBucket(host: Column): Column =
+    pmod(xxhash64(host), lit(Crawler.MetricsHostBuckets)).cast("int")
 
   /** Salted fetch-stage key: hot hosts spread over saltSlots sub-slots
     * while the admission window stays host-partitioned (SURVEY.md §4). */
@@ -139,17 +169,8 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
   /** Runs wave k: consumes frontier_k, commits frontier_{k+1} and the
     * wave's appends to seen/budget/images/metrics. Returns the size of
     * the next frontier. */
-  private val verbose = sys.env.contains("GRAFT_WAVE_TIMING")
-  private def timed[T](wave: Int, name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (verbose) println(f"[wave $wave] $name%-18s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-    r
-  }
-
   def runWave(wave: Int, bloomState: PartitionedBloom): Long = {
     val waveT0 = System.nanoTime()
-    val sc = spark.sparkContext
     val webCfg = cfg.web
     val depthLimit = cfg.depthLimit
     val visitLimit = cfg.hostVisitLimit
@@ -194,25 +215,35 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     val admitted = ranked
       .filter($"visits" + $"rn" <= lit(visitLimit + 1) && quotaFilter)
       .select($"kind", $"url", $"depth", $"host")
+      .as[FrontierRow]
+
+    // --- S3-S5 + M1..M5: ONE fetch stage for pages and images, salted by
+    // host-hash so a hot host spreads over saltSlots slots. Every later
+    // reader of the wave's fetch — budget merge, images commit, the
+    // candidate explode and the metrics — reads this one cache.
+    val fetched = admitted
+      .repartition(cfg.fetchPartitions, saltedKey)
+      .mapPartitions(_.map(Crawler.fetch(_, webCfg)))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // PIPELINE with the previous wave: admission + fetch depend only on
+    // THIS wave's frontier and budget, not on the previous wave's seen
+    // append / bloom merge, which may still be committing. Warm the
+    // cache now; only the anti-join below awaits `seenReady`. This
+    // overlaps the longest stage of wave k+1 with the commit tail of
+    // wave k — at high core counts that tail is the non-scaling cost.
+    val admittedCount = fetched.count()
 
-    val admittedCount = timed(wave, "admit+count")(admitted.count()) // materializes the cache
-
-    // target ~128k rows per committed file (64-file cap); admitted is
-    // cached, so the
-    // budget, pages and images chains below run CONCURRENTLY
-    // (independent jobs on the shared scheduler), shortening the wave's
-    // fixed-cost path to the slowest chain.
+    // target ~128k rows per committed file (64-file cap)
     def nFiles(rows: Long): Int = math.max(1, math.min(64, (rows / 131072L + 1L).toInt))
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
 
     // --- A2: merge admitted counts into the budget table (full rewrite;
-    // the table is <= #hosts rows).
+    // the table is <= #hosts rows). Runs concurrently with the images
+    // commit and the novelty chain, all off the fetched cache.
     val budgetChain = Future {
-      val newBudget = budget.unionByName(
-          admitted.groupBy($"host").agg(count(lit(1)).as("visits")))
+      val newBudget = budget.unionByName(fetched.select($"host", lit(1L).as("visits")))
         .groupBy($"host").agg(sum($"visits").as("visits"))
       // repartition(1), NOT coalesce(1): coalesce propagates up and would
       // run the whole aggregation single-task at any core count; a big
@@ -220,189 +251,138 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
       val out =
         if (smallBudget) newBudget.repartition(1)
         else newBudget.repartition(cfg.seenBuckets, $"host")
-      timed(wave, "budget_commit")(budgetT.commit(wave + 1, out))
+      budgetT.commit(wave + 1, out)
     }
-
-    // ====================== pages chain ======================
-    val pagesChain = Future {
-      // --- S3+M1..M5: fetch + tokenize + resolve, salted by host-hash.
-      val pages = admitted.filter($"kind" === Finding.Page)
-        .repartition(cfg.fetchPartitions, saltedKey)
-        .as[FrontierRow]
-      // fetchFollowing mirrors reqwest's <=10-redirect follow; links
-      // resolve against the REQUEST url r.url (pre-redirect), exactly
-      // the reference's quirk (src/main.rs:157,163-164)
-      val parsed: Dataset[PageResult] = pages.mapPartitions { it =>
-        it.map { r =>
-          SynthWeb.fetchFollowing(r.url, webCfg) match {
-            case SynthWeb.PageBody(html) =>
-              PageResult(r.url, r.host, r.depth, ok = true,
-                PageKernel.processPage(r.url, html, r.depth).toSeq)
-            case _ => PageResult(r.url, r.host, r.depth, ok = false, Seq.empty)
-          }
-        }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-
-      // PIPELINE with the previous wave: the fetch+parse job depends
-      // only on THIS wave's admission — not on the previous wave's seen
-      // append / bloom merge, which may still be committing. Warm the
-      // parsed cache now; the anti-join below (which DOES need them)
-      // joins `seenReady` first. This overlaps the longest stage of
-      // wave k+1 with the commit tail of wave k — at high core counts
-      // that tail is the non-scaling wave cost.
-      timed(wave, "fetch")(parsed.count())
-      Await.result(seenReady, Duration.Inf)
-
-      // --- U1: children across all pages; M4 per-page dedup already done
-      // in processPage's Set. gate_depth = depth of the first parent in
-      // canonical response order (only matters when depths differ, which
-      // the reference's no-increment quirk makes impossible in practice).
-      val children = parsed.flatMap { p =>
-        p.children.map(c => (c.kind, c.url, c.depth, p.pdepth, p.phost, p.purl))
-      }.toDF("kind", "url", "depth", "pdepth", "phost", "purl")
-      // repartition(seenBuckets, dedup key): every downstream stage —
-      // bloom probe, anti-join against the bucketed seen scan, and the
-      // bucketed seen WRITE — reuses this one candidate shuffle; each
-      // write task holds exactly one bucket (no small-file explosion).
-      val cands = children
-        .groupBy($"kind", $"url", $"depth")
-        .agg(
-          min_by($"pdepth", struct($"phost", $"purl")).as("gate_depth"),
-          count(lit(1)).as("refs"))
-        .withColumn("url_hash", xxhash64($"kind", $"url", $"depth"))
-        .withColumn("bucket", bloomState.bucketCol($"kind", $"url", $"depth"))
-        .repartition(cfg.seenBuckets, $"kind", $"url", $"depth")
-        .persist(StorageLevel.MEMORY_AND_DISK) // both bloom branches read it
-
-      // --- J1 (+A4): novelty = candidates minus seen. The partitioned
-      // Bloom pre-filter routes definitely-new rows around the anti-join
-      // (codegen might_contain, one bucket probe per row); only
-      // maybe-seen rows probe the exact bucketed seen table, which is
-      // scanned storage-partitioned — never shuffled.
-      // readThrough(wave), NOT readAll(): after a mid-wave crash the lake
-      // may hold a torn wave+1 snapshot; scoping the read to the waves the
-      // run log marked complete keeps the re-run byte-identical.
-      val seen = seenT.readThrough(wave).select($"kind", $"url", $"depth")
-      val novel0 =
-        if (cfg.bloom && !bloomState.isEmpty) {
-          val probe = bloomState.probeCol(spark, $"bucket", $"url_hash")
-          val definitelyNew = cands.filter(!probe)
-          val checked = cands.filter(probe)
-            .join(seen, Seq("kind", "url", "depth"), "left_anti")
-          definitelyNew.unionByName(checked)
-        } else if (wave == 0) cands // seen is empty before the first commit
-        else cands.join(seen, Seq("kind", "url", "depth"), "left_anti")
-      val novel = novel0.persist(StorageLevel.MEMORY_AND_DISK)
-      val novelCount = timed(wave, "novel")(novel.count())
-
-      // novel is cached: the seen append, bloom merge, and frontier
-      // commit are independent reads of it — run them concurrently.
-      // --- commit seen += novel (ALL novel rows are archived, even those
-      // the depth gate keeps out of the queue — src/main.rs:130-134).
-      // The insert inherits the candidates' bucket-aligned partitioning.
-      val fSeen = Future {
-        timed(wave, "seen_commit")(seenT.commit(wave + 1, novel
-          .select($"kind", $"url", $"depth", $"url_hash", lit(wave + 1).as("wave_added"))))
-      }
-      val fBloom =
-        if (!cfg.bloom || novelCount == 0) scala.concurrent.Future.unit
-        else if (!bloomState.wouldSaturate(novelCount)) Future {
-          timed(wave, "bloom_merge")(
-            bloomState.add(novel, $"bucket", $"url_hash", novelCount))
-        } else fSeen.map { _ =>
-          // capacity crossing: grow and REBUILD from the full committed
-          // seen set (one distributed aggregation, same shape as the
-          // per-wave merge) — runs after this wave's seen append so the
-          // rebuilt filters cover it. Without this, fixed-size filters
-          // saturate at the 10^10 design point and the pre-filter
-          // silently degrades to all-pass.
-          timed(wave, "bloom_rebuild") {
-            val total = seenT.rowCountThrough(wave + 1)
-            bloomState.growTo(total)
-            val all = seenT.readThrough(wave + 1)
-            bloomState.add(all,
-              bloomState.bucketCol($"kind", $"url", $"depth"), $"url_hash", total)
-          }
-        }
-      // --- D2 depth gate -> frontier_{k+1}
-      val fFrontier = Future {
-        val nextFrontier = novel
-          .filter($"gate_depth" < depthLimit)
-          .select($"kind", $"url", $"depth", hostCol($"url").as("host"))
-        timed(wave, "frontier_commit")(
-          frontierT.commit(wave + 1, nextFrontier.coalesce(nFiles(novelCount))))
-      }
-      // the seen append + bloom merge escape this wave: the NEXT wave's
-      // anti-join awaits them (seenReady) right before it needs them,
-      // so its admission + fetch overlap this commit tail
-      seenReady = for { _ <- fSeen; _ <- fBloom } yield ()
-      Await.result(fFrontier, Duration.Inf)
-      // cands is released in the wave TAIL, not here: fSeen/fBloom have
-      // escaped this wave and a novel partition whose cached block fell
-      // back recomputes THROUGH cands — unpersisting on this thread
-      // races that read (observed once as a mid-read
-      // "Block rdd_N does not exist" under a concurrent full suite)
-      (parsed, novel, cands)
-    }
-
-    // ====================== images chain ======================
+    // PNG/JPEG payloads are already entropy-coded — snappy on top only
+    // burns CPU, so the images table is written uncompressed
     val imagesChain = Future {
-      // --- S4+S5: image fetch into the images table (input_hint schema).
-      val images = admitted.filter($"kind" === Finding.Image)
-        .repartition(cfg.fetchPartitions, saltedKey)
-        .as[FrontierRow]
-      val fetchedImages = images.mapPartitions { it =>
-        it.map { r =>
-          SynthWeb.fetchFollowing(r.url, webCfg) match {
-            case SynthWeb.ImageBody(bytes, iw, ih, fmt) =>
-              val decoded = Imaging.decode(bytes)
-              val base = r.url.substring(r.url.lastIndexOf('/') + 1)
-              ImageResult(r.url, ok = true, bytes, iw, ih, fmt,
-                SynthWeb.caption(r.url), Imaging.aHash(decoded), base)
-            case _ =>
-              ImageResult(r.url, ok = false, Array.emptyByteArray, 0, 0, "", "", 0L, "")
-          }
-        }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      // PNG/JPEG payloads are already entropy-coded — snappy on top only
-      // burns CPU, so the images table is written uncompressed
-      timed(wave, "images_commit")(imagesT.commit(wave + 1, fetchedImages.filter($"ok")
-        .select($"image_id", $"bytes", $"w", $"h", $"fmt", $"caption", $"phash", $"basename"),
-        writeOptions = Map("compression" -> "uncompressed")))
-      fetchedImages
+      imagesT.commit(wave + 1, fetched.filter($"kind" === Finding.Image && $"ok")
+        .select($"url".as("image_id"), $"bytes", $"w", $"h", $"fmt", $"caption",
+          $"phash", $"basename"),
+        writeOptions = Map("compression" -> "uncompressed"))
     }
+    Await.result(seenReady, Duration.Inf)
 
-    val (parsed, novel, cands) = Await.result(pagesChain, Duration.Inf)
-    val fetchedImages = Await.result(imagesChain, Duration.Inf)
+    // --- U1: children across all pages; M4 per-page dedup already done
+    // in processPage's Set. gate_depth = depth of the first parent in
+    // canonical response order (only matters when depths differ, which
+    // the reference's no-increment quirk makes impossible in practice).
+    val children = fetched
+      .select($"depth".as("pdepth"), $"host".as("phost"), $"url".as("purl"),
+        explode($"children").as("c"))
+      .select($"c.kind".as("kind"), $"c.url".as("url"), $"c.depth".as("depth"),
+        $"pdepth", $"phost", $"purl")
+    // ONE exchange: the raw children hash-partition on the dedup key to
+    // seenBuckets partitions and aggregate on that partitioning, so
+    // partition p holds exactly bucket p (bucketCol). Every downstream
+    // stage — bloom probe, anti-join against the bucketed seen scan,
+    // and the bucketed seen WRITE — reuses it: each write task holds
+    // exactly one bucket (no small-file explosion).
+    val cands = children
+      .repartition(cfg.seenBuckets, $"kind", $"url", $"depth")
+      .groupBy($"kind", $"url", $"depth")
+      .agg(
+        min_by($"pdepth", struct($"phost", $"purl")).as("gate_depth"),
+        count(lit(1)).as("refs"))
+      .withColumn("url_hash", xxhash64($"kind", $"url", $"depth"))
+      .withColumn("bucket", bloomState.bucketCol($"kind", $"url", $"depth"))
+      .persist(StorageLevel.MEMORY_AND_DISK) // both bloom branches read it
+
+    // --- J1 (+A4): novelty = candidates minus seen. The partitioned
+    // Bloom pre-filter routes definitely-new rows around the anti-join
+    // (codegen might_contain, one bucket probe per row); only
+    // maybe-seen rows probe the exact bucketed seen table, which is
+    // scanned storage-partitioned — never shuffled.
+    // readThrough(wave), NOT readAll(): after a mid-wave crash the lake
+    // may hold a torn wave+1 snapshot; scoping the read to the waves the
+    // run log marked complete keeps the re-run byte-identical.
+    val seen = seenT.readThrough(wave).select($"kind", $"url", $"depth")
+    val novel0 =
+      if (cfg.bloom && !bloomState.isEmpty) {
+        val probe = bloomState.probeCol(spark, $"bucket", $"url_hash")
+        val definitelyNew = cands.filter(!probe)
+        val checked = cands.filter(probe)
+          .join(seen, Seq("kind", "url", "depth"), "left_anti")
+        definitelyNew.unionByName(checked)
+      } else if (wave == 0) cands // seen is empty before the first commit
+      else cands.join(seen, Seq("kind", "url", "depth"), "left_anti")
+    val novel = novel0.persist(StorageLevel.MEMORY_AND_DISK)
+    // novel's metrics counters are summed by the job that materializes
+    // its cache: the seen commit below refreshes every cached plan that
+    // reads the seen table, novel included, so a reader after it (the
+    // metrics job, always) would recompute the whole anti-join
+    val novelByBucket = novel
+      .groupBy(hostBucket(hostCol($"url")).as("host_bucket"))
+      .agg(count(lit(1)).as("novel"), sum($"refs" - 1).as("dup_dropped"))
+      .as[(Int, Long, Long)]
+      .collect()
+    val novelCount = novelByBucket.map(_._2).sum
+
+    // novel is cached: the seen append, bloom merge, and frontier
+    // commit are independent reads of it — run them concurrently.
+    // --- commit seen += novel (ALL novel rows are archived, even those
+    // the depth gate keeps out of the queue — src/main.rs:130-134).
+    // The insert inherits the candidates' bucket-aligned partitioning.
+    val fSeen = Future {
+      seenT.commit(wave + 1, novel
+        .select($"kind", $"url", $"depth", $"url_hash", lit(wave + 1).as("wave_added")))
+    }
+    val fBloom =
+      if (!cfg.bloom || novelCount == 0) Future.unit
+      else if (!bloomState.wouldSaturate(novelCount)) Future {
+        bloomState.add(novel, $"bucket", $"url_hash", novelCount)
+      } else fSeen.map { _ =>
+        // capacity crossing: grow and REBUILD from the full committed
+        // seen set (one distributed aggregation, same shape as the
+        // per-wave merge) — runs after this wave's seen append so the
+        // rebuilt filters cover it. Without this, fixed-size filters
+        // saturate at the 10^10 design point and the pre-filter
+        // silently degrades to all-pass.
+        val total = seenT.rowCountThrough(wave + 1)
+        bloomState.growTo(total)
+        val all = seenT.readThrough(wave + 1)
+        bloomState.add(all,
+          bloomState.bucketCol($"kind", $"url", $"depth"), $"url_hash", total)
+      }
+    // the seen append + bloom merge escape this wave: the NEXT wave's
+    // anti-join awaits them (seenReady) right before it needs them,
+    // so its admission + fetch overlap this commit tail
+    seenReady = for { _ <- fSeen; _ <- fBloom } yield ()
+    // --- D2 depth gate -> frontier_{k+1}, on this thread meanwhile
+    frontierT.commit(wave + 1, novel
+      .filter($"gate_depth" < depthLimit)
+      .select($"kind", $"url", $"depth", hostCol($"url").as("host"))
+      .coalesce(nFiles(novelCount)))
+    Await.result(imagesChain, Duration.Inf)
     Await.result(budgetChain, Duration.Inf) // next wave reads budget_{k+1}
     val readyThisWave = seenReady           // seen+bloom tail of THIS wave
     val nextCount = frontierT.snapshot(wave + 1).get.totalRows
     val imageRows = imagesT.snapshot(wave + 1).get.totalRows
 
     // --- per-wave, per-host-bucket metrics (lineage beyond the
-    // manifests' per-file row counts): ONE job — raw (bucket, metric,
-    // value) rows unioned from the cached stages, aggregated with
-    // map-side combine into the pivoted metrics row per bucket.
-    // Committed ASYNCHRONOUSLY (chained, so run-log marks stay ordered):
-    // metrics are outputs, never inputs of a wave, so the next wave's
-    // compute overlaps this commit; run()/awaitQuiesce joins the tail.
-    def b(c: org.apache.spark.sql.Column) =
-      pmod(xxhash64(c), lit(Crawler.MetricsHostBuckets)).cast("int")
-    val raw = frontier.select(b($"host").as("hb"), lit("candidates").as("m"), lit(1L).as("v"))
-      .unionByName(admitted.select(b($"host").as("hb"), lit("admitted").as("m"), lit(1L).as("v")))
-      .unionByName(parsed.toDF().select(b($"phost").as("hb"),
-        when($"ok", "fetch_ok").otherwise("fetch_err").as("m"), lit(1L).as("v")))
-      .unionByName(novel.select(b(hostCol($"url")).as("hb"), lit("novel").as("m"), lit(1L).as("v")))
-      .unionByName(novel.select(b(hostCol($"url")).as("hb"), lit("dup_dropped").as("m"),
-        ($"refs" - 1).cast("long").as("v")))
-      .unionByName(fetchedImages.filter($"ok").select(b(hostCol($"image_id")).as("hb"),
-        lit("images_written").as("m"), lit(1L).as("v")))
-      .unionByName(robotsDropped.select(b($"host").as("hb"),
-        lit("robots_dropped").as("m"), lit(1L).as("v")))
-    def m(name: String) = sum(when($"m" === name, $"v").otherwise(0L)).as(name)
-    val metrics = raw.groupBy($"hb".as("host_bucket"))
-      .agg(m("candidates"), m("admitted"), m("fetch_ok"), m("fetch_err"),
-        m("novel"), m("dup_dropped"), m("images_written"), m("robots_dropped"))
+    // manifests' per-file row counts): ONE job — a union of one wide
+    // row per source row (frontier, fetched, novel's per-bucket sums,
+    // robots-dropped), one column per counter, summed per host bucket
+    // with map-side combine. Committed ASYNCHRONOUSLY (chained, so
+    // run-log marks stay ordered): metrics are outputs, never inputs of
+    // a wave, so the next wave's compute overlaps this commit;
+    // run()/awaitQuiesce joins the tail.
+    def counters(df: DataFrame, bucket: Column, values: (String, Column)*): DataFrame = {
+      val set = values.toMap
+      df.select(bucket.as("host_bucket")
+        +: Crawler.Counters.map(c => set.getOrElse(c, lit(0L)).cast("long").as(c)): _*)
+    }
+    val isPage = $"kind" === Finding.Page
+    val raw = counters(frontier, hostBucket($"host"), "candidates" -> lit(1L))
+      .union(counters(fetched.toDF(), hostBucket($"host"), "admitted" -> lit(1L),
+        "fetch_ok" -> (isPage && $"ok"), "fetch_err" -> (isPage && !$"ok"),
+        "images_written" -> ($"kind" === Finding.Image && $"ok")))
+      .union(counters(novelByBucket.toSeq.toDF("host_bucket", "novel", "dup_dropped"),
+        $"host_bucket", "novel" -> $"novel", "dup_dropped" -> $"dup_dropped"))
+      .union(counters(robotsDropped, hostBucket($"host"), "robots_dropped" -> lit(1L)))
+    val metrics = raw.groupBy($"host_bucket")
+      .agg(sum(Crawler.Counters.head).as(Crawler.Counters.head),
+        Crawler.Counters.tail.map(c => sum(c).as(c)): _*)
       // robots-blocked rows never reached the budget window - without
       // the subtraction they were misreported as budget drops
       .withColumn("budget_dropped", $"candidates" - $"admitted" - $"robots_dropped")
@@ -420,11 +400,9 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
       // does not exist" fix). Holding it past the metrics commit instead
       // kept wave k's candidate cache alive into wave k+1's fetch and
       // heap-OOM'd the 10k-host scale probe at wave 4 (metrics reads
-      // admitted/parsed/novel/fetchedImages, never cands — an evicted
-      // novel block recomputing THROUGH the now-uncached cands is a
-      // clean recompute, not a race).
+      // fetched and novel's collected sums, never cands or novel).
       cands.unpersist(false)
-      timed(wave, "metrics_commit")(metricsT.commit(wave + 1, metrics.repartition(1)))
+      metricsT.commit(wave + 1, metrics.repartition(1))
       runLog.markComplete(wave + 1, Map(
         "frontier" -> nextCount,
         "admitted" -> admittedCount,
@@ -435,8 +413,7 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
         // far the pre-filter is from its next adaptive rebuild
         "bloom_capacity" -> (if (cfg.bloom) bloomState.capacity else 0L),
         "bloom_items" -> (if (cfg.bloom) bloomState.itemsAdded else 0L)))
-      admitted.unpersist(false); parsed.unpersist(false)
-      novel.unpersist(false); fetchedImages.unpersist(false)
+      fetched.unpersist(false); novel.unpersist(false)
     }
     nextCount
   }

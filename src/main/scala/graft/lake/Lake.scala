@@ -4,12 +4,13 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Iceberg-shaped table layer over Parquet (SURVEY.md §1.4): no
   * `iceberg-spark-runtime` jar exists in this sandbox, so tables are
@@ -23,6 +24,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Layout per table:
   *   <root>/<name>/data/wave=<k>/part-*.parquet
   *   <root>/<name>/_meta/snapshot-<k>.json   (atomic rename commit)
+  *
+  * A LakeTable snapshot also records the Spark schema of its data files
+  * (as an Iceberg manifest does), so reads skip Parquet footer inference
+  * — a Spark job per read otherwise.
   */
 final case class DataFileMeta(path: String, rows: Long)
 
@@ -31,7 +36,8 @@ final case class SnapshotMeta(
     wave: Int,
     files: Seq[DataFileMeta],
     totalRows: Long,
-    properties: Map[String, String] = Map.empty
+    properties: Map[String, String] = Map.empty,
+    schema: Option[String] = None // StructType JSON; None in older manifests
 )
 
 object LakeTable {
@@ -119,6 +125,7 @@ abstract class ManifestedTable(rootDir: String, val name: String) {
       val props = node.putObject("properties")
       snap.properties.toSeq.sortBy(_._1).foreach { case (k, v) => props.put(k, v) }
     }
+    snap.schema.foreach(js => node.set[JsonNode]("schema", mapper.readTree(js)))
     val tmp = metaDir.resolve(s".tmp-snapshot-${snap.wave}.json")
     Files.writeString(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node))
     Files.move(tmp, snapshotPath(snap.wave), StandardCopyOption.ATOMIC_MOVE,
@@ -137,7 +144,7 @@ abstract class ManifestedTable(rootDir: String, val name: String) {
         p.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
       }.getOrElse(Map.empty[String, String])
       Some(SnapshotMeta(node.get("table").asText(), node.get("wave").asInt(), files,
-        node.get("totalRows").asLong(), props))
+        node.get("totalRows").asLong(), props, Option(node.get("schema")).map(_.toString)))
     }
   }
 
@@ -171,31 +178,38 @@ class LakeTable(spark: SparkSession, rootDir: String, name: String)
       // schema) so time travel / readAll never hit a missing wave
       df.repartition(1).write.mode("overwrite").options(writeOptions).parquet(waveDir.toString)
     }
-    val snap = SnapshotMeta(name, wave, LakeTable.footerMetas(waveDir), 0L)
-    val full = snap.copy(totalRows = snap.files.map(_.rows).sum)
-    writeSnapshot(full)
-    full
+    val files = LakeTable.footerMetas(waveDir)
+    val snap = SnapshotMeta(name, wave, files, files.map(_.rows).sum,
+      schema = Some(GraftSqlBridge.asNullable(df.schema).json))
+    writeSnapshot(snap)
+    snap
   }
 
   /** Time travel: the rows of exactly snapshot `wave`. */
   def readWave(wave: Int): DataFrame = {
     val snap = snapshot(wave).getOrElse(
       throw new IllegalStateException(s"$name: no snapshot for wave $wave"))
-    readFiles(snap.files)
+    readSnapshots(Seq(snap))
   }
 
   /** Cumulative read of snapshots 0..throughWave (append-only tables). */
-  def readThrough(throughWave: Int): DataFrame = {
-    val files = committedWaves.filter(_ <= throughWave).flatMap(w => snapshot(w).get.files)
-    readFiles(files)
-  }
+  def readThrough(throughWave: Int): DataFrame =
+    readSnapshots(committedWaves.filter(_ <= throughWave).flatMap(snapshot))
 
   def readAll(): DataFrame = readThrough(Int.MaxValue)
 
-  private def readFiles(files: Seq[DataFileMeta]): DataFrame = {
-    if (files.isEmpty)
+  /** Reads with the recorded schema when every snapshot agrees on one;
+    * manifests written before schemas were recorded fall back to
+    * footer inference. */
+  private def readSnapshots(snaps: Seq[SnapshotMeta]): DataFrame = {
+    val paths = snaps.flatMap(_.files).map(_.path)
+    if (paths.isEmpty)
       throw new IllegalStateException(s"$name: empty file list (guard with rowCount first)")
-    spark.read.parquet(files.map(_.path): _*)
+    snaps.map(_.schema).distinct match {
+      case Seq(Some(js)) =>
+        spark.read.schema(DataType.fromJson(js).asInstanceOf[StructType]).parquet(paths: _*)
+      case _ => spark.read.parquet(paths: _*)
+    }
   }
 }
 

@@ -389,8 +389,6 @@ object Dedup {
       labels.unpersist()
       labels = upd.drop("improved")
       rounds += 1
-      if (sys.env.contains("GRAFT_WAVE_TIMING"))
-        println(s"[clusterLabels] round $rounds changed=$changed")
     }
     lastDistributedRounds.set(rounds)
     labels

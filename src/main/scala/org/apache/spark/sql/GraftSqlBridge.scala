@@ -17,6 +17,10 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `StructType.asNullable` is `private[spark]`: the schema Parquet
+    * data files read back with (every field nullable). */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
   /** Install a SQL function into a LIVE session's function registry —
     * the runtime complement of SparkSessionExtensions.injectFunction
     * (which only fires at session build). `sessionState` is

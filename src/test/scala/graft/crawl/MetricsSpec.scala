@@ -1,13 +1,15 @@
 package graft.crawl
 
 import graft.SparkTestBase
-import graft.core.{RefSim, SynthWeb}
+import graft.core.{Finding, RefSim, SynthWeb}
 
 /** S6 — the per-wave, per-host-bucket metrics table (the north rule's
   * "per-partition lineage + metrics"). Until round 3 it was only
   * exercised indirectly through RunLog stats; here its per-wave sums
   * are asserted ≡ RefSim's independently-maintained counters, on a
-  * normal corpus and on a binding-budget corpus (budget_dropped > 0).
+  * normal corpus and on a binding-budget corpus (budget_dropped > 0),
+  * and admitted / images_written / novel are pinned per (wave,
+  * host_bucket), so a row credited to the wrong bucket fails too.
   */
 class MetricsSpec extends SparkTestBase {
   import org.apache.spark.sql.functions._
@@ -22,6 +24,41 @@ class MetricsSpec extends SparkTestBase {
       .map { r =>
         r.getAs[Int]("wave") -> cols.map(c => c -> r.getAs[Long](c)).toMap
       }
+      .toMap
+  }
+
+  private val BucketCounters = Seq("admitted", "images_written", "novel")
+
+  /** Non-zero per-(wave, host_bucket) counters of the engine's table. */
+  private def engineBuckets(crawler: Crawler): Map[(Int, Int, String), Long] =
+    crawler.metricsT.readAll().collect().toSeq.flatMap { r =>
+      BucketCounters.map(c =>
+        (r.getAs[Int]("wave"), r.getAs[Int]("host_bucket"), c) -> r.getAs[Long](c))
+    }.filter(_._2 != 0).toMap
+
+  /** The same counters from RefSim's rows, bucketed through the engine's
+    * Spark expression `pmod(xxhash64(host), 32)`. RefSim keeps no
+    * per-wave novel set, but with no depth gate binding (depthLimit 4,
+    * depths never grow) frontier k+1 is exactly wave k's novel set —
+    * checked against its novel counter first. */
+  private def simBuckets(sim: RefSim.SimResult): Map[(Int, Int, String), Long] = {
+    val novel = sim.waveStats.indices.map(k => sim.frontiers.lift(k + 1).getOrElse(Vector.empty))
+    novel.zip(sim.waveStats).zipWithIndex.foreach { case ((fs, ws), k) =>
+      assert(fs.size == ws.novel, s"wave $k: frontier k+1 is not the novel set")
+    }
+    val written = sim.imageIds.toSet
+    val rows = sim.admissions.map { case (k, f) => (k, f.host, "admitted") } ++
+      sim.admissions.collect {
+        case (k, f) if f.kind == Finding.Image && written(f.url) => (k, f.host, "images_written")
+      } ++
+      novel.zipWithIndex.flatMap { case (fs, k) => fs.map(f => (k, f.host, "novel")) }
+    import spark.implicits._
+    rows.toDF("wave", "host", "m")
+      .groupBy($"wave",
+        pmod(xxhash64($"host"), lit(Crawler.MetricsHostBuckets)).cast("int"), $"m")
+      .count()
+      .collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getString(2)) -> r.getLong(3))
       .toMap
   }
 
@@ -48,6 +85,11 @@ class MetricsSpec extends SparkTestBase {
       assert(m("budget_dropped") == ws.candidates - ws.admitted,
         s"wave $k budget_dropped: ${m("budget_dropped")} vs ${ws.candidates - ws.admitted}")
     }
+    val (engB, simB) = (engineBuckets(crawler), simBuckets(sim))
+    val diff = (engB.keySet ++ simB.keySet).toSeq.sorted
+      .filter(key => engB.get(key) != simB.get(key))
+      .map(key => s"$key: engine ${engB.get(key)} vs sim ${simB.get(key)}")
+    if (diff.nonEmpty) fail(diff.mkString("per-bucket mismatch:\n", "\n", ""))
     crawler
   }
 

@@ -381,6 +381,112 @@ class PlanSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("warm wave shape: one salted fetch stage, one candidate exchange, bounded jobs") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import java.util.concurrent.atomic.AtomicInteger
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.GraftTestBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.core.SynthWeb
+    import graft.crawl.{CrawlConfig, Crawler, PartitionedBloom}
+
+    val cfg = CrawlConfig(
+      web = SynthWeb.WebConfig(nHosts = 3, pagesPerHost = 10, imagesPerHost = 4),
+      seeds = SynthWeb.seeds(2), lakeRoot = tmpDir("waveshape"),
+      fetchPartitions = 8, saltSlots = 2, seenBuckets = 8)
+    val crawler = new Crawler(spark, cfg)
+    val bloom = new PartitionedBloom(cfg.seenBuckets, cfg.bloomExpectedItems, cfg.bloomFpp)
+    crawler.initRun()
+    crawler.runWave(0, bloom)
+    crawler.runWave(1, bloom)
+    crawler.awaitQuiesce()
+    assert(crawler.frontierT.snapshot(2).get.totalRows > 0 && !bloom.isEmpty,
+      "wave 2 must be a warm wave: a frontier to crawl and a bloom to probe")
+
+    // every node of a final plan, through adaptive wrappers, query
+    // stages, commands and cached relations (a cached relation's plan is
+    // shared by every query reading it, so nodes are de-duplicated by
+    // identity below: one node = one operator the wave ran)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case i: InMemoryTableScanExec => nodes(i.relation.cachedPlan)
+      case c: CommandResultExec => nodes(c.commandPhysicalPlan)
+      case o => o.children.flatMap(nodes)
+    })
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val jobs = new AtomicInteger
+    val qel = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val jl = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    // the at-scale join shape: a seen table past the broadcast threshold
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftTestBus.drain(sc)
+    spark.listenerManager.register(qel)
+    sc.addSparkListener(jl)
+    try {
+      crawler.runWave(2, bloom)
+      crawler.awaitQuiesce()
+      GraftTestBus.drain(sc)
+    } finally {
+      sc.removeSparkListener(jl)
+      spark.listenerManager.unregister(qel)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
+
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    val ran = plans.asScala.toSeq.flatMap(nodes).filter(seen.add)
+    val exchanges = ran.collect { case e: ShuffleExchangeExec => e }
+    def keyNames(e: ShuffleExchangeExec): Option[(Seq[String], Int)] = e.outputPartitioning match {
+      case h: HashPartitioning => Some((h.expressions.map(_.sql), h.numPartitions))
+      case _ => None
+    }
+
+    // pages and images: ONE fetch operator over ONE salted exchange,
+    // whose url-hash term spreads a hot host over saltSlots slots
+    val fetches = ran.collect { case m: MapPartitionsExec => m }
+    assert(fetches.size == 1, s"expected one fetch stage, got ${fetches.size}")
+    val salted = exchanges.filter(e => keyNames(e).exists { case (ks, n) =>
+      n == cfg.fetchPartitions && ks.exists(_.contains(s"pmod(xxhash64(url), ${cfg.saltSlots}L)")) })
+    assert(salted.size == 1, s"expected one salted fetch exchange, got ${salted.size}")
+    val firstBelowFetch = nodes(fetches.head).collectFirst { case e: ShuffleExchangeExec => e }
+    assert(firstBelowFetch.exists(_ eq salted.head), "the fetch does not read the salted exchange")
+
+    // candidates: ONE exchange on the dedup key, to the bucket count
+    val onKey = exchanges.filter(e => keyNames(e).exists(_._1 == Seq("kind", "url", "depth")))
+    assert(onKey.size == 1 && keyNames(onKey.head).get._2 == cfg.seenBuckets,
+      s"expected one (kind, url, depth) exchange to ${cfg.seenBuckets}, got ${onKey.map(keyNames)}")
+    // the anti-join's seen side: a bucketed scan, no exchange
+    val anti = ran.collect { case j: BaseJoinExec if j.joinType == LeftAnti => j }
+    assert(anti.size == 1, s"expected one seen anti-join, got ${anti.size}")
+    val seenSide = nodes(anti.head.right)
+    assert(!seenSide.exists(_.isInstanceOf[exchange.Exchange]), "seen side exchanged")
+    assert(seenSide.exists {
+      case s: FileSourceScanExec => s.bucketedScan
+      case _ => false
+    }, "seen scan is not bucketed")
+
+    // the wave's fixed cost in jobs (each adaptive query stage and each
+    // cache build is one): fetch count, novel sums, bloom merge, and the
+    // budget, images, seen, frontier and metrics commits. Measured: 23.
+    assert(jobs.get <= 23, s"${jobs.get} jobs in one warm wave (measured: 23)")
+  }
+
   test("bloom probe expression stays inside whole-stage codegen") {
     import graft.crawl.PartitionedBloom
     import org.apache.spark.sql.functions._
