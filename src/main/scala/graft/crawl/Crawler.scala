@@ -22,9 +22,9 @@ final case class CrawlConfig(
     bloomExpectedItems: Long = 4L * 1000 * 1000,
     bloomFpp: Double = 0.01,
     seenBuckets: Int = 32,        // seen-table hash buckets (= bloom shards)
-    admitPreLimit: Boolean = true, // budget-aware pre-limit before the window
-    // engage the pre-limit only when the wave's frontier is big enough
-    // that one viral host's window partition could actually straggle;
+    // engage the budget-aware pre-limit before the admission window
+    // only when the wave's frontier is big enough that one viral host's
+    // window partition could actually straggle;
     // below this the pre-limit's extra exchange costs more than the
     // single-task sort it avoids (measured: ~25% admit overhead at
     // sandbox sizes). 0 forces it on (specs + conformance do this).
@@ -206,7 +206,7 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     // the single-task sort it avoids is cheaper than its extra exchange.
     val frontierRows = frontierT.snapshot(wave).map(_.totalRows).getOrElse(Long.MaxValue)
     val preLimited =
-      if (!cfg.admitPreLimit || frontierRows < cfg.admitPreLimitMinRows) base
+      if (frontierRows < cfg.admitPreLimitMinRows) base
       else Admission.preLimit(base, visitLimit, cfg.saltSlots)
     val w = Window.partitionBy($"host").orderBy($"kind", $"url", $"depth")
     val ranked = preLimited.withColumn("rn", row_number().over(w))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.XxHash64
@@ -21,20 +21,6 @@ object Dedup {
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
-
-  /** Drop hot buckets from a banding table before its self-join:
-    * buckets on `keyCols` holding more than `maxDf` rows are removed
-    * (from the JOIN only). ONE implementation for all four banding
-    * families (ngram shingles express the same idea over their own
-    * shape) so the cap semantics the oracles interpolate can't drift
-    * per call site. */
-  private[ops] def capHotBuckets(buckets: DataFrame, keyCols: Seq[String],
-                                 maxDf: Int): DataFrame = {
-    val dfOk = buckets.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("df")).filter(col("df") <= maxDf)
-      .select(keyCols.map(col): _*)
-    buckets.join(dfOk, keyCols)
-  }
 
   /** Exact dedup by normalized-text fingerprint. */
   def exactDedup(spark: SparkSession, dir: String): DataFrame = {
@@ -162,7 +148,7 @@ object Dedup {
     * output is bounded by sources² regardless of input size, and the
     * fingerprint equi-join is the exact-dedup shuffle shape;
     * fingerprints duplicated more than `maxDf` times are dropped from
-    * the join ([[capHotBuckets]] — mirrored in the oracle), so a
+    * the join ([[Banding.capHot]] — mirrored in the oracle), so a
     * pre-dedup mega-duplicate is bounded instead of quadratic. */
   def decontaminate(spark: SparkSession, dir: String): DataFrame =
     decontaminateCorpus(benchCorpus(spark, dir))
@@ -176,7 +162,7 @@ object Dedup {
     // sorts, and unlike the shingle joins there is no scale cliff here
     // (a corpus-sized fp side exceeds the broadcast threshold, so the
     // planner falls back to exchanges on its own).
-    val fp = capHotBuckets(
+    val fp = Banding.capHot(
       corpus.select($"doc_id", $"source", md5(lower(trim($"text"))).as("fp")),
       Seq("fp"), maxDf)
     fp.as("a").join(fp.as("b"),
@@ -423,16 +409,10 @@ object Dedup {
     * union integer counts). */
   /** (doc_id, band, bh) LSH bucket keys — shared by [[minhashNearDup]]
     * and the aux oracle dump, so DuckDB replays exactly this banding. */
-  def minhashBands(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val sig = minhashSignatures(spark, dir)
-    val bandCols = (0 until Bands).map { b =>
-      val cols = (0 until RowsPerBand).map(r => col(s"h${b * RowsPerBand + r}"))
-      struct(lit(b).as("band"), xxhash64(cols: _*).as("bh"))
-    }
-    sig.select($"doc_id", explode(array(bandCols: _*)).as("bb"))
-      .select($"doc_id", $"bb.band", $"bb.bh")
-  }
+  def minhashBands(spark: SparkSession, dir: String): DataFrame =
+    Banding.explodeBands(minhashSignatures(spark, dir), Seq("doc_id"), "bh",
+      (0 until Bands).map(b =>
+        xxhash64((0 until RowsPerBand).map(r => col(s"h${b * RowsPerBand + r}")): _*)))
 
   /** Hot-bucket guard for the LSH band join, same pattern as
     * [[MaxShingleDf]]/[[MaxChunkDf]]: a band bucket of f docs is f²
@@ -444,12 +424,8 @@ object Dedup {
   def minhashNearDup(spark: SparkSession, dir: String, minJaccardPct: Int = 50,
                      maxDf: Int = MaxBandDf): DataFrame = {
     import spark.implicits._
-    val buckets = capHotBuckets(minhashBands(spark, dir), Seq("band", "bh"), maxDf)
-    val cands = buckets.as("a").join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
+    val cands = Banding.candidatePairs(
+      minhashBands(spark, dir), "doc_id", "bh", Banding.Capped(maxDf))()
     // exact verification touches ONLY candidate pairs: per-doc shingle
     // sets are small (bounded by doc length), so array_intersect on the
     // joined pair beats re-running the full pairwise shingle join
@@ -518,8 +494,8 @@ object Dedup {
   val MaxChunkDf = 1000
 
   /** SimHash near-dup: band the 64-bit signature into 4×16-bit chunks;
-    * any pair agreeing on a chunk is a candidate (guaranteed to catch
-    * every pair with hamming distance <= 3); verify by popcount.
+    * any pair agreeing on a chunk is a candidate (complete for hamming
+    * distance <= 3, rejected above); verify by popcount.
     * Buckets with df > maxDf are dropped from the join. */
   def simhashNearDup(spark: SparkSession, dir: String, maxHamming: Int = 3,
                      maxDf: Int = MaxChunkDf): DataFrame =
@@ -529,31 +505,8 @@ object Dedup {
     * table — split out so tests can plant adversarial signatures (hot
     * buckets) directly. */
   def simhashNearDupFromSigs(sig: DataFrame, maxHamming: Int = 3,
-                             maxDf: Int = MaxChunkDf): DataFrame = {
-    val spark = sig.sparkSession
-    import spark.implicits._
-    val chunkCols = (0 until 4).map(c =>
-      struct(lit(c).as("c"), shiftright($"simhash", c * 16).bitwiseAND(lit(0xffffL)).as("ch")))
-    val buckets = capHotBuckets(
-      sig.select($"doc_id", $"simhash", explode(array(chunkCols: _*)).as("cb"))
-        .select($"doc_id", $"simhash", $"cb.c", $"cb.ch"),
-      Seq("c", "ch"), maxDf)
-    // codegen'd hamming distance: bit_count(a XOR b) stays inside
-    // whole-stage codegen, unlike a Scala UDF
-    def ham(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      call_function("bit_count", a.bitwiseXOR(b))
-    // NOT the cosineNearDup emit-once rule (considered in r6): with the
-    // df cap a pair's first AGREEING chunk may sit in a DROPPED bucket,
-    // so "keep only at first agreement" would lose pairs the capped
-    // candidate set still contains — the distinct stays.
-    buckets.as("a").join(buckets.as("b"),
-        col("a.c") === col("b.c") && col("a.ch") === col("b.ch") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        ham(col("a.simhash"), col("b.simhash")).as("hamming"))
-      .distinct()
-      .filter($"hamming" <= maxHamming)
-  }
+                             maxDf: Int = MaxChunkDf): DataFrame =
+    Banding.hammingPairs(sig, "doc_id", "simhash", chunks = 4, perKey = 1, maxHamming, maxDf)
 
   // ------------------------------------------------------- semantic dedup
 

@@ -109,32 +109,8 @@ object Multimodal {
     * every bucket hold ~n/2048 rows at design scale — an effectively
     * quadratic self-join; OpsSpec asserts equality vs brute force). */
   def phashNearDup(images: DataFrame, maxHamming: Int = 6,
-                   maxDf: Int = MaxPhashBandDf): DataFrame = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    require(maxHamming <= 6,
-      s"8-chunk PAIR banding is only complete for hamming <= 6, got $maxHamming")
-    val pairCols = for { c1 <- 0 until 8; c2 <- c1 + 1 until 8 } yield
-      struct(lit(c1 * 8 + c2).as("c"),
-        shiftright($"phash", c1 * 8).bitwiseAND(lit(0xffL))
-          .bitwiseOR(shiftleft(shiftright($"phash", c2 * 8).bitwiseAND(lit(0xffL)), 8))
-          .as("ch"))
-    val buckets = Dedup.capHotBuckets(
-      images.select($"image_id", $"phash", explode(array(pairCols: _*)).as("cb"))
-        .select($"image_id", $"phash", $"cb.c", $"cb.ch"),
-      Seq("c", "ch"), maxDf)
-    // codegen'd hamming distance: bit_count(a XOR b) stays inside
-    // whole-stage codegen, unlike a Scala UDF
-    def ham(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      call_function("bit_count", a.bitwiseXOR(b))
-    buckets.as("a").join(buckets.as("b"),
-        col("a.c") === col("b.c") && col("a.ch") === col("b.ch") &&
-          col("a.image_id") < col("b.image_id"))
-      .select(col("a.image_id").as("a_id"), col("b.image_id").as("b_id"),
-        ham(col("a.phash"), col("b.phash")).as("hamming"))
-      .distinct()
-      .filter($"hamming" <= maxHamming)
-  }
+                   maxDf: Int = MaxPhashBandDf): DataFrame =
+    Banding.hammingPairs(images, "image_id", "phash", chunks = 8, perKey = 2, maxHamming, maxDf)
 
   /** Near-duplicate image CLUSTERS: connected components over the
     * [[phashNearDup]] pair graph, resolved by the shared

@@ -175,57 +175,28 @@ object Similarity {
     }
   }
 
-  /** (vec_id, band, bk) SRP band keys for the near-dup family —
-    * mapPartitions kernel over primitive arrays (96 plane dots per row
-    * stay unboxed). Shared by [[cosineNearDup]] and the aux oracle dump
-    * so the DuckDB side replays exactly these keys. */
-  def nearDupBands(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    embTyped(spark, dir)
-      .mapPartitions { it =>
-        it.flatMap { case (id, v) =>
-          val ks = nearDupBandKeys(v)
-          Iterator.tabulate(ks.length)(b => (id, b, ks(b)))
-        }
-      }
-      .toDF("vec_id", "band", "bk")
-  }
+  /** (vec_id, band, bk) SRP band keys for the near-dup family: the aux
+    * oracle dump, a projection of the rows [[cosineNearDup]] joins (the
+    * packed carriers are internal), so DuckDB replays exactly its keys. */
+  def nearDupBands(spark: SparkSession, dir: String): DataFrame =
+    nearDupBandsPacked(spark, dir).select("vec_id", "band", "bk")
 
-  /** Band rows carrying the vector's FULL packed key vector: 32 3-bit
-    * band keys in two longs (groups 0-15 at bits 3i of k0, 16-31 at
-    * bits 3(i-16) of k1) — what lets the pair join dedup WITHOUT a
-    * shuffle (see [[cosineNearDup]]). Same key family as
-    * [[nearDupBands]] (shared [[nearDupBandKeys]] kernel), so the aux
-    * oracle dump replays exactly this banding. */
+  /** Band rows carrying the vector's FULL key vector, packed 3 bits a
+    * band into the carriers k0/k1 ([[Banding.pack]]) — what lets the
+    * pair join dedup WITHOUT a shuffle (see [[cosineNearDup]]).
+    * mapPartitions kernel over primitive arrays: the 96 plane dots per
+    * row stay unboxed. */
   private def nearDupBandsPacked(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     embTyped(spark, dir)
       .mapPartitions { it =>
         it.flatMap { case (id, v) =>
           val ks = nearDupBandKeys(v)
-          var k0 = 0L; var k1 = 0L
-          var i = 0
-          while (i < ks.length) {
-            if (i < 16) k0 |= ks(i).toLong << (3 * i)
-            else k1 |= ks(i).toLong << (3 * (i - 16))
-            i += 1
-          }
+          val Array(k0, k1) = Banding.pack(ks, NearDupPlanesPerBand)
           Iterator.tabulate(ks.length)(b => (id, b, ks(b), k0, k1))
         }
       }
       .toDF("vec_id", "band", "bk", "k0", "k1")
-  }
-
-  /** Index of the FIRST band whose 3-bit key agrees, given the XORs of
-    * the two packed key vectors (a 32-arm codegen'd CASE — group i
-    * agrees iff its 3 xor bits are zero). Total because the inputs
-    * always come from a band join: at least the joined band agrees. */
-  private def firstAgreeBand(x0: Column, x1: Column): Column = {
-    def grp(x: Column, off: Int) = shiftright(x, off).bitwiseAND(lit(7L))
-    (0 until NearDupBands).foldRight(lit(NearDupBands): Column) { (i, rest) =>
-      val g = if (i < 16) grp(x0, 3 * i) else grp(x1, 3 * (i - 16))
-      when(g === 0L, lit(i)).otherwise(rest)
-    }
   }
 
   /** Near-duplicate pairs over a cosine threshold (percent, to keep the
@@ -236,25 +207,16 @@ object Similarity {
     * DuckDB oracle replays the banding from the aux key dump, so ITS
     * contract is bit-exact on any corpus).
     *
-    * r6 dedup-shuffle removal (guide §2.3/§2.4): a pair agreeing on m
-    * bands used to surface m times and be collapsed by a `.distinct()`
-    * — an exchange + global hash-dedup of the (quadratic-ish) candidate
-    * stream, measured as ~45% of this query. Instead each band row
-    * carries the vector's packed 32-key vector and a pair is KEPT ONLY
-    * IN ITS FIRST AGREEING BAND (the classic emit-once LSH rule): a
-    * codegen'd filter, exactly one survivor per candidate pair, no
-    * exchange. The extra shuffle weight is 16 bytes per band row —
-    * linear in the corpus — traded against an exchange of the
-    * candidate PAIR stream, which is the super-linear term. */
+    * The bands are uncapped, so a pair is kept only in its first
+    * agreeing band ([[Banding.Uncapped]]): a `.distinct()` would be an
+    * exchange + global hash-dedup of the candidate stream, measured in
+    * r6 as ~45% of this query. The carriers cost 16 bytes per band row
+    * — linear in the corpus — against an exchange of the candidate PAIR
+    * stream, the super-linear term. */
   def cosineNearDup(spark: SparkSession, dir: String, minCosPct: Int = 40): DataFrame = {
     import spark.implicits._
-    val bands = nearDupBandsPacked(spark, dir)
-    val cands = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bk") === col("b.bk") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .filter(firstAgreeBand(col("a.k0").bitwiseXOR(col("b.k0")),
-        col("a.k1").bitwiseXOR(col("b.k1"))) === col("a.band"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
+    val cands = Banding.candidatePairs(nearDupBandsPacked(spark, dir), "vec_id", "bk",
+      Banding.Uncapped(NearDupBands, NearDupPlanesPerBand, Seq("k0", "k1")))()
     val ev = emb(spark, dir).select($"vec_id", $"embedding", norm($"embedding").as("nrm"))
     cands
       .join(ev.select($"vec_id".as("a_id"), $"embedding".as("ea"), $"nrm".as("na")), "a_id")
@@ -309,14 +271,11 @@ object Similarity {
     val e = embTyped(spark, dir)
       .mapPartitions(_.map { case (id, v) => (id, v, normOf(v), srpSignature(v)) })
       .toDF("vec_id", "embedding", "nrm", "sig")
-    val bandCols = (0 until SrpBands).map { b =>
-      struct(lit(b).as("band"),
-        shiftright($"sig", b * BitsPerBand).bitwiseAND(lit((1 << BitsPerBand) - 1)).as("bk"))
-    }
-    // sig rides along: the candidate join's emit-once dedup filter
-    // (see lshTopK) recomputes band agreement from the two signatures
-    e.select($"vec_id", $"embedding", $"nrm", $"sig", explode(array(bandCols: _*)).as("bb"))
-      .select($"vec_id", $"embedding", $"nrm", $"sig", $"bb.band", $"bb.bk")
+    // sig rides along: it is the packed key vector (band b = its bits
+    // 8b..8b+7) the emit-once filter recomputes band agreement from
+    Banding.explodeBands(e, Seq("vec_id", "embedding", "nrm", "sig"), "bk",
+      (0 until SrpBands).map(b =>
+        shiftright($"sig", b * BitsPerBand).bitwiseAND(lit((1 << BitsPerBand) - 1))))
   }
 
   /** Aux dump for the DuckDB oracle: just the banding keys (sig is an
@@ -331,25 +290,10 @@ object Similarity {
     * dump, so the emitted set itself is bit-checked. */
   def lshTopK(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     import spark.implicits._
-    val buckets = lshBuckets(spark, dir)
-    // emit-once dedup (r6, the cosineNearDup rule — sound here because
-    // the LSH bands are UNcapped): a pair agreeing on both bands used to
-    // surface twice and be collapsed by a groupBy/first — an exchange of
-    // the scored candidate stream. Band agreement is recomputable from
-    // the two signatures, so "keep the pair only in its first agreeing
-    // band" is a codegen'd filter: one survivor per pair, no exchange.
-    val x = col("a.sig").bitwiseXOR(col("b.sig"))
-    val firstAgree = (0 until SrpBands).foldRight(lit(SrpBands): Column) { (b, rest) =>
-      when(shiftright(x, b * BitsPerBand)
-        .bitwiseAND(lit((1 << BitsPerBand) - 1)) === 0, lit(b)).otherwise(rest)
-    }
-    val cands = buckets.as("a").join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bk") === col("b.bk") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .filter(firstAgree === col("a.band"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-        (dot(col("a.embedding"), col("b.embedding")) /
-          (col("a.nrm") * col("b.nrm"))).as("sim"))
+    // uncapped bands: emit-once, no exchange of the scored candidates
+    val cands = Banding.candidatePairs(lshBuckets(spark, dir), "vec_id", "bk",
+        Banding.Uncapped(SrpBands, BitsPerBand, Seq("sig")), bothOrders = true)(
+      (dot(col("a.embedding"), col("b.embedding")) / (col("a.nrm") * col("b.nrm"))).as("sim"))
     val w = Window.partitionBy($"a_id").orderBy($"sim".desc, $"b_id")
     cands.withColumn("rnk", row_number().over(w).cast("bigint"))
       .filter($"rnk" <= k)

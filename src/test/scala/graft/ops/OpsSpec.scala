@@ -56,8 +56,11 @@ class OpsSpec extends SparkTestBase {
   // -------------------------------------------------------------- dedup
 
   test("minhash LSH finds the planted near-dup pairs with exact inter/uni") {
-    val res = Dedup.minhashNearDup(spark, docsDir, minJaccardPct = 50)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val rows = Dedup.minhashNearDup(spark, docsDir, minJaccardPct = 50)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val res = rows.toSet
+    // `.toSet` would hide a pair emitted twice (a wrong collapse rule)
+    assert(rows.length == res.size, s"duplicate pairs: ${rows.diff(rows.distinct).toSeq}")
     // planted pairs (2k, 2k+1) share a long prefix => jaccard >= 0.5
     val expected = (0 until 40 by 2).map(k => (k.toLong, (k + 1).toLong)).toSet
     assert(expected.subsetOf(res), s"missing: ${expected -- res}")
@@ -81,10 +84,20 @@ class OpsSpec extends SparkTestBase {
       (a, ha) <- sigs; (b, hb) <- sigs if a < b
       if java.lang.Long.bitCount(ha ^ hb) <= 3
     } yield (a, b)).toSet
-    val res = Dedup.simhashNearDup(spark, docsDir, maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val rows = Dedup.simhashNearDup(spark, docsDir, maxHamming = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val res = rows.toSet
+    assert(rows.length == res.size, s"duplicate pairs: ${rows.diff(rows.distinct).toSeq}")
     assert(res == brute, s"banding diff: missing=${brute -- res} extra=${res -- brute}")
     assert(brute.nonEmpty, "test corpus should contain simhash near-dups")
+    // 4 single-chunk bands are complete only up to hamming 3: a pair at
+    // hamming 4 can differ in every chunk, so a wider search must fail
+    // loudly instead of silently missing pairs
+    val spark0 = spark
+    import spark0.implicits._
+    intercept[IllegalArgumentException] {
+      Dedup.simhashNearDupFromSigs(sigs.toSeq.toDF("doc_id", "simhash"), maxHamming = 4)
+    }
   }
 
   test("ngram jaccard df cap drops hot shingles from the join only (sizes keep them)") {
@@ -500,8 +513,10 @@ class OpsSpec extends SparkTestBase {
   test("SRP-LSH ANN has high recall on clustered embeddings") {
     val brute = Similarity.bruteTopK(spark, embDir, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Similarity.lshTopK(spark, embDir, k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val lshRows = Similarity.lshTopK(spark, embDir, k = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val lsh = lshRows.toSet
+    assert(lshRows.length == lsh.size, s"duplicate pairs: ${lshRows.diff(lshRows.distinct).toSeq}")
     // restrict recall to cluster members (0..79): their true neighbors
     // are near-identical vectors, which SRP buckets must group
     val bruteC = brute.filter { case (a, b) => a < 80 && b < 80 }
@@ -537,8 +552,10 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("cosine near-dup finds exactly the planted clusters at 0.9") {
-    val res = Similarity.cosineNearDup(spark, embDir, minCosPct = 90)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val rows = Similarity.cosineNearDup(spark, embDir, minCosPct = 90)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val res = rows.toSet
+    assert(rows.length == res.size, s"duplicate pairs: ${rows.diff(rows.distinct).toSeq}")
     // all intra-cluster pairs (8 choose 2) * 10 clusters
     val expected = (0 until 10).flatMap { c =>
       for (i <- 0 until 8; j <- i + 1 until 8) yield ((c * 8 + i).toLong, (c * 8 + j).toLong)
@@ -779,8 +796,10 @@ class OpsSpec extends SparkTestBase {
       (a, ha) <- hashes; (b, hb) <- hashes if a < b
       if java.lang.Long.bitCount(ha ^ hb) <= 6
     } yield (a, b)).toSet
-    val res = Multimodal.phashNearDup(imgs, maxHamming = 6)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val rows = Multimodal.phashNearDup(imgs, maxHamming = 6)
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    val res = rows.toSet
+    assert(rows.length == res.size, s"duplicate pairs: ${rows.diff(rows.distinct).toSeq}")
     assert(res == brute, s"banding diff: missing=${brute -- res} extra=${res -- brute}")
     assert(brute.nonEmpty, "test corpus should contain phash near-dups")
   }

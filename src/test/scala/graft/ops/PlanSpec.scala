@@ -52,11 +52,37 @@ class PlanSpec extends SparkTestBase {
   test("ngram jaccard and minhash near-dup stay equi-join shaped (no all-pairs fallback)") {
     for ((name, df) <- Seq(
         "ngram" -> Dedup.ngramJaccard(spark, dir),
-        "minhash" -> Dedup.minhashNearDup(spark, dir))) {
+        "minhash" -> Dedup.minhashNearDup(spark, dir),
+        "simhash" -> Dedup.simhashNearDup(spark, dir),
+        "phash" -> Multimodal.phashNearDup(Multimodal.syntheticImages(spark, 64)),
+        "lshTopK" -> Similarity.lshTopK(spark, dir))) {
       val p = plan(df)
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"$name fell back to an all-pairs join:\n" + p)
     }
+  }
+
+  test("banding collapse: emit-once plans never aggregate pairs, capped plans exactly once") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    // aggregates grouping on both pair ids, in the optimized plan (a
+    // `distinct` is an Aggregate there, before it splits into partial
+    // and final physical stages)
+    def pairAggs(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect {
+        case a: Aggregate if Set("a_id", "b_id").subsetOf(
+          a.groupingExpressions.flatMap(_.references.map(_.name)).toSet) => a
+      }.size
+    for ((name, df) <- Seq(
+        "cosineNearDup" -> Similarity.cosineNearDup(spark, dir),
+        "lshTopK" -> Similarity.lshTopK(spark, dir)))
+      assert(pairAggs(df) == 0, s"$name: uncapped banding must collapse by first agreement:\n" +
+        df.queryExecution.optimizedPlan)
+    for ((name, df) <- Seq(
+        "minhash" -> Dedup.minhashNearDup(spark, dir),
+        "simhash" -> Dedup.simhashNearDup(spark, dir),
+        "phash" -> Multimodal.phashNearDup(Multimodal.syntheticImages(spark, 64))))
+      assert(pairAggs(df) == 1, s"$name: capped banding must collapse with one distinct:\n" +
+        df.queryExecution.optimizedPlan)
   }
 
   test("similarity scoring uses the codegen float_dot, not interpreted higher-order folds") {
