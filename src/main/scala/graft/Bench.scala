@@ -172,7 +172,7 @@ object Bench {
         val t0 = System.nanoTime()
         new Crawler(spark, cfg).run()
         val secs = (System.nanoTime() - t0) / 1e9
-        BenchChild.deleteRecursively(java.nio.file.Paths.get(lake))
+        graft.lake.Lake.deleteRecursively(java.nio.file.Paths.get(lake))
         secs
       }
       // best-of-two, like the query sweep (first run warms JIT/codegen)
@@ -261,9 +261,9 @@ object Bench {
     // a fast no-op on the finished lake.
     if (!sys.env.contains("SPARK_GRAFT_SKIP_SCALE_PROBE")) {
       val spark = session(cpus)
+      val lake = java.nio.file.Files.createTempDirectory("scale_probe").toString
       try {
       val probeHosts = sys.env.getOrElse("SPARK_GRAFT_PROBE_HOSTS", "10000").toInt
-      val lake = java.nio.file.Files.createTempDirectory("scale_probe").toString
       val cfg = benchConfig(cpus, probeHosts, lake)
       val t0 = System.nanoTime()
       new Crawler(spark, cfg).run()
@@ -290,7 +290,6 @@ object Bench {
       results("crawl_scale_probe_resume_sec") = resumeSecs
       results("crawl_scale_probe_bloom_rebuild_fired") = if (rebuildFired) 1.0 else 0.0
       results("crawl_scale_probe_resume_noop") = if (resumeNoop) 1.0 else 0.0
-      BenchChild.deleteRecursively(java.nio.file.Paths.get(lake))
       } catch {
         // the same report-don't-throw convention as the assertions
         // above, extended to the run itself: a heap exhaustion in a
@@ -300,7 +299,11 @@ object Bench {
         case e: Throwable =>
           System.err.println(s"scale probe FAILED (recorded, not thrown): $e")
           results("crawl_scale_probe_failed") = 1.0
-      } finally spark.stop()
+      } finally {
+        // a failed probe must not leak its lake either
+        try graft.lake.Lake.deleteRecursively(java.nio.file.Paths.get(lake))
+        finally spark.stop()
+      }
     }
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
@@ -349,7 +352,7 @@ object BenchChild {
         val perWave = log.completeWaves.map(w => log.stats(w))
         val admitted = perWave.map(_.getOrElse("admitted", 0L)).sum
         val steady = perWave.maxBy(_.getOrElse("admitted", 0L))
-        deleteRecursively(java.nio.file.Paths.get(lake))
+        graft.lake.Lake.deleteRecursively(java.nio.file.Paths.get(lake))
         (admitted, secs, steady.getOrElse("admitted", 0L),
           steady.getOrElse("wall_ms", 1L) / 1e3)
       }
@@ -364,7 +367,4 @@ object BenchChild {
         f"$sAdm1 ${math.min(sSecs1, sSecs2)}%.3f")
     } finally spark.stop()
   }
-
-  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.lake.Lake.deleteRecursively(p)
 }

@@ -1,12 +1,17 @@
 package graft.crawl
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Canon, Finding, HtmlTok, Imaging, PageKernel, SynthWeb}
-import graft.lake.{BucketedLakeTable, LakeTable, RunLog}
+import graft.lake.{BucketedLakeTable, LakeTable, RunLog, SnapshotMeta}
 
 /** Engine configuration. Conformance runs (vs RefSim) use
   * robots=false and perWaveHostQuota=None — those two are engine
@@ -57,6 +62,13 @@ final case class Fetched(
     bytes: Array[Byte], w: Int, h: Int, fmt: String, caption: String,
     phash: Long, basename: String
 )
+
+/** The snapshots wave k reads: its frontier and budget, the robots
+  * cache through k, and the seen row count through k. A wave hands its
+  * successor the ones it staged; the first wave and a resumed one read
+  * them from manifest k. */
+private final case class WaveInputs(wave: Int, frontier: SnapshotMeta, budget: SnapshotMeta,
+    robots: Seq[SnapshotMeta], seenRows: Long)
 
 /** The Spark-native wave engine. Each crawl wave is one typed Dataset
   * transform (SURVEY.md §3.2):
@@ -155,41 +167,43 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
         throw new IllegalArgumentException(s"malformed seed: $s"))
       FrontierRow(Finding.Page, u.render, 0, u.host)
     }.distinct
-    val df = spark.createDataset(rows).toDF()
-    frontierT.commit(0, df.repartition(1))
-    budgetT.commit(0, Seq.empty[(String, Long)].toDF("host", "visits"))
-    seenT.init()
-    if (cfg.robots) robotsT.commit(0, Seq.empty[(String, Seq[String])].toDF("host", "disallow"))
-    runLog.markComplete(0, Map("frontier" -> rows.size.toLong))
-    rows.size.toLong
+    val frontier = frontierT.commit(0, spark.createDataset(rows).toDF().repartition(1))
+    val budget = budgetT.commit(0, Seq.empty[(String, Long)].toDF("host", "visits"))
+    val robots =
+      if (!cfg.robots) Nil
+      else Seq(robotsT.commit(0, Seq.empty[(String, Seq[String])].toDF("host", "disallow")))
+    runLog.commit(0, frontier +: budget +: robots, Map("frontier" -> frontier.totalRows))
+    inputs = Some(WaveInputs(0, frontier, budget, robots, 0L))
+    frontier.totalRows
   }
 
   // ----------------------------------------------------------- one wave
 
-  /** Runs wave k: consumes frontier_k, commits frontier_{k+1} and the
-    * wave's appends to seen/budget/images/metrics. Returns the size of
-    * the next frontier. */
+  /** Runs wave k: consumes frontier_k, stages frontier_{k+1} and the
+    * wave's appends to seen/budget/images/metrics, and (asynchronously)
+    * commits them with manifest k+1. Returns the size of the next
+    * frontier. */
   def runWave(wave: Int, bloomState: PartitionedBloom): Long = {
     val waveT0 = System.nanoTime()
     val webCfg = cfg.web
     val depthLimit = cfg.depthLimit
     val visitLimit = cfg.hostVisitLimit
+    val in = inputsOf(wave)
 
-    val frontier = frontierT.readWave(wave)
-    val budget = budgetT.readWave(wave)
+    val frontier = frontierT.read(Seq(in.frontier))
+    val budget = budgetT.read(Seq(in.budget))
 
     // --- engine extension: robots.txt cache + filter (OFF in conformance)
-    val (afterRobots, robotsDropped) =
-      if (!cfg.robots) (frontier, frontier.limit(0))
-      else applyRobots(wave, frontier)
+    val (afterRobots, robotsDropped, robotsSnap) =
+      if (!cfg.robots) (frontier, frontier.limit(0), Nil)
+      else applyRobots(wave, frontier, in.robots)
 
     // --- A3 + J2: budget-capped admission.
     // row_number per host in canonical (kind,url,depth) order — the
     // fixed linearization shared with RefSim (SURVEY.md §3.4); broadcast
     // the budget (bounded by #hosts, tiny next to the frontier).
     // adaptive dim-join strategy (see CrawlConfig.budgetBroadcastMaxRows)
-    val budgetRows = budgetT.snapshot(wave).map(_.totalRows).getOrElse(0L)
-    val smallBudget = budgetRows <= cfg.budgetBroadcastMaxRows
+    val smallBudget = in.budget.totalRows <= cfg.budgetBroadcastMaxRows
     val base = afterRobots
       .filter($"host" =!= "")                              // P2 null-host drop
       .join(if (smallBudget) broadcast(budget) else budget, Seq("host"), "left")
@@ -204,9 +218,8 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     // the bound AND exactness). Engaged adaptively: the frontier row
     // count is free (snapshot footers), and below admitPreLimitMinRows
     // the single-task sort it avoids is cheaper than its extra exchange.
-    val frontierRows = frontierT.snapshot(wave).map(_.totalRows).getOrElse(Long.MaxValue)
     val preLimited =
-      if (frontierRows < cfg.admitPreLimitMinRows) base
+      if (in.frontier.totalRows < cfg.admitPreLimitMinRows) base
       else Admission.preLimit(base, visitLimit, cfg.saltSlots)
     val w = Window.partitionBy($"host").orderBy($"kind", $"url", $"depth")
     val ranked = preLimited.withColumn("rn", row_number().over(w))
@@ -235,14 +248,11 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
 
     // target ~128k rows per committed file (64-file cap)
     def nFiles(rows: Long): Int = math.max(1, math.min(64, (rows / 131072L + 1L).toInt))
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
 
     // --- A2: merge admitted counts into the budget table (full rewrite;
     // the table is <= #hosts rows). Runs concurrently with the images
     // commit and the novelty chain, all off the fetched cache.
-    val budgetChain = Future {
+    val budgetChain = track(Future {
       val newBudget = budget.unionByName(fetched.select($"host", lit(1L).as("visits")))
         .groupBy($"host").agg(sum($"visits").as("visits"))
       // repartition(1), NOT coalesce(1): coalesce propagates up and would
@@ -252,15 +262,15 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
         if (smallBudget) newBudget.repartition(1)
         else newBudget.repartition(cfg.seenBuckets, $"host")
       budgetT.commit(wave + 1, out)
-    }
+    })
     // PNG/JPEG payloads are already entropy-coded — snappy on top only
     // burns CPU, so the images table is written uncompressed
-    val imagesChain = Future {
+    val imagesChain = track(Future {
       imagesT.commit(wave + 1, fetched.filter($"kind" === Finding.Image && $"ok")
         .select($"url".as("image_id"), $"bytes", $"w", $"h", $"fmt", $"caption",
           $"phash", $"basename"),
         writeOptions = Map("compression" -> "uncompressed"))
-    }
+    })
     Await.result(seenReady, Duration.Inf)
 
     // --- U1: children across all pages; M4 per-page dedup already done
@@ -292,11 +302,9 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     // Bloom pre-filter routes definitely-new rows around the anti-join
     // (codegen might_contain, one bucket probe per row); only
     // maybe-seen rows probe the exact bucketed seen table, which is
-    // scanned storage-partitioned — never shuffled.
-    // readThrough(wave), NOT readAll(): after a mid-wave crash the lake
-    // may hold a torn wave+1 snapshot; scoping the read to the waves the
-    // run log marked complete keeps the re-run byte-identical.
-    val seen = seenT.readThrough(wave).select($"kind", $"url", $"depth")
+    // scanned storage-partitioned — never shuffled. Seen wave k may be
+    // only staged (its manifest lands after the previous wave's tail).
+    val seen = seenT.readStaged(wave).select($"kind", $"url", $"depth")
     val novel0 =
       if (cfg.bloom && !bloomState.isEmpty) {
         val probe = bloomState.probeCol(spark, $"bucket", $"url_hash")
@@ -318,54 +326,57 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
       .collect()
     val novelCount = novelByBucket.map(_._2).sum
 
-    // novel is cached: the seen append, bloom merge, and frontier
-    // commit are independent reads of it — run them concurrently.
+    // novel is cached: the bloom merge and the frontier commit are
+    // independent reads of it — run them concurrently. The seen append
+    // starts only after both: its insert refreshes every cached plan
+    // that reads the seen table, novel included, and a refresh landing
+    // while a task still reads novel's old cache fails that task
+    // ("Block rdd_N does not exist").
+    val seenRows = in.seenRows + novelCount
+    val rebuild = cfg.bloom && novelCount > 0 && bloomState.wouldSaturate(novelCount)
+    val fMerge =
+      if (!cfg.bloom || novelCount == 0 || rebuild) Future.unit
+      else track(Future(bloomState.add(novel, $"bucket", $"url_hash", novelCount)))
+    // --- D2 depth gate -> frontier_{k+1}, on this thread meanwhile
+    val frontierSnap = frontierT.commit(wave + 1, novel
+      .filter($"gate_depth" < depthLimit)
+      .select($"kind", $"url", $"depth", hostCol($"url").as("host"))
+      .coalesce(nFiles(novelCount)))
     // --- commit seen += novel (ALL novel rows are archived, even those
     // the depth gate keeps out of the queue — src/main.rs:130-134).
     // The insert inherits the candidates' bucket-aligned partitioning.
-    val fSeen = Future {
+    val fSeen = track(fMerge.map { _ =>
       seenT.commit(wave + 1, novel
         .select($"kind", $"url", $"depth", $"url_hash", lit(wave + 1).as("wave_added")))
-    }
+    })
     val fBloom =
-      if (!cfg.bloom || novelCount == 0) Future.unit
-      else if (!bloomState.wouldSaturate(novelCount)) Future {
-        bloomState.add(novel, $"bucket", $"url_hash", novelCount)
-      } else fSeen.map { _ =>
-        // capacity crossing: grow and REBUILD from the full committed
-        // seen set (one distributed aggregation, same shape as the
-        // per-wave merge) — runs after this wave's seen append so the
+      if (!rebuild) fMerge
+      else track(fSeen.map { _ =>
+        // capacity crossing: grow and REBUILD from the full seen set
+        // (one distributed aggregation, same shape as the per-wave
+        // merge) — runs after this wave's seen append is staged so the
         // rebuilt filters cover it. Without this, fixed-size filters
         // saturate at the 10^10 design point and the pre-filter
         // silently degrades to all-pass.
-        val total = seenT.rowCountThrough(wave + 1)
-        bloomState.growTo(total)
-        val all = seenT.readThrough(wave + 1)
-        bloomState.add(all,
-          bloomState.bucketCol($"kind", $"url", $"depth"), $"url_hash", total)
-      }
+        bloomState.growTo(seenRows)
+        bloomState.add(seenT.readStaged(wave + 1),
+          bloomState.bucketCol($"kind", $"url", $"depth"), $"url_hash", seenRows)
+      })
     // the seen append + bloom merge escape this wave: the NEXT wave's
     // anti-join awaits them (seenReady) right before it needs them,
     // so its admission + fetch overlap this commit tail
     seenReady = for { _ <- fSeen; _ <- fBloom } yield ()
-    // --- D2 depth gate -> frontier_{k+1}, on this thread meanwhile
-    frontierT.commit(wave + 1, novel
-      .filter($"gate_depth" < depthLimit)
-      .select($"kind", $"url", $"depth", hostCol($"url").as("host"))
-      .coalesce(nFiles(novelCount)))
-    Await.result(imagesChain, Duration.Inf)
-    Await.result(budgetChain, Duration.Inf) // next wave reads budget_{k+1}
-    val readyThisWave = seenReady           // seen+bloom tail of THIS wave
-    val nextCount = frontierT.snapshot(wave + 1).get.totalRows
-    val imageRows = imagesT.snapshot(wave + 1).get.totalRows
+    val imagesSnap = Await.result(imagesChain, Duration.Inf)
+    val budgetSnap = Await.result(budgetChain, Duration.Inf)
+    inputs = Some(WaveInputs(wave + 1, frontierSnap, budgetSnap, in.robots ++ robotsSnap, seenRows))
 
     // --- per-wave, per-host-bucket metrics (lineage beyond the
     // manifests' per-file row counts): ONE job — a union of one wide
     // row per source row (frontier, fetched, novel's per-bucket sums,
     // robots-dropped), one column per counter, summed per host bucket
     // with map-side combine. Committed ASYNCHRONOUSLY (chained, so
-    // run-log marks stay ordered): metrics are outputs, never inputs of
-    // a wave, so the next wave's compute overlaps this commit;
+    // manifests land in wave order): metrics are outputs, never inputs
+    // of a wave, so the next wave's compute overlaps this commit;
     // run()/awaitQuiesce joins the tail.
     def counters(df: DataFrame, bucket: Column, values: (String, Column)*): DataFrame = {
       val set = values.toMap
@@ -389,12 +400,12 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
       .withColumn("wave", lit(wave))
     val waveWallMs = (System.nanoTime() - waveT0) / 1000000L
     val prevTail = pendingTail
-    // the run-log mark (the resume contract: wave complete <=> ALL its
-    // table snapshots landed) and the cache releases must wait for the
-    // escaped seen+bloom commits of this wave too
-    pendingTail = for { _ <- prevTail; _ <- readyThisWave } yield {
-      // cands releases FIRST in the tail — readyThisWave means its only
-      // escaped readers (seen append + bloom merge) are done, and
+    // the manifest (the resume contract: wave complete <=> ALL its
+    // tables staged) and the cache releases must wait for the escaped
+    // seen+bloom commits of this wave too
+    pendingTail = track(for { _ <- prevTail; seenSnap <- fSeen; _ <- fBloom } yield {
+      // cands releases FIRST in the tail — fSeen and fBloom are its only
+      // escaped readers (seen append + bloom merge) and are done, and
       // sequencing the release BEFORE the metrics job launches keeps the
       // unpersist from racing an in-flight read (the r5 "Block rdd_N
       // does not exist" fix). Holding it past the metrics commit instead
@@ -402,61 +413,70 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
       // heap-OOM'd the 10k-host scale probe at wave 4 (metrics reads
       // fetched and novel's collected sums, never cands or novel).
       cands.unpersist(false)
-      metricsT.commit(wave + 1, metrics.repartition(1))
-      runLog.markComplete(wave + 1, Map(
-        "frontier" -> nextCount,
+      val metricsSnap = metricsT.commit(wave + 1, metrics.repartition(1))
+      runLog.commit(wave + 1,
+        Seq(frontierSnap, budgetSnap, imagesSnap, seenSnap, metricsSnap) ++ robotsSnap, Map(
+        "frontier" -> frontierSnap.totalRows,
         "admitted" -> admittedCount,
-        "novel" -> seenT.snapshot(wave + 1).get.totalRows,
-        "images" -> imageRows,
+        "novel" -> seenSnap.totalRows,
+        "images" -> imagesSnap.totalRows,
         "wall_ms" -> waveWallMs,
         // bloom fill observability: capacity vs items quantifies how
         // far the pre-filter is from its next adaptive rebuild
         "bloom_capacity" -> (if (cfg.bloom) bloomState.capacity else 0L),
         "bloom_items" -> (if (cfg.bloom) bloomState.itemsAdded else 0L)))
       fetched.unpersist(false); novel.unpersist(false)
-    }
-    nextCount
+    })
+    frontierSnap.totalRows
   }
 
-  // async tail of metrics commits + run-log marks, chained to stay ordered
-  @transient private var pendingTail: scala.concurrent.Future[Unit] =
-    scala.concurrent.Future.unit
+  // async tail of metrics commits + manifests, chained to stay ordered
+  @transient private var pendingTail: Future[Unit] = Future.unit
   // the current wave's escaped seen-append + bloom-merge: the next
   // wave's anti-join joins this right before it needs them, letting its
   // admission + fetch overlap this wave's commit tail
-  @transient private var seenReady: scala.concurrent.Future[Unit] =
-    scala.concurrent.Future.unit
+  @transient private var seenReady: Future[Unit] = Future.unit
 
-  /** Join the async metrics/run-log tail (call before reading final
+  // the inputs the last runWave staged for the next one
+  @transient private var inputs: Option[WaveInputs] = None
+  // every commit Future not yet seen complete: run() joins them all
+  // before it rethrows a failure, so none still writes to the lake
+  @transient private var inFlight: List[Future[Any]] = Nil
+
+  private def track[T](f: Future[T]): Future[T] = {
+    inFlight = f :: inFlight.filterNot(_.isCompleted)
+    f
+  }
+
+  private def inputsOf(wave: Int): WaveInputs = inputs.filter(_.wave == wave).getOrElse {
+    val in = WaveInputs(wave, frontierT.snapshot(wave).get, budgetT.snapshot(wave).get,
+      if (cfg.robots) robotsT.snapshots(wave) else Nil, seenT.rowCountThrough(wave))
+    inputs = Some(in)
+    in
+  }
+
+  /** Join the async metrics/manifest tail (call before reading final
     * state or abandoning the Crawler). */
-  def awaitQuiesce(): Unit =
-    scala.concurrent.Await.result(pendingTail, scala.concurrent.duration.Duration.Inf)
-
+  def awaitQuiesce(): Unit = Await.result(pendingTail, Duration.Inf)
 
   /** Engine extension D4: consult/populate the robots cache table and
     * drop disallowed URLs BEFORE budget admission. The robots fetch for
     * new hosts runs INSIDE executors (mapPartitions over the
     * host-distinct Dataset) — at web scale (10^7+ hosts) a driver-side
     * collect+loop would serialize the wave. */
-  private def applyRobots(wave: Int, frontier: DataFrame): (DataFrame, DataFrame) = {
-    // readThrough(wave), NOT readAll: after a mid-wave crash the torn
-    // robots snapshot wave+1 may hold the crashed attempt's rows — a
-    // readAll cache would treat those hosts as known, fetch nothing,
-    // and the overwrite commit below would then DELETE their rules
-    // (the resumed run would crawl disallowed URLs). Scoping to the
-    // complete waves refetches them and the commit stays idempotent.
-    val cache = robotsT.readThrough(wave)
+  private def applyRobots(wave: Int, frontier: DataFrame,
+                          known: Seq[SnapshotMeta]): (DataFrame, DataFrame, Seq[SnapshotMeta]) = {
     val fetched = frontier.select($"host").distinct()
-      .join(cache.select($"host"), Seq("host"), "left_anti")
+      .join(robotsT.read(known).select($"host"), Seq("host"), "left_anti")
       .as[String]
       .mapPartitions(_.map(h => (h, SynthWeb.robots(h))))
       .toDF("host", "disallow")
-    robotsT.commit(wave + 1, fetched.repartition(1))
-    val allRules = robotsT.readThrough(wave + 1)
+    val snap = robotsT.commit(wave + 1, fetched.repartition(1))
+    val allRules = robotsT.read(known :+ snap)
     // same adaptive dim-join rule as the budget: per-host rules stop
     // broadcasting once the host space outgrows the threshold
     val rulesJoin =
-      if (robotsT.rowCountThrough(wave + 1) <= cfg.budgetBroadcastMaxRows)
+      if ((known :+ snap).map(_.totalRows).sum <= cfg.budgetBroadcastMaxRows)
         broadcast(allRules)
       else allRules
     val pathCol = regexp_replace($"url", "^[a-z][a-z0-9+.-]*://[^/]*", "")
@@ -466,41 +486,38 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
         coalesce(exists($"disallow", p => startswith($"path", p)), lit(false)))
     val allowed = joined.filter(!$"blocked").select($"kind", $"url", $"depth", $"host")
     val dropped = joined.filter($"blocked").select($"kind", $"url", $"depth", $"host")
-    (allowed, dropped)
+    (allowed, dropped, Seq(snap))
   }
 
   // ------------------------------------------------------------- driver
 
   /** Full run (or resume). The loop is thin: per wave one transform,
     * counts come from parquet footers (no collect of data). */
-  def run(): CrawlSummary = {
+  def run(): CrawlSummary = try {
     val bloomState = new PartitionedBloom(cfg.seenBuckets, cfg.bloomExpectedItems, cfg.bloomFpp)
-    val startWave = runLog.lastCompleteWave match {
-      case None =>
-        initRun(); 0
-      case Some(k) =>
-        // resume: rebuild the bloom from the COMPLETE waves only (a torn
-        // wave k+1 snapshot must not leak into wave k's re-run). Skip
-        // entirely when the frontier is empty - a finished crawl's
-        // re-run must be a no-op, not a full-seen-table aggregation
-        val seenRows =
-          if (frontierT.snapshot(k).get.totalRows == 0) 0L
-          else seenT.rowCountThrough(k)
-        if (cfg.bloom && seenRows > 0) {
-          if (bloomState.wouldSaturate(seenRows)) bloomState.growTo(seenRows)
-          val s = seenT.readThrough(k)
-          bloomState.add(s, bloomState.bucketCol($"kind", $"url", $"depth"), $"url_hash", seenRows)
-        }
-        k
+    var wave = runLog.lastCompleteWave.getOrElse { initRun(); 0 }
+    val in = inputsOf(wave)
+    // a resumed run rebuilds the bloom from the complete waves. Skip it
+    // when the frontier is empty - a finished crawl's re-run must be a
+    // no-op, not a full-seen-table aggregation
+    if (cfg.bloom && in.frontier.totalRows > 0 && in.seenRows > 0) {
+      if (bloomState.wouldSaturate(in.seenRows)) bloomState.growTo(in.seenRows)
+      bloomState.add(seenT.readThrough(wave),
+        bloomState.bucketCol($"kind", $"url", $"depth"), $"url_hash", in.seenRows)
     }
-    var wave = startWave
-    var frontierSize = frontierT.snapshot(wave).get.totalRows
+    var frontierSize = in.frontier.totalRows
     while (frontierSize > 0 && wave < cfg.maxWaves) {
+      // fail fast: after a failed tail no later manifest can land
+      pendingTail.value.foreach(_.get)
       frontierSize = runWave(wave, bloomState)
       wave += 1
     }
     awaitQuiesce()
     CrawlSummary(wave, seenT.rowCountThrough(wave), imagesT.rowCountThrough(wave))
+  } catch {
+    case NonFatal(e) =>
+      inFlight.foreach(Await.ready(_, Duration.Inf))
+      throw e
   }
 }
 

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -14,20 +15,24 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Iceberg-shaped table layer over Parquet (SURVEY.md §1.4): no
   * `iceberg-spark-runtime` jar exists in this sandbox, so tables are
-  * Parquet data files + JSON snapshot manifests with the Iceberg
-  * properties the north rule needs — atomic snapshot-per-wave commits,
-  * per-data-file (= per-partition) row-count lineage, time travel to
-  * any wave, and resume from the last committed snapshot. The API
-  * mirrors Iceberg's snapshot model so a real runtime can replace the
-  * I/O adapter on a cluster.
+  * Parquet data files + JSON manifests with the Iceberg properties the
+  * north rule needs — one atomic commit per wave, per-data-file (= per-
+  * partition) row-count lineage, time travel to any wave, and resume
+  * from the last committed wave. The API mirrors Iceberg's snapshot
+  * model so a real runtime can replace the I/O adapter on a cluster.
   *
-  * Layout per table:
-  *   <root>/<name>/data/wave=<k>/part-*.parquet
-  *   <root>/<name>/_meta/snapshot-<k>.json   (atomic rename commit)
+  * Layout of a crawl lake:
+  *   <root>/<table>/data/wave=<k>/part-*.parquet   (staged by commit;
+  *                                                  seen: wave_added=<k>)
+  *   <root>/_run/wave-<k>.json                     (THE commit point)
   *
-  * A LakeTable snapshot also records the Spark schema of its data files
-  * (as an Iceberg manifest does), so reads skip Parquet footer inference
-  * — a Spark job per read otherwise.
+  * A table commit only stages data files and returns their
+  * [[SnapshotMeta]]; wave k goes live when `_run/wave-<k>.json`, listing
+  * every table's snapshot k (files, row counts, Spark schema) and the
+  * run stats, lands by one atomic rename. Every read resolves through
+  * these manifests, so a wave torn by a crash is invisible by
+  * construction. The recorded schema also lets reads skip Parquet
+  * footer inference — a Spark job per read otherwise.
   */
 final case class DataFileMeta(path: String, rows: Long)
 
@@ -37,48 +42,83 @@ final case class SnapshotMeta(
     files: Seq[DataFileMeta],
     totalRows: Long,
     properties: Map[String, String] = Map.empty,
-    schema: Option[String] = None // StructType JSON; None in older manifests
+    schema: Option[String] = None // StructType JSON; wave tables always record one
 )
+
+/** The one JSON codec of a snapshot, shared by the wave manifests and
+  * the index manifests. */
+object SnapshotMeta {
+  def toJson(snap: SnapshotMeta): ObjectNode = {
+    val node = Lake.mapper.createObjectNode()
+    node.put("table", snap.table)
+    node.put("wave", snap.wave)
+    node.put("totalRows", snap.totalRows)
+    val arr = node.putArray("files")
+    snap.files.foreach { f =>
+      val fn = arr.addObject()
+      fn.put("path", f.path)
+      fn.put("rows", f.rows)
+    }
+    val props = node.putObject("properties")
+    snap.properties.foreach { case (k, v) => props.put(k, v) }
+    snap.schema.foreach(js => node.set[JsonNode]("schema", Lake.mapper.readTree(js)))
+    node
+  }
+
+  def fromJson(node: JsonNode): SnapshotMeta = {
+    val files = node.get("files").elements().asScala.map { f =>
+      DataFileMeta(f.get("path").asText(), f.get("rows").asLong())
+    }.toVector
+    val props = node.get("properties").properties().asScala
+      .map(e => e.getKey -> e.getValue.asText()).toMap
+    SnapshotMeta(node.get("table").asText(), node.get("wave").asInt(), files,
+      node.get("totalRows").asLong(), props, Option(node.get("schema")).map(_.toString))
+  }
+}
 
 object LakeTable {
   /** Per-data-file row counts from Parquet footers (metadata-only, no
-    * data scan) — the manifest's per-partition lineage. */
+    * data scan) — the manifest's per-partition lineage. Descends into
+    * directory-partitioned layouts (e.g. the IVF inverted lists'
+    * `cluster=<k>/` subdirectories). */
   def footerMetas(dir: Path): Vector[DataFileMeta] = {
     val conf = new Configuration()
-    val files = Lake.listPaths(dir).filter(_.getFileName.toString.endsWith(".parquet"))
+    val (subdirs, files) = Lake.listPaths(dir).partition(Files.isDirectory(_))
     // footer opens are independent tiny reads: do them in parallel (a
     // bucketed wave writes up to 2x buckets files; serial opens were a
     // measurable slice of the per-wave fixed cost)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val metas = files.map { p =>
+    val metas = files.filter(_.getFileName.toString.endsWith(".parquet")).map { p =>
       Future {
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(p.toString), conf))
         val rows = try reader.getRecordCount finally reader.close()
         DataFileMeta(p.toString, rows)
       }
     }
-    Await.result(Future.sequence(metas), Duration.Inf).sortBy(_.path)
-  }
-
-  /** Recursive variant for directory-partitioned layouts (e.g. the IVF
-    * inverted lists' `cluster=<k>/` subdirectories). */
-  def footerMetasRecursive(dir: Path): Vector[DataFileMeta] = {
-    val (subdirs, _) = Lake.listPaths(dir).partition(Files.isDirectory(_))
-    footerMetas(dir) ++ subdirs.flatMap(footerMetasRecursive)
+    Await.result(Future.sequence(metas), Duration.Inf).sortBy(_.path) ++
+      subdirs.flatMap(footerMetas)
   }
 }
 
 object Lake {
-  /** TEST HOOK (WaveStressSpec): artificial latency injected at the top
-    * of every table commit, widening the pipelined commit windows so
-    * the wave-overlap machinery is exercised under adversarial timing.
-    * Always 0 outside tests. */
-  @volatile private[graft] var testCommitDelayMs: Long = 0L
+  /** TEST HOOK: called with (table, wave) at the top of every table
+    * commit and with ("_run", wave) before a wave's manifest is
+    * written. WaveStressSpec sleeps in it to widen the pipelined commit
+    * windows; CrashPointSpec throws in it to crash a wave at each
+    * commit point. A no-op outside tests. */
+  @volatile private[graft] var testCommitHook: (String, Int) => Unit = (_, _) => ()
 
-  private[lake] def testDelay(): Unit =
-    if (testCommitDelayMs > 0) Thread.sleep(testCommitDelayMs)
+  private[lake] val mapper = new ObjectMapper()
+
+  /** Write `node` to `path` by one atomic rename: readers see the old
+    * file or the whole new one, never a partial write. */
+  private[lake] def writeAtomically(path: Path, node: JsonNode): Unit = {
+    val tmp = path.resolveSibling(s".tmp-${path.getFileName}")
+    Files.writeString(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node))
+    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
 
   /** List a directory's file names, CLOSING the stream (a bare
     * Files.list leaks one fd per call). */
@@ -97,80 +137,43 @@ object Lake {
     }
 }
 
-/** Shared snapshot-manifest machinery: JSON snapshot per wave with
-  * per-data-file row counts (lineage), atomic rename commit, time
-  * travel / cumulative row counts. */
-abstract class ManifestedTable(rootDir: String, val name: String) {
-  protected val tableDir: Path = Paths.get(rootDir, name)
-  protected val dataDir: Path = tableDir.resolve("data")
-  protected val metaDir: Path = tableDir.resolve("_meta")
-  Files.createDirectories(metaDir)
+/** A table of a crawl lake. Its snapshot k is its entry in the
+  * manifest of complete wave k ([[RunLog]]); a commit only stages data
+  * files and hands back their [[SnapshotMeta]] for that manifest. */
+abstract class WaveTable(rootDir: String, val name: String) {
+  protected val dataDir: Path = Paths.get(rootDir, name, "data")
+  private val runLog = new RunLog(rootDir)
 
-  protected val mapper = new ObjectMapper()
+  def snapshot(wave: Int): Option[SnapshotMeta] = runLog.tables(wave).find(_.table == name)
 
-  protected def snapshotPath(wave: Int): Path = metaDir.resolve(s"snapshot-$wave.json")
+  /** The snapshots of the complete waves 0..throughWave, in wave order. */
+  def snapshots(throughWave: Int): Seq[SnapshotMeta] =
+    runLog.completeWaves.filter(_ <= throughWave).flatMap(snapshot)
 
-  protected def writeSnapshot(snap: SnapshotMeta): Unit = {
-    val node = mapper.createObjectNode()
-    node.put("table", snap.table)
-    node.put("wave", snap.wave)
-    node.put("totalRows", snap.totalRows)
-    val arr = node.putArray("files")
-    snap.files.foreach { f =>
-      val fn = arr.addObject()
-      fn.put("path", f.path)
-      fn.put("rows", f.rows)
-    }
-    if (snap.properties.nonEmpty) {
-      val props = node.putObject("properties")
-      snap.properties.toSeq.sortBy(_._1).foreach { case (k, v) => props.put(k, v) }
-    }
-    snap.schema.foreach(js => node.set[JsonNode]("schema", mapper.readTree(js)))
-    val tmp = metaDir.resolve(s".tmp-snapshot-${snap.wave}.json")
-    Files.writeString(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node))
-    Files.move(tmp, snapshotPath(snap.wave), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  def snapshot(wave: Int): Option[SnapshotMeta] = {
-    val p = snapshotPath(wave)
-    if (!Files.exists(p)) None
-    else {
-      val node = mapper.readTree(Files.readString(p))
-      val files = node.get("files").elements().asScala.map { f =>
-        DataFileMeta(f.get("path").asText(), f.get("rows").asLong())
-      }.toVector
-      val props = Option(node.get("properties")).map { p =>
-        p.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-      }.getOrElse(Map.empty[String, String])
-      Some(SnapshotMeta(node.get("table").asText(), node.get("wave").asInt(), files,
-        node.get("totalRows").asLong(), props, Option(node.get("schema")).map(_.toString)))
-    }
-  }
-
-  def committedWaves: Seq[Int] =
-    Lake.listNames(metaDir)
-      .collect { case s if s.startsWith("snapshot-") && s.endsWith(".json") =>
-        s.stripPrefix("snapshot-").stripSuffix(".json").toInt
-      }.sorted
+  def committedWaves: Seq[Int] = snapshots(Int.MaxValue).map(_.wave)
 
   def latestWave: Option[Int] = committedWaves.lastOption
 
-  def rowCountThrough(throughWave: Int): Long =
-    committedWaves.filter(_ <= throughWave).flatMap(w => snapshot(w).map(_.totalRows)).sum
+  def rowCountThrough(throughWave: Int): Long = snapshots(throughWave).map(_.totalRows).sum
+
+  /** The meta of the data files just written to `dir` as snapshot `wave`. */
+  protected def staged(wave: Int, dir: Path, schema: StructType): SnapshotMeta = {
+    val files = LakeTable.footerMetas(dir)
+    SnapshotMeta(name, wave, files, files.map(_.rows).sum,
+      schema = Some(GraftSqlBridge.asNullable(schema).json))
+  }
 }
 
 class LakeTable(spark: SparkSession, rootDir: String, name: String)
-    extends ManifestedTable(rootDir, name) {
+    extends WaveTable(rootDir, name) {
 
-  /** Commit `df` as the data of snapshot `wave`. Idempotent: re-running
-    * a crashed wave overwrites its (uncommitted) data dir; the snapshot
-    * JSON lands last via atomic rename, so readers never observe a
-    * half-written wave. Per-file row counts come from Parquet footers
+  /** Stage `df` as the data of snapshot `wave`; it goes live with the
+    * wave's manifest. Idempotent: re-running a crashed wave overwrites
+    * its staged data dir. Per-file row counts come from Parquet footers
     * (metadata-only, no data scan). */
   def commit(wave: Int, df: DataFrame,
              writeOptions: Map[String, String] = Map.empty): SnapshotMeta = {
-    Lake.testDelay()
+    Lake.testCommitHook(name, wave)
     val waveDir = dataDir.resolve(s"wave=$wave")
     df.write.mode("overwrite").options(writeOptions).parquet(waveDir.toString)
     if (!Lake.listNames(waveDir).exists(_.endsWith(".parquet"))) {
@@ -178,38 +181,27 @@ class LakeTable(spark: SparkSession, rootDir: String, name: String)
       // schema) so time travel / readAll never hit a missing wave
       df.repartition(1).write.mode("overwrite").options(writeOptions).parquet(waveDir.toString)
     }
-    val files = LakeTable.footerMetas(waveDir)
-    val snap = SnapshotMeta(name, wave, files, files.map(_.rows).sum,
-      schema = Some(GraftSqlBridge.asNullable(df.schema).json))
-    writeSnapshot(snap)
-    snap
+    staged(wave, waveDir, df.schema)
   }
 
   /** Time travel: the rows of exactly snapshot `wave`. */
-  def readWave(wave: Int): DataFrame = {
-    val snap = snapshot(wave).getOrElse(
-      throw new IllegalStateException(s"$name: no snapshot for wave $wave"))
-    readSnapshots(Seq(snap))
-  }
+  def readWave(wave: Int): DataFrame =
+    read(Seq(snapshot(wave).getOrElse(
+      throw new IllegalStateException(s"$name: no snapshot for wave $wave"))))
 
   /** Cumulative read of snapshots 0..throughWave (append-only tables). */
-  def readThrough(throughWave: Int): DataFrame =
-    readSnapshots(committedWaves.filter(_ <= throughWave).flatMap(snapshot))
+  def readThrough(throughWave: Int): DataFrame = read(snapshots(throughWave))
 
   def readAll(): DataFrame = readThrough(Int.MaxValue)
 
-  /** Reads with the recorded schema when every snapshot agrees on one;
-    * manifests written before schemas were recorded fall back to
-    * footer inference. */
-  private def readSnapshots(snaps: Seq[SnapshotMeta]): DataFrame = {
+  /** The rows of exactly `snaps` — committed ones, or ones the caller
+    * staged itself — read with the newest one's recorded schema. */
+  def read(snaps: Seq[SnapshotMeta]): DataFrame = {
     val paths = snaps.flatMap(_.files).map(_.path)
     if (paths.isEmpty)
       throw new IllegalStateException(s"$name: empty file list (guard with rowCount first)")
-    snaps.map(_.schema).distinct match {
-      case Seq(Some(js)) =>
-        spark.read.schema(DataType.fromJson(js).asInstanceOf[StructType]).parquet(paths: _*)
-      case _ => spark.read.parquet(paths: _*)
-    }
+    spark.read.schema(DataType.fromJson(snaps.last.schema.get).asInstanceOf[StructType])
+      .parquet(paths: _*)
   }
 }
 
@@ -235,8 +227,22 @@ class LakeTable(spark: SparkSession, rootDir: String, name: String)
   * is still lazily scanning an index for an outdated corpus snapshot
   * — on a real cluster this retire step would go through the
   * catalog's compare-and-swap + snapshot expiry like other tables. */
-class IndexTable(rootDir: String, name: String)
-    extends ManifestedTable(rootDir, name) {
+class IndexTable(rootDir: String, val name: String) {
+  private val dataDir: Path = Paths.get(rootDir, name, "data")
+  private val metaDir: Path = Paths.get(rootDir, name, "_meta")
+  Files.createDirectories(metaDir)
+
+  private def snapshotPath(wave: Int): Path = metaDir.resolve(s"snapshot-$wave.json")
+
+  private def writeSnapshot(snap: SnapshotMeta): Unit =
+    Lake.writeAtomically(snapshotPath(snap.wave), SnapshotMeta.toJson(snap))
+
+  /** The committed manifest (an index only ever commits snapshot 0). */
+  def snapshot(wave: Int): Option[SnapshotMeta] = {
+    val p = snapshotPath(wave)
+    if (!Files.exists(p)) None
+    else Some(SnapshotMeta.fromJson(Lake.mapper.readTree(Files.readString(p))))
+  }
 
   private def keyHash(key: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -303,7 +309,7 @@ class IndexTable(rootDir: String, name: String)
     currentDirs(baseKey).flatMap { base =>
       val keyDir = writeKeyDir(keyHash(newKey), partitionCols, deltaDf)
       val dirs = base :+ keyDir
-      val files = dirs.toVector.flatMap(LakeTable.footerMetasRecursive)
+      val files = dirs.toVector.flatMap(LakeTable.footerMetas)
       writeSnapshot(SnapshotMeta(name, 0, files, files.map(_.rows).sum,
         Map("key" -> newKey,
           "dirs" -> dirs.map(_.getFileName.toString).mkString(",")) ++ extraProps))
@@ -318,7 +324,7 @@ class IndexTable(rootDir: String, name: String)
                           extraProps: Map[String, String]): Path = {
     val kh = keyHash(key)
     val keyDir = writeKeyDir(kh, partitionCols, df)
-    val files = LakeTable.footerMetasRecursive(keyDir)
+    val files = LakeTable.footerMetas(keyDir)
     writeSnapshot(SnapshotMeta(name, 0, files, files.map(_.rows).sum,
       Map("key" -> key, "dirs" -> s"key=$kh") ++ extraProps))
     cleanupRetired()
@@ -401,7 +407,7 @@ object IndexTable {
   }
 }
 
-/** A manifested table whose data files are ALSO a Spark catalog table,
+/** A wave table whose data files are ALSO a Spark catalog table,
   * hash-bucketed on `bucketCols` and directory-partitioned on an int
   * `wave_added` column — the storage layout that makes the per-wave
   * anti-join against the cumulative URL-seen set shuffle-free on the
@@ -425,7 +431,7 @@ class BucketedLakeTable(
     columnsDdl: String,           // data columns, e.g. "kind STRING, url STRING, ..."
     val bucketCols: Seq[String],
     val buckets: Int
-) extends ManifestedTable(rootDir, name) {
+) extends WaveTable(rootDir, name) {
   import org.apache.spark.sql.functions.col
 
   /** Unique per lakeRoot so many engines can share one session. */
@@ -456,16 +462,10 @@ class BucketedLakeTable(
     registered = true
   }
 
-  /** Create the (empty) table and commit snapshot 0. */
-  def init(): Unit = {
-    ensureRegistered()
-    writeSnapshot(SnapshotMeta(name, 0, Vector.empty, 0L))
-  }
-
-  /** Commit `df` (data columns + wave_added) as snapshot `wave`.
+  /** Stage `df` (data columns + wave_added) as snapshot `wave`.
     * Idempotent: drops any torn partition for `wave` first. */
   def commit(wave: Int, df: DataFrame): SnapshotMeta = {
-    Lake.testDelay()
+    Lake.testCommitHook(name, wave)
     ensureRegistered()
     val partDir = dataDir.resolve(s"wave_added=$wave")
     // torn-wave cleanup only when a previous attempt left data — the
@@ -476,15 +476,19 @@ class BucketedLakeTable(
       Files.deleteIfExists(partDir)
     }
     df.write.mode("append").insertInto(tableName)
-    val snap = SnapshotMeta(name, wave, LakeTable.footerMetas(partDir), 0L)
-    val full = snap.copy(totalRows = snap.files.map(_.rows).sum)
-    writeSnapshot(full)
-    full
+    staged(wave, partDir, df.schema)
   }
 
-  /** Cumulative catalog-table read through `wave` — partition-pruned,
+  /** Cumulative catalog-table read through `wave`, capped at this
+    * table's latest committed wave — partition-pruned,
     * bucket-partitioned (join-ready without a shuffle on this side). */
-  def readThrough(throughWave: Int): DataFrame = {
+  def readThrough(throughWave: Int): DataFrame =
+    readStaged(math.min(throughWave, latestWave.getOrElse(-1)))
+
+  /** [[readThrough]] without the cap, for the writer only: every wave
+    * through `throughWave` must be complete or staged by its own
+    * commit, whose manifest has not landed yet. */
+  def readStaged(throughWave: Int): DataFrame = {
     ensureRegistered()
     spark.table(tableName).filter(col("wave_added") <= throughWave)
   }
@@ -492,34 +496,43 @@ class BucketedLakeTable(
   def readAll(): DataFrame = readThrough(Int.MaxValue)
 }
 
-/** Run-level commit log: wave k is COMPLETE iff `_run/wave-<k>.json`
-  * exists; it is written only after every table's snapshot k landed.
-  * Resume scans for the max complete wave and restarts the loop there.
+/** Run-level commit log, and the one commit point of a crawl lake:
+  * wave k is COMPLETE iff `_run/wave-<k>.json` exists. That manifest
+  * lists every table's snapshot k plus the wave's stats and lands by
+  * one atomic rename after the tables staged their data. Resume scans
+  * for the max complete wave and restarts the loop there.
   */
 class RunLog(rootDir: String) {
   private val runDir = Paths.get(rootDir, "_run")
   Files.createDirectories(runDir)
-  private val mapper = new ObjectMapper()
 
-  def markComplete(wave: Int, stats: Map[String, Long]): Unit = {
-    val node = mapper.createObjectNode()
+  private def manifestPath(wave: Int): Path = runDir.resolve(s"wave-$wave.json")
+
+  /** Make wave `wave` complete: publish its staged table snapshots. */
+  def commit(wave: Int, tables: Seq[SnapshotMeta], stats: Map[String, Long]): Unit = {
+    Lake.testCommitHook("_run", wave)
+    val node = Lake.mapper.createObjectNode()
     node.put("wave", wave)
     val s = node.putObject("stats")
     stats.foreach { case (k, v) => s.put(k, v) }
-    val tmp = runDir.resolve(s".tmp-wave-$wave.json")
-    Files.writeString(tmp, mapper.writeValueAsString(node))
-    Files.move(tmp, runDir.resolve(s"wave-$wave.json"), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    val arr = node.putArray("tables")
+    tables.foreach(t => arr.add(SnapshotMeta.toJson(t)))
+    Lake.writeAtomically(manifestPath(wave), node)
   }
 
-  def stats(wave: Int): Map[String, Long] = {
-    val p = runDir.resolve(s"wave-$wave.json")
-    if (!Files.exists(p)) Map.empty
-    else {
-      val node = mapper.readTree(Files.readString(p)).get("stats")
-      node.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-    }
+  private def manifest(wave: Int): Option[JsonNode] = {
+    val p = manifestPath(wave)
+    if (!Files.exists(p)) None else Some(Lake.mapper.readTree(Files.readString(p)))
   }
+
+  def stats(wave: Int): Map[String, Long] =
+    manifest(wave).map(_.get("stats").properties().asScala
+      .map(e => e.getKey -> e.getValue.asLong()).toMap).getOrElse(Map.empty)
+
+  /** The table snapshots complete wave `wave` published (empty if none). */
+  def tables(wave: Int): Seq[SnapshotMeta] =
+    manifest(wave).map(_.get("tables").elements().asScala.map(SnapshotMeta.fromJson).toVector)
+      .getOrElse(Vector.empty)
 
   def completeWaves: Seq[Int] =
     Lake.listNames(runDir)

@@ -1,0 +1,60 @@
+package graft.crawl
+
+import graft.SparkTestBase
+import graft.core.{Finding, RefSim, SynthWeb}
+import graft.lake.{Lake, RunLog}
+
+/** Crash-point matrix: wave 2 fails at each of its commit points —
+  * every table commit and the manifest write — through the test commit
+  * hook. `run()` must throw before wave 2 is complete, and a fresh
+  * Crawler must resume to the state of an uninterrupted run, which
+  * equals RefSim's.
+  */
+class CrashPointSpec extends SparkTestBase {
+  import spark.implicits._
+
+  // robots on, so the robots_cache commit is a crash point too: h1's
+  // only rule blocks /img/ fetches and no host reaches its visit limit,
+  // so the seen set is still RefSim's
+  private val web = SynthWeb.WebConfig(nHosts = 2, pagesPerHost = 12, imagesPerHost = 4,
+    linksPerPage = 2, imagesPerPage = 1)
+  private val seeds = SynthWeb.seeds(1)
+  private lazy val sim = RefSim.run(seeds, web)
+
+  private def cfg(lake: String) = CrawlConfig(web = web, seeds = seeds, lakeRoot = lake,
+    robots = true, fetchPartitions = 4, saltSlots = 2, seenBuckets = 4)
+
+  private def engineSeen(c: Crawler): Set[Finding] =
+    c.seenT.readAll().select($"kind", $"url", $"depth").as[(String, String, Int)]
+      .collect().map(t => Finding(t._1, t._2, t._3)).toSet
+
+  private lazy val uninterrupted = {
+    val c = new Crawler(spark, cfg(tmpDir("crash_clean")))
+    val summary = c.run()
+    assert(engineSeen(c) == sim.seen)
+    summary
+  }
+
+  Seq("frontier", "host_budget", "images", "seen", "metrics", "robots_cache", "_run").foreach { point =>
+    test(s"a crash at wave 2's $point commit resumes to the uninterrupted state") {
+      assert(uninterrupted.waves > 5, s"corpus too shallow: ${uninterrupted.waves} waves")
+      val lake = tmpDir(s"crash_$point")
+      Lake.testCommitHook = (table, wave) =>
+        if (table == point && wave == 2) throw new IllegalStateException(s"crash at $table $wave")
+      val err =
+        try intercept[IllegalStateException](new Crawler(spark, cfg(lake)).run())
+        finally Lake.testCommitHook = (_, _) => ()
+      assert(err.getMessage == s"crash at $point 2")
+      val complete = new RunLog(lake).completeWaves
+      assert(complete.size <= 2, s"wave 2 completed despite the crash: $complete")
+      // fail fast: the loop stops at a wave boundary once a commit failed,
+      // so no wave past 3 ran (its frontier would be staged as wave 4)
+      val staged = new java.io.File(lake, "frontier/data").list().map(_.stripPrefix("wave=").toInt)
+      assert(staged.max <= 4, s"waves kept running after the crash: ${staged.sorted.toSeq}")
+
+      val c = new Crawler(spark, cfg(lake))
+      assert(c.run() == uninterrupted)
+      assert(engineSeen(c) == sim.seen)
+    }
+  }
+}

@@ -3,12 +3,13 @@ package graft.crawl
 import graft.SparkTestBase
 import graft.core.{Finding, RefSim, SynthWeb}
 import graft.lake.{Lake, RunLog}
+import scala.jdk.CollectionConverters._
 
 /** Stress for the wave-commit pipelining (VERDICT r2 next #9): the
   * chained pendingTail/seenReady futures let wave k+1's admission +
   * fetch overlap wave k's seen/bloom/metrics commit tail. Correct today
   * but subtle — this spec drives 29 TINY waves with every table commit
-  * artificially slowed (Lake.testCommitDelayMs), so the overlap windows
+  * artificially slowed (Lake.testCommitHook), so the overlap windows
   * are wide and any ordering bug (mark-before-commit, torn snapshot
   * visible to the next wave's anti-join, metrics racing cache release)
   * surfaces deterministically. Asserts: run-log marks are complete,
@@ -35,10 +36,10 @@ class WaveStressSpec extends SparkTestBase {
   test("29 slow-commit waves: ordered run log, conformance, no-op resume") {
     assert(sim.frontiers.length >= 20, s"corpus regressed: ${sim.frontiers.length} waves")
     val lake = tmpDir("stress_lake")
-    Lake.testCommitDelayMs = 120L
+    Lake.testCommitHook = (_, _) => Thread.sleep(120L)
     val summary =
       try new Crawler(spark, cfg(lake)).run()
-      finally Lake.testCommitDelayMs = 0L
+      finally Lake.testCommitHook = (_, _) => ()
 
     assert(summary.waves == sim.frontiers.length)
     val log = new RunLog(lake)
@@ -58,6 +59,10 @@ class WaveStressSpec extends SparkTestBase {
       assert(c.metricsT.snapshot(w).isDefined, s"wave $w marked but metrics snapshot missing")
     }
     assert(engineSeen(c) == sim.seen)
+    // one commit point: the wave manifests are the lake's only JSON
+    val json = scala.util.Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get(lake)))(
+      _.iterator().asScala.map(_.toString).filter(_.endsWith(".json")).toVector.sorted)
+    assert(json == waves.map(w => java.nio.file.Paths.get(lake, "_run", s"wave-$w.json").toString).sorted)
 
     // resume on the completed lake: a no-op that reports the same summary
     val again = new Crawler(spark, cfg(lake)).run()
@@ -66,7 +71,7 @@ class WaveStressSpec extends SparkTestBase {
 
   test("resume from a torn tail under slow commits converges to the same state") {
     val lake = tmpDir("stress_torn")
-    Lake.testCommitDelayMs = 80L
+    Lake.testCommitHook = (_, _) => Thread.sleep(80L)
     try {
       val full = new Crawler(spark, cfg(lake)).run()
       // simulate a crash AFTER the tables of the last 3 waves landed but
@@ -80,6 +85,6 @@ class WaveStressSpec extends SparkTestBase {
       assert(resumed == full, s"torn-tail resume diverged: $resumed vs $full")
       val c = new Crawler(spark, cfg(lake))
       assert(engineSeen(c) == sim.seen)
-    } finally Lake.testCommitDelayMs = 0L
+    } finally Lake.testCommitHook = (_, _) => ()
   }
 }

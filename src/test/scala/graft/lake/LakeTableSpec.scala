@@ -1,19 +1,16 @@
 package graft.lake
 
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.GraftTestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row}
 
 import graft.SparkTestBase
 
-/** LakeTable snapshots record their data files' schema, so reads skip
-  * Parquet footer inference (a Spark job per read); manifests written
-  * before schemas were recorded still read, by inference. */
+/** Table commits stage data; a wave's manifest (RunLog) makes them
+  * visible. Snapshots record their data files' schema, so reads skip
+  * Parquet footer inference (a Spark job per read). */
 class LakeTableSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -26,6 +23,15 @@ class LakeTableSpec extends SparkTestBase {
 
   private def sorted(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.getString(0))
+
+  /** A lake at `root` whose table `t` holds `sample` in waves 1 and 2,
+    * each committed with its wave's manifest. */
+  private def twoWaves(root: String): LakeTable = {
+    val t = new LakeTable(spark, root, "t")
+    val log = new RunLog(root)
+    Seq(1, 2).foreach(w => log.commit(w, Seq(t.commit(w, sample)), Map.empty))
+    t
+  }
 
   /** Spark jobs started while `f` runs, counted by a listener. */
   private def jobsDuring(f: => Unit): Int = {
@@ -41,9 +47,7 @@ class LakeTableSpec extends SparkTestBase {
   }
 
   test("a snapshot round trip gives equal rows and types") {
-    val t = new LakeTable(spark, tmpDir("lake_rt"), "t")
-    t.commit(1, sample)
-    t.commit(2, sample)
+    val t = twoWaves(tmpDir("lake_rt"))
     assert(t.snapshot(1).get.schema.isDefined)
     val back = t.readWave(1)
     val inferred = spark.read.parquet(t.snapshot(1).get.files.map(_.path): _*)
@@ -54,9 +58,7 @@ class LakeTableSpec extends SparkTestBase {
   }
 
   test("readWave and readThrough start no Spark job") {
-    val t = new LakeTable(spark, tmpDir("lake_nojob"), "t")
-    t.commit(1, sample)
-    t.commit(2, sample)
+    val t = twoWaves(tmpDir("lake_nojob"))
     val jobs = jobsDuring {
       t.readWave(1).schema
       t.readThrough(2).schema
@@ -64,21 +66,25 @@ class LakeTableSpec extends SparkTestBase {
     assert(jobs == 0, s"$jobs job(s) started by a read")
   }
 
-  test("a manifest without a recorded schema still reads, by inference") {
-    val root = tmpDir("lake_legacy")
-    val t = new LakeTable(spark, root, "t")
-    t.commit(1, sample)
-    val manifest = Paths.get(root, "t", "_meta", "snapshot-1.json")
-    val mapper = new ObjectMapper()
-    val node = mapper.readTree(Files.readString(manifest)).asInstanceOf[ObjectNode]
-    node.remove("schema")
-    Files.writeString(manifest, mapper.writeValueAsString(node))
-    assert(t.snapshot(1).get.schema.isEmpty)
-    var back: DataFrame = null
-    // the inference job this spec's listener must see, or the no-job
-    // case above proves nothing
-    assert(jobsDuring { back = t.readWave(1) } >= 1)
-    assert(back.schema == GraftSqlBridge.asNullable(sample.schema))
-    assert(sorted(back) == sorted(sample))
+  test("data committed without its wave's manifest is invisible") {
+    val root = tmpDir("lake_staged")
+    val t = twoWaves(root)
+    val seen = new BucketedLakeTable(spark, root, "s", "k STRING", Seq("k"), 2)
+    val log = new RunLog(root)
+    log.commit(3, Seq(seen.commit(3, Seq(("a", 3)).toDF("k", "wave_added"))), Map.empty)
+    // wave 4 stages both tables but crashes before its manifest
+    val staged = t.commit(4, sample)
+    seen.commit(4, Seq(("b", 4)).toDF("k", "wave_added"))
+    assert(log.completeWaves == Seq(1, 2, 3))
+    assert(t.committedWaves == Seq(1, 2) && seen.committedWaves == Seq(3))
+    assert(t.snapshot(4).isEmpty && t.latestWave.contains(2))
+    assert(intercept[IllegalStateException](t.readWave(4)).getMessage.contains("no snapshot"))
+    assert(t.rowCountThrough(4) == 4 && t.readThrough(4).count() == 4)
+    assert(seen.rowCountThrough(4) == 1 && seen.readThrough(4).count() == 1)
+    // the writer reads its own staged wave; the manifest publishes it
+    assert(t.read(Seq(staged)).count() == 2 && seen.readStaged(4).count() == 2)
+    log.commit(4, Seq(staged), Map.empty)
+    assert(t.committedWaves == Seq(1, 2, 4) && t.readThrough(4).count() == 6)
+    assert(seen.committedWaves == Seq(3) && seen.readThrough(4).count() == 1)
   }
 }
