@@ -5,7 +5,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -64,11 +64,11 @@ final case class Fetched(
 )
 
 /** The snapshots wave k reads: its frontier and budget, the robots
-  * cache through k, and the seen row count through k. A wave hands its
-  * successor the ones it staged; the first wave and a resumed one read
-  * them from manifest k. */
+  * cache through k, and seen through k once the previous wave's seen
+  * append and bloom merge are done. A wave hands its successor the ones
+  * it staged; the first wave and a resumed one read them from manifest k. */
 private final case class WaveInputs(wave: Int, frontier: SnapshotMeta, budget: SnapshotMeta,
-    robots: Seq[SnapshotMeta], seenRows: Long)
+    robots: Seq[SnapshotMeta], seenReady: Future[Seq[SnapshotMeta]])
 
 /** The Spark-native wave engine. Each crawl wave is one typed Dataset
   * transform (SURVEY.md §3.2):
@@ -78,7 +78,7 @@ private final case class WaveInputs(wave: Int, frontier: SnapshotMeta, budget: S
   *   fetched --> images_{k+1}, budget_{k+1}
   *   fetched --explode--> children --one (kind,url,depth) exchange + agg-->
   *   candidates --bloom prefilter + left-anti(bucketed seen)--> novel
-  *   novel --depth gate--> frontier_{k+1};  seen += novel (atomic commit)
+  *   novel --depth gate--> frontier_{k+1};  seen += novel (bucketed append)
   *
   * All coordination state the reference keeps in driver HashMaps
   * (archive, host_visits — src/main.rs:51-52) lives in lake tables, so
@@ -173,7 +173,7 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
       if (!cfg.robots) Nil
       else Seq(robotsT.commit(0, Seq.empty[(String, Seq[String])].toDF("host", "disallow")))
     runLog.commit(0, frontier +: budget +: robots, Map("frontier" -> frontier.totalRows))
-    inputs = Some(WaveInputs(0, frontier, budget, robots, 0L))
+    inputs = Some(WaveInputs(0, frontier, budget, robots, Future.successful(Nil)))
     frontier.totalRows
   }
 
@@ -234,14 +234,13 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     // host-hash so a hot host spreads over saltSlots slots. Every later
     // reader of the wave's fetch — budget merge, images commit, the
     // candidate explode and the metrics — reads this one cache.
-    val fetched = admitted
+    val fetched = persist(admitted
       .repartition(cfg.fetchPartitions, saltedKey)
-      .mapPartitions(_.map(Crawler.fetch(_, webCfg)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .mapPartitions(_.map(Crawler.fetch(_, webCfg))))
     // PIPELINE with the previous wave: admission + fetch depend only on
     // THIS wave's frontier and budget, not on the previous wave's seen
     // append / bloom merge, which may still be committing. Warm the
-    // cache now; only the anti-join below awaits `seenReady`. This
+    // cache now; only the anti-join below awaits `in.seenReady`. This
     // overlaps the longest stage of wave k+1 with the commit tail of
     // wave k — at high core counts that tail is the non-scaling cost.
     val admittedCount = fetched.count()
@@ -271,7 +270,7 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
           $"phash", $"basename"),
         writeOptions = Map("compression" -> "uncompressed"))
     })
-    Await.result(seenReady, Duration.Inf)
+    val seenSnaps = Await.result(in.seenReady, Duration.Inf)
 
     // --- U1: children across all pages; M4 per-page dedup already done
     // in processPage's Set. gate_depth = depth of the first parent in
@@ -288,15 +287,14 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     // stage — bloom probe, anti-join against the bucketed seen scan,
     // and the bucketed seen WRITE — reuses it: each write task holds
     // exactly one bucket (no small-file explosion).
-    val cands = children
+    val cands = persist(children
       .repartition(cfg.seenBuckets, $"kind", $"url", $"depth")
       .groupBy($"kind", $"url", $"depth")
       .agg(
         min_by($"pdepth", struct($"phost", $"purl")).as("gate_depth"),
         count(lit(1)).as("refs"))
       .withColumn("url_hash", xxhash64($"kind", $"url", $"depth"))
-      .withColumn("bucket", bloomState.bucketCol($"kind", $"url", $"depth"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // both bloom branches read it
+      .withColumn("bucket", bloomState.bucketCol($"kind", $"url", $"depth"))) // both bloom branches read it
 
     // --- J1 (+A4): novelty = candidates minus seen. The partitioned
     // Bloom pre-filter routes definitely-new rows around the anti-join
@@ -304,7 +302,7 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     // maybe-seen rows probe the exact bucketed seen table, which is
     // scanned storage-partitioned — never shuffled. Seen wave k may be
     // only staged (its manifest lands after the previous wave's tail).
-    val seen = seenT.readStaged(wave).select($"kind", $"url", $"depth")
+    val seen = seenT.read(seenSnaps).select($"kind", $"url", $"depth")
     val novel0 =
       if (cfg.bloom && !bloomState.isEmpty) {
         val probe = bloomState.probeCol(spark, $"bucket", $"url_hash")
@@ -312,13 +310,13 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
         val checked = cands.filter(probe)
           .join(seen, Seq("kind", "url", "depth"), "left_anti")
         definitelyNew.unionByName(checked)
-      } else if (wave == 0) cands // seen is empty before the first commit
+      } else if (seenSnaps.isEmpty) cands // nothing is seen before the first commit
       else cands.join(seen, Seq("kind", "url", "depth"), "left_anti")
-    val novel = novel0.persist(StorageLevel.MEMORY_AND_DISK)
+    // before the first seen commit novel IS the candidates' cache
+    val novel = if (novel0 eq cands) cands else persist(novel0)
     // novel's metrics counters are summed by the job that materializes
-    // its cache: the seen commit below refreshes every cached plan that
-    // reads the seen table, novel included, so a reader after it (the
-    // metrics job, always) would recompute the whole anti-join
+    // its cache: one job, where a later metrics read of novel would be a
+    // second one
     val novelByBucket = novel
       .groupBy(hostBucket(hostCol($"url")).as("host_bucket"))
       .agg(count(lit(1)).as("novel"), sum($"refs" - 1).as("dup_dropped"))
@@ -328,11 +326,10 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
 
     // novel is cached: the bloom merge and the frontier commit are
     // independent reads of it — run them concurrently. The seen append
-    // starts only after both: its insert refreshes every cached plan
-    // that reads the seen table, novel included, and a refresh landing
-    // while a task still reads novel's old cache fails that task
-    // ("Block rdd_N does not exist").
-    val seenRows = in.seenRows + novelCount
+    // starts after both: only the next wave's anti-join, after its
+    // fetch, needs it, while the next wave's admission waits for the
+    // frontier commit (started alongside, it lengthened every wave)
+    val seenRows = seenSnaps.map(_.totalRows).sum + novelCount
     val rebuild = cfg.bloom && novelCount > 0 && bloomState.wouldSaturate(novelCount)
     val fMerge =
       if (!cfg.bloom || novelCount == 0 || rebuild) Future.unit
@@ -344,14 +341,13 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
       .coalesce(nFiles(novelCount)))
     // --- commit seen += novel (ALL novel rows are archived, even those
     // the depth gate keeps out of the queue — src/main.rs:130-134).
-    // The insert inherits the candidates' bucket-aligned partitioning.
+    // The write inherits the candidates' bucket-aligned partitioning.
     val fSeen = track(fMerge.map { _ =>
-      seenT.commit(wave + 1, novel
-        .select($"kind", $"url", $"depth", $"url_hash", lit(wave + 1).as("wave_added")))
+      seenT.commit(wave + 1, novel.select($"kind", $"url", $"depth", $"url_hash"))
     })
     val fBloom =
       if (!rebuild) fMerge
-      else track(fSeen.map { _ =>
+      else track(fSeen.map { seenSnap =>
         // capacity crossing: grow and REBUILD from the full seen set
         // (one distributed aggregation, same shape as the per-wave
         // merge) — runs after this wave's seen append is staged so the
@@ -359,16 +355,15 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
         // saturate at the 10^10 design point and the pre-filter
         // silently degrades to all-pass.
         bloomState.growTo(seenRows)
-        bloomState.add(seenT.readStaged(wave + 1),
+        bloomState.add(seenT.read(seenSnaps :+ seenSnap),
           bloomState.bucketCol($"kind", $"url", $"depth"), $"url_hash", seenRows)
       })
     // the seen append + bloom merge escape this wave: the NEXT wave's
-    // anti-join awaits them (seenReady) right before it needs them,
-    // so its admission + fetch overlap this commit tail
-    seenReady = for { _ <- fSeen; _ <- fBloom } yield ()
+    // anti-join awaits them (its seenReady) right before it needs them
+    val seenReady = for { seenSnap <- fSeen; _ <- fBloom } yield seenSnaps :+ seenSnap
     val imagesSnap = Await.result(imagesChain, Duration.Inf)
     val budgetSnap = Await.result(budgetChain, Duration.Inf)
-    inputs = Some(WaveInputs(wave + 1, frontierSnap, budgetSnap, in.robots ++ robotsSnap, seenRows))
+    inputs = Some(WaveInputs(wave + 1, frontierSnap, budgetSnap, in.robots ++ robotsSnap, seenReady))
 
     // --- per-wave, per-host-bucket metrics (lineage beyond the
     // manifests' per-file row counts): ONE job — a union of one wide
@@ -412,7 +407,7 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
       // kept wave k's candidate cache alive into wave k+1's fetch and
       // heap-OOM'd the 10k-host scale probe at wave 4 (metrics reads
       // fetched and novel's collected sums, never cands or novel).
-      cands.unpersist(false)
+      release(cands)
       val metricsSnap = metricsT.commit(wave + 1, metrics.repartition(1))
       runLog.commit(wave + 1,
         Seq(frontierSnap, budgetSnap, imagesSnap, seenSnap, metricsSnap) ++ robotsSnap, Map(
@@ -425,17 +420,13 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
         // far the pre-filter is from its next adaptive rebuild
         "bloom_capacity" -> (if (cfg.bloom) bloomState.capacity else 0L),
         "bloom_items" -> (if (cfg.bloom) bloomState.itemsAdded else 0L)))
-      fetched.unpersist(false); novel.unpersist(false)
+      release(fetched, novel)
     })
     frontierSnap.totalRows
   }
 
   // async tail of metrics commits + manifests, chained to stay ordered
   @transient private var pendingTail: Future[Unit] = Future.unit
-  // the current wave's escaped seen-append + bloom-merge: the next
-  // wave's anti-join joins this right before it needs them, letting its
-  // admission + fetch overlap this wave's commit tail
-  @transient private var seenReady: Future[Unit] = Future.unit
 
   // the inputs the last runWave staged for the next one
   @transient private var inputs: Option[WaveInputs] = None
@@ -443,14 +434,28 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
   // before it rethrows a failure, so none still writes to the lake
   @transient private var inFlight: List[Future[Any]] = Nil
 
+  // the Datasets waves persisted and their tails have not released:
+  // a failed run() releases them, leaving no cache behind
+  @transient private var cached: List[Dataset[_]] = Nil
+
   private def track[T](f: Future[T]): Future[T] = {
     inFlight = f :: inFlight.filterNot(_.isCompleted)
     f
   }
 
+  private def persist[T](ds: Dataset[T]): Dataset[T] = synchronized {
+    cached = ds :: cached
+    ds.persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  private def release(dss: Dataset[_]*): Unit = synchronized {
+    dss.foreach(_.unpersist(false))
+    cached = cached.filterNot(c => dss.exists(_ eq c))
+  }
+
   private def inputsOf(wave: Int): WaveInputs = inputs.filter(_.wave == wave).getOrElse {
     val in = WaveInputs(wave, frontierT.snapshot(wave).get, budgetT.snapshot(wave).get,
-      if (cfg.robots) robotsT.snapshots(wave) else Nil, seenT.rowCountThrough(wave))
+      if (cfg.robots) robotsT.snapshots(wave) else Nil, Future.successful(seenT.snapshots(wave)))
     inputs = Some(in)
     in
   }
@@ -500,10 +505,12 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     // a resumed run rebuilds the bloom from the complete waves. Skip it
     // when the frontier is empty - a finished crawl's re-run must be a
     // no-op, not a full-seen-table aggregation
-    if (cfg.bloom && in.frontier.totalRows > 0 && in.seenRows > 0) {
-      if (bloomState.wouldSaturate(in.seenRows)) bloomState.growTo(in.seenRows)
-      bloomState.add(seenT.readThrough(wave),
-        bloomState.bucketCol($"kind", $"url", $"depth"), $"url_hash", in.seenRows)
+    val seenSnaps = Await.result(in.seenReady, Duration.Inf)
+    val seenRows = seenSnaps.map(_.totalRows).sum
+    if (cfg.bloom && in.frontier.totalRows > 0 && seenRows > 0) {
+      if (bloomState.wouldSaturate(seenRows)) bloomState.growTo(seenRows)
+      bloomState.add(seenT.read(seenSnaps),
+        bloomState.bucketCol($"kind", $"url", $"depth"), $"url_hash", seenRows)
     }
     var frontierSize = in.frontier.totalRows
     while (frontierSize > 0 && wave < cfg.maxWaves) {
@@ -517,6 +524,7 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
   } catch {
     case NonFatal(e) =>
       inFlight.foreach(Await.ready(_, Duration.Inf))
+      release(cached: _*)
       throw e
   }
 }

@@ -7,10 +7,16 @@ import scala.util.Using
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata,
+  HadoopFsRelation, InsertIntoHadoopFsRelationCommand, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Iceberg-shaped table layer over Parquet (SURVEY.md §1.4): no
@@ -23,18 +29,17 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * Layout of a crawl lake:
   *   <root>/<table>/data/wave=<k>/part-*.parquet   (staged by commit;
-  *                                                  seen: wave_added=<k>)
+  *                                                  seen: one file a bucket)
   *   <root>/_run/wave-<k>.json                     (THE commit point)
   *
   * A table commit only stages data files and returns their
   * [[SnapshotMeta]]; wave k goes live when `_run/wave-<k>.json`, listing
-  * every table's snapshot k (files, row counts, Spark schema) and the
-  * run stats, lands by one atomic rename. Every read resolves through
-  * these manifests, so a wave torn by a crash is invisible by
-  * construction. The recorded schema also lets reads skip Parquet
-  * footer inference — a Spark job per read otherwise.
+  * every table's snapshot k (files, row and byte counts, Spark schema)
+  * and the run stats, lands by one atomic rename. Every read resolves
+  * through these manifests, so a wave torn by a crash is invisible by
+  * construction, and skips directory listing and footer inference.
   */
-final case class DataFileMeta(path: String, rows: Long)
+final case class DataFileMeta(path: String, rows: Long, bytes: Long)
 
 final case class SnapshotMeta(
     table: String,
@@ -58,6 +63,7 @@ object SnapshotMeta {
       val fn = arr.addObject()
       fn.put("path", f.path)
       fn.put("rows", f.rows)
+      fn.put("bytes", f.bytes)
     }
     val props = node.putObject("properties")
     snap.properties.foreach { case (k, v) => props.put(k, v) }
@@ -67,7 +73,9 @@ object SnapshotMeta {
 
   def fromJson(node: JsonNode): SnapshotMeta = {
     val files = node.get("files").elements().asScala.map { f =>
-      DataFileMeta(f.get("path").asText(), f.get("rows").asLong())
+      // index manifests written before byte sizes were recorded read as 0
+      DataFileMeta(f.get("path").asText(), f.get("rows").asLong(),
+        Option(f.get("bytes")).fold(0L)(_.asLong()))
     }.toVector
     val props = node.get("properties").properties().asScala
       .map(e => e.getKey -> e.getValue.asText()).toMap
@@ -94,7 +102,7 @@ object LakeTable {
       Future {
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(p.toString), conf))
         val rows = try reader.getRecordCount finally reader.close()
-        DataFileMeta(p.toString, rows)
+        DataFileMeta(p.toString, rows, Files.size(p))
       }
     }
     Await.result(Future.sequence(metas), Duration.Inf).sortBy(_.path) ++
@@ -126,6 +134,9 @@ object Lake {
     if (!Files.exists(dir)) Vector.empty
     else Using.resource(Files.list(dir))(_.iterator().asScala.map(_.getFileName.toString).toVector)
 
+  /** The Hadoop path of a local file or directory. */
+  private[lake] def hadoopPath(p: Path): HPath = new HPath("file://" + p.toAbsolutePath.normalize)
+
   private[lake] def listPaths(dir: Path): Vector[Path] =
     if (!Files.exists(dir)) Vector.empty
     else Using.resource(Files.list(dir))(_.iterator().asScala.toVector)
@@ -140,9 +151,13 @@ object Lake {
 /** A table of a crawl lake. Its snapshot k is its entry in the
   * manifest of complete wave k ([[RunLog]]); a commit only stages data
   * files and hands back their [[SnapshotMeta]] for that manifest. */
-abstract class WaveTable(rootDir: String, val name: String) {
+abstract class WaveTable(spark: SparkSession, rootDir: String, val name: String) {
   protected val dataDir: Path = Paths.get(rootDir, name, "data")
   private val runLog = new RunLog(rootDir)
+
+  /** The schema of a read of no snapshot at all (None: such a read fails). */
+  protected def emptySchema: Option[StructType] = None
+  protected def bucketSpec: Option[BucketSpec] = None
 
   def snapshot(wave: Int): Option[SnapshotMeta] = runLog.tables(wave).find(_.table == name)
 
@@ -156,34 +171,6 @@ abstract class WaveTable(rootDir: String, val name: String) {
 
   def rowCountThrough(throughWave: Int): Long = snapshots(throughWave).map(_.totalRows).sum
 
-  /** The meta of the data files just written to `dir` as snapshot `wave`. */
-  protected def staged(wave: Int, dir: Path, schema: StructType): SnapshotMeta = {
-    val files = LakeTable.footerMetas(dir)
-    SnapshotMeta(name, wave, files, files.map(_.rows).sum,
-      schema = Some(GraftSqlBridge.asNullable(schema).json))
-  }
-}
-
-class LakeTable(spark: SparkSession, rootDir: String, name: String)
-    extends WaveTable(rootDir, name) {
-
-  /** Stage `df` as the data of snapshot `wave`; it goes live with the
-    * wave's manifest. Idempotent: re-running a crashed wave overwrites
-    * its staged data dir. Per-file row counts come from Parquet footers
-    * (metadata-only, no data scan). */
-  def commit(wave: Int, df: DataFrame,
-             writeOptions: Map[String, String] = Map.empty): SnapshotMeta = {
-    Lake.testCommitHook(name, wave)
-    val waveDir = dataDir.resolve(s"wave=$wave")
-    df.write.mode("overwrite").options(writeOptions).parquet(waveDir.toString)
-    if (!Lake.listNames(waveDir).exists(_.endsWith(".parquet"))) {
-      // zero-partition input wrote no data file; keep one (empty, with
-      // schema) so time travel / readAll never hit a missing wave
-      df.repartition(1).write.mode("overwrite").options(writeOptions).parquet(waveDir.toString)
-    }
-    staged(wave, waveDir, df.schema)
-  }
-
   /** Time travel: the rows of exactly snapshot `wave`. */
   def readWave(wave: Int): DataFrame =
     read(Seq(snapshot(wave).getOrElse(
@@ -195,13 +182,61 @@ class LakeTable(spark: SparkSession, rootDir: String, name: String)
   def readAll(): DataFrame = readThrough(Int.MaxValue)
 
   /** The rows of exactly `snaps` — committed ones, or ones the caller
-    * staged itself — read with the newest one's recorded schema. */
+    * staged itself — read with the newest one's recorded schema. Built
+    * from the manifests alone, it starts no Spark job. */
   def read(snaps: Seq[SnapshotMeta]): DataFrame = {
-    val paths = snaps.flatMap(_.files).map(_.path)
-    if (paths.isEmpty)
-      throw new IllegalStateException(s"$name: empty file list (guard with rowCount first)")
-    spark.read.schema(DataType.fromJson(snaps.last.schema.get).asInstanceOf[StructType])
-      .parquet(paths: _*)
+    val schema = snaps.lastOption.flatMap(_.schema)
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .orElse(emptySchema)
+      .getOrElse(throw new IllegalStateException(s"$name: no snapshot to read"))
+    val index = ManifestFileIndex(Lake.hadoopPath(dataDir), snaps.flatMap(_.files))
+    GraftSqlBridge.ofRows(spark, LogicalRelation(HadoopFsRelation(
+      index, new StructType(), schema, bucketSpec, new ParquetFileFormat, Map.empty)(spark)))
+  }
+
+  /** The meta of the data files just written to `dir` as snapshot `wave`. */
+  protected def staged(wave: Int, dir: Path, schema: StructType): SnapshotMeta = {
+    val files = LakeTable.footerMetas(dir)
+    SnapshotMeta(name, wave, files, files.map(_.rows).sum,
+      schema = Some(GraftSqlBridge.asNullable(schema).json))
+  }
+}
+
+/** The files of some snapshots, as Spark's file-source scan sees them.
+  * Unlike `InMemoryFileIndex` it never lists a directory (which starts
+  * a parallel-listing job past 32 paths). Its one root is the table's
+  * data dir: after a file write Spark refreshes every cached plan with
+  * a root at or below the written dir, and commits write only below
+  * the data dir — a snapshot's files never change once its manifest
+  * lands, so no commit refreshes (and recomputes) a cached reader. */
+private final case class ManifestFileIndex(root: HPath, files: Seq[DataFileMeta])
+    extends FileIndex {
+  private lazy val statuses = files.map { f =>
+    FileStatusWithMetadata(new FileStatus(f.bytes, false, 0, 0, 0, Lake.hadoopPath(Paths.get(f.path))))
+  }
+  override def rootPaths: Seq[HPath] = Seq(root)
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, statuses))
+  override def inputFiles: Array[String] = statuses.map(_.getPath.toString).toArray
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = files.map(_.bytes).sum
+  override def partitionSchema: StructType = new StructType()
+}
+
+class LakeTable(spark: SparkSession, rootDir: String, name: String)
+    extends WaveTable(spark, rootDir, name) {
+
+  /** Stage `df` as the data of snapshot `wave`; it goes live with the
+    * wave's manifest. Idempotent: re-running a crashed wave overwrites
+    * its staged data dir. Per-file row counts come from Parquet footers
+    * (metadata-only, no data scan). */
+  def commit(wave: Int, df: DataFrame,
+             writeOptions: Map[String, String] = Map.empty): SnapshotMeta = {
+    Lake.testCommitHook(name, wave)
+    val waveDir = dataDir.resolve(s"wave=$wave")
+    df.write.mode("overwrite").options(writeOptions).parquet(waveDir.toString)
+    staged(wave, waveDir, df.schema)
   }
 }
 
@@ -407,93 +442,42 @@ object IndexTable {
   }
 }
 
-/** A wave table whose data files are ALSO a Spark catalog table,
-  * hash-bucketed on `bucketCols` and directory-partitioned on an int
-  * `wave_added` column — the storage layout that makes the per-wave
-  * anti-join against the cumulative URL-seen set shuffle-free on the
-  * seen side (the scan reports HashPartitioning(bucketCols, buckets),
-  * so only the wave's candidates get exchanged; `Bucketed: true` in
-  * the plan, asserted by PlanSpec).
+/** A wave table hash-bucketed on `bucketCols` — the storage layout
+  * that makes the per-wave anti-join against the cumulative URL-seen
+  * set shuffle-free on the seen side (the scan reports
+  * HashPartitioning(bucketCols, buckets), so only the wave's candidates
+  * get exchanged; `Bucketed: true` in the plan, asserted by PlanSpec).
   *
-  * - Appends go through `insertInto` so every file carries bucket
-  *   metadata; callers should pre-partition the input by
-  *   `repartition(buckets, bucketCols)` so each task holds exactly one
-  *   bucket (no small-file explosion).
-  * - Wave commits stay idempotent: the wave's partition (catalog entry
-  *   AND directory) is dropped before re-insert, so a crashed wave's
-  *   torn data cannot leak into a resumed run.
-  * - The catalog entry is session-scoped (in-memory catalog); a new
-  *   JVM re-registers the existing files via CREATE TABLE + MSCK
-  *   REPAIR (the Iceberg-runtime swap point, SURVEY.md §1.4).
+  * A commit writes bucket-named files (`part-…_00003.c000…`) with
+  * Spark's file-source insert command, no catalog involved. Callers
+  * should pre-partition the input by `repartition(buckets, bucketCols)`
+  * so each task holds exactly one bucket (no small-file explosion).
   */
 class BucketedLakeTable(
     spark: SparkSession, rootDir: String, name: String,
     columnsDdl: String,           // data columns, e.g. "kind STRING, url STRING, ..."
     val bucketCols: Seq[String],
     val buckets: Int
-) extends WaveTable(rootDir, name) {
-  import org.apache.spark.sql.functions.col
+) extends WaveTable(spark, rootDir, name) {
+  private val columns = GraftSqlBridge.asNullable(StructType.fromDDL(columnsDdl))
 
-  /** Unique per lakeRoot so many engines can share one session. */
-  val tableName: String = {
-    // md5, not String.hashCode: a 32-bit collision between two lake
-    // roots in one session would silently share the catalog entry and
-    // its LOCATION (cross-contaminated seen sets, no error)
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(Paths.get(rootDir).toAbsolutePath.toString.getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    s"graft_${name}_$h"
-  }
+  override protected def emptySchema: Option[StructType] = Some(columns)
+  override protected def bucketSpec: Option[BucketSpec] = Some(BucketSpec(buckets, bucketCols, Nil))
 
-  @volatile private var registered = false
-
-  def ensureRegistered(): Unit = if (!registered) synchronized {
-    Files.createDirectories(dataDir)
-    if (!spark.catalog.tableExists(tableName)) {
-      spark.sql(
-        s"""CREATE TABLE IF NOT EXISTS $tableName ($columnsDdl, wave_added INT)
-           |USING PARQUET
-           |PARTITIONED BY (wave_added)
-           |CLUSTERED BY (${bucketCols.mkString(", ")}) INTO $buckets BUCKETS
-           |LOCATION '${dataDir.toAbsolutePath}'""".stripMargin)
-      if (Lake.listNames(dataDir).exists(_.startsWith("wave_added=")))
-        spark.sql(s"MSCK REPAIR TABLE $tableName")
-    }
-    registered = true
-  }
-
-  /** Stage `df` (data columns + wave_added) as snapshot `wave`.
-    * Idempotent: drops any torn partition for `wave` first. */
+  /** Stage `df`, whose columns must be `columnsDdl`, as the data of
+    * snapshot `wave` (idempotent, like [[LakeTable.commit]]). */
   def commit(wave: Int, df: DataFrame): SnapshotMeta = {
     Lake.testCommitHook(name, wave)
-    ensureRegistered()
-    val partDir = dataDir.resolve(s"wave_added=$wave")
-    // torn-wave cleanup only when a previous attempt left data — the
-    // normal path skips the catalog round-trip entirely
-    if (Files.exists(partDir)) {
-      spark.sql(s"ALTER TABLE $tableName DROP IF EXISTS PARTITION (wave_added=$wave)")
-      Lake.listPaths(partDir).foreach(Files.deleteIfExists(_))
-      Files.deleteIfExists(partDir)
-    }
-    df.write.mode("append").insertInto(tableName)
-    staged(wave, partDir, df.schema)
+    require(GraftSqlBridge.asNullable(df.schema) == columns,
+      s"$name: commit columns ${df.schema.toDDL} are not ($columnsDdl)")
+    val waveDir = dataDir.resolve(s"wave=$wave")
+    val query = df.queryExecution.analyzed
+    GraftSqlBridge.ofRows(spark, InsertIntoHadoopFsRelationCommand(
+      Lake.hadoopPath(waveDir), Map.empty, ifPartitionNotExists = false, Nil, bucketSpec,
+      new ParquetFileFormat, Map.empty, query, SaveMode.Overwrite, None, None,
+      query.output.map(_.name)))
+    staged(wave, waveDir, df.schema)
   }
-
-  /** Cumulative catalog-table read through `wave`, capped at this
-    * table's latest committed wave — partition-pruned,
-    * bucket-partitioned (join-ready without a shuffle on this side). */
-  def readThrough(throughWave: Int): DataFrame =
-    readStaged(math.min(throughWave, latestWave.getOrElse(-1)))
-
-  /** [[readThrough]] without the cap, for the writer only: every wave
-    * through `throughWave` must be complete or staged by its own
-    * commit, whose manifest has not landed yet. */
-  def readStaged(throughWave: Int): DataFrame = {
-    ensureRegistered()
-    spark.table(tableName).filter(col("wave_added") <= throughWave)
-  }
-
-  def readAll(): DataFrame = readThrough(Int.MaxValue)
 }
 
 /** Run-level commit log, and the one commit point of a crawl lake:

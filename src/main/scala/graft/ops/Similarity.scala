@@ -549,9 +549,9 @@ object Similarity {
       // Append-with-frozen-quantizer would need its own key family
       // and a drift bound; out of scope, rebuild is the honest path.
       val key = corpusSnapshotKey(dir) + "|nc=" + nCentroids + "|cv2|ls=" + IvfSaltSlots
-      // md5 of the absolute corpus path, same scheme (and rationale) as
-      // BucketedLakeTable.tableName: a 32-bit String.hashCode collision
-      // between two corpus dirs would share ONE IndexTable — the key
+      // md5 of the absolute corpus path, not String.hashCode: a 32-bit
+      // hash collision between two corpus dirs would share ONE
+      // IndexTable, silently and with no error — the key
       // check prevents wrong reads, but each rebuild would retire the
       // other corpus's live key dir (perpetual thrash, and a concurrent
       // reader's files deleted mid-scan)

@@ -21,6 +21,12 @@ object GraftSqlBridge {
     * data files read back with (every field nullable). */
   def asNullable(s: types.StructType): types.StructType = s.asNullable
 
+  /** `classic.Dataset.ofRows` is `private[sql]`: the DataFrame of a
+    * hand-built logical plan (a command runs eagerly). The lake's
+    * catalog-free table reads and bucketed writes are built this way. */
+  def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
   /** Install a SQL function into a LIVE session's function registry —
     * the runtime complement of SparkSessionExtensions.injectFunction
     * (which only fires at session build). `sessionState` is

@@ -41,10 +41,14 @@ class CrashPointSpec extends SparkTestBase {
       val lake = tmpDir(s"crash_$point")
       Lake.testCommitHook = (table, wave) =>
         if (table == point && wave == 2) throw new IllegalStateException(s"crash at $table $wave")
+      val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
       val err =
         try intercept[IllegalStateException](new Crawler(spark, cfg(lake)).run())
         finally Lake.testCommitHook = (_, _) => ()
       assert(err.getMessage == s"crash at $point 2")
+      // the failed run released every cache its waves built
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+      assert(leaked.isEmpty, s"the crashed run left cached RDDs $leaked")
       val complete = new RunLog(lake).completeWaves
       assert(complete.size <= 2, s"wave 2 completed despite the crash: $complete")
       // fail fast: the loop stops at a wave boundary once a commit failed,

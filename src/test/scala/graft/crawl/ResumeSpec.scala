@@ -51,4 +51,18 @@ class ResumeSpec extends SparkTestBase {
     assert(a.map(r => (r.getString(0), r.getString(1), r.getInt(2))) ==
       sim.seen.map(f => (f.kind, f.url, f.depth)))
   }
+
+  test("a crawl and its resume leave the session catalog untouched") {
+    val web = SynthWeb.WebConfig(nHosts = 2, pagesPerHost = 6, imagesPerHost = 2)
+    val root = tmpDir("nocatalog")
+    val cfg = CrawlConfig(web = web, seeds = SynthWeb.seeds(1), lakeRoot = root,
+      fetchPartitions = 4, saltSlots = 2, seenBuckets = 4, maxWaves = 2)
+    val tables = spark.catalog.listTables().count()
+    new Crawler(spark, cfg).run()
+    new Crawler(spark, cfg.copy(maxWaves = 100)).run()
+    assert(new Crawler(spark, cfg).seenT.rowCountThrough(Int.MaxValue) > 0)
+    val seenTables = spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_seen_"))
+    assert(seenTables.isEmpty, s"crawl tables in the session catalog: ${seenTables.toSeq}")
+    assert(spark.catalog.listTables().count() == tables)
+  }
 }

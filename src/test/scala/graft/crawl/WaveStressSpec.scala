@@ -76,7 +76,7 @@ class WaveStressSpec extends SparkTestBase {
       val full = new Crawler(spark, cfg(lake)).run()
       // simulate a crash AFTER the tables of the last 3 waves landed but
       // claw back their completion marks: the resumed run must re-run
-      // those waves idempotently (drop-partition + overwrite commits)
+      // those waves idempotently (each commit overwrites its wave dir)
       val log = new RunLog(lake)
       log.completeWaves.takeRight(3).foreach { w =>
         java.nio.file.Files.delete(java.nio.file.Paths.get(lake, "_run", s"wave-$w.json"))
