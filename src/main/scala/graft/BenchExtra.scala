@@ -52,76 +52,6 @@ object BenchExtra {
           }
           println(f"BX $name%-28s ${math.min(once(), once())}%8.3f s (count, best of 2)")
         }
-      case "probe-jaccard" =>
-        // join-strategy variants for the shingle self-join (r6)
-        import org.apache.spark.sql.functions._
-        import spark.implicits._
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        val sh = graft.ops.Dedup.shinglesKeyedBy(docs, Seq("source", "shingle"))
-        def inter(hint: String) = {
-          val dfOk0 = sh.groupBy($"source", $"shingle")
-            .agg(count(lit(1)).as("df")).filter($"df" <= 1000)
-            .select($"source", $"shingle")
-          val dfOk = if (hint.endsWith("+ok")) dfOk0.hint(hint.stripSuffix("+ok")) else dfOk0
-          val h = hint.stripSuffix("+ok")
-          val shJ = sh.join(dfOk, Seq("source", "shingle"))
-          val b = if (h.isEmpty) shJ.as("b") else shJ.hint(h).as("b")
-          shJ.as("a").join(b,
-              col("a.shingle") === col("b.shingle") &&
-                col("a.source") === col("b.source") &&
-                col("a.doc_id") < col("b.doc_id"))
-            .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-            .agg(count(lit(1)).as("inter"))
-            .filter($"inter" >= 3)
-        }
-        Seq("", "merge", "merge+ok", "shuffle_hash", "shuffle_hash+ok").foreach { h =>
-          spark.catalog.clearCache()
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            inter(h).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"BX interPairs hint=${h}%-14s ${math.min(once(), once())}%8.3f s")
-        }
-      case "probe-minhash" =>
-        import org.apache.spark.sql.functions._
-        import spark.implicits._
-        def time(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-          spark.catalog.clearCache()
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            df.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"BX $label%-28s ${math.min(once(), once())}%8.3f s")
-        }
-        time("signatures")(graft.ops.Dedup.minhashSignatures(spark, sfDir))
-        time("bands")(graft.ops.Dedup.minhashBands(spark, sfDir))
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        time("sets")(graft.ops.Dedup.shinglesOf(docs)
-          .groupBy($"doc_id").agg(collect_set($"shingle").as("shset")))
-        time("full")(graft.ops.Dedup.minhashNearDup(spark, sfDir))
-      case "probe-cosine" =>
-        // stage-by-stage cost split of cosineNearDup (r6 diagnosis)
-        import org.apache.spark.sql.functions._
-        val bands = graft.ops.Similarity.nearDupBands(spark, sfDir)
-        def time(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-          spark.catalog.clearCache()
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            df.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"BX $label%-28s ${math.min(once(), once())}%8.3f s")
-        }
-        time("bands-kernel")(bands)
-        val cands = bands.as("a").join(bands.as("b"),
-            col("a.band") === col("b.band") && col("a.bk") === col("b.bk") &&
-              col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-        time("cands-raw")(cands)
-        time("cands-distinct")(cands.distinct())
-        time("full")(graft.ops.Similarity.cosineNearDup(spark, sfDir))
       case "plans" =>
         val outDir = args(1)
         val suffix = args(2)

@@ -58,7 +58,7 @@ object PageKernel {
   */
 object RefSim {
 
-  /** Per-wave counters mirroring the engine's S6 metrics table rows
+  /** Per-wave counters mirroring the engine's S6 metrics rows
     * (summed over host buckets): candidates = frontier size, admitted,
     * page fetch outcomes, novel findings, duplicate references dropped
     * by the wave-level candidate dedup (refs - 1 summed over novel),

@@ -5,12 +5,14 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 import scala.util.control.NonFatal
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Canon, Finding, HtmlTok, Imaging, PageKernel, SynthWeb}
+import graft.core.{Canon, Finding, Imaging, PageKernel, SynthWeb, XxHash64}
 import graft.lake.{BucketedLakeTable, LakeTable, RunLog, SnapshotMeta}
 
 /** Engine configuration. Conformance runs (vs RefSim) use
@@ -21,7 +23,7 @@ final case class CrawlConfig(
     web: SynthWeb.WebConfig,
     seeds: Seq[String],
     lakeRoot: String,
-    depthLimit: Int = 4,          // src/main.rs:23 (default 4; vacuous for >=1)
+    depthLimit: Int = 4,          // src/main.rs:23; frontier_{k+1} = seen_{k+1} with depth < it
     hostVisitLimit: Int = 256,    // src/main.rs:24 (=> 257 admissions/host)
     bloom: Boolean = true,
     bloomExpectedItems: Long = 4L * 1000 * 1000,
@@ -57,18 +59,24 @@ final case class FrontierRow(kind: String, url: String, depth: Int, host: String
   * `children`, an image its payload and derived fields (empty for the
   * other kind and for failed fetches). */
 final case class Fetched(
-    kind: String, url: String, depth: Int, host: String, ok: Boolean,
+    kind: String, url: String, host: String, ok: Boolean,
     children: Seq[Finding],
     bytes: Array[Byte], w: Int, h: Int, fmt: String, caption: String,
     phash: Long, basename: String
 )
 
+/** Frontier k: the snapshot it reads (wave 0's seeds, else seen's wave-k
+  * append under the depth gate), and from manifest k its size (the
+  * `frontier` stat) and rows per metrics host bucket (candidate vector). */
+final case class FrontierSnapshot(wave: Int, source: SnapshotMeta, totalRows: Long,
+    candidates: Seq[Long])
+
 /** The snapshots wave k reads: its frontier and budget, the robots
-  * cache through k, and seen through k once the previous wave's seen
-  * append and bloom merge are done. A wave hands its successor the ones
-  * it staged; the first wave and a resumed one read them from manifest k. */
-private final case class WaveInputs(wave: Int, frontier: SnapshotMeta, budget: SnapshotMeta,
-    robots: Seq[SnapshotMeta], seenReady: Future[Seq[SnapshotMeta]])
+  * cache and seen through k, and the previous wave's bloom merge. A
+  * wave hands its successor the ones it staged; the first wave and a
+  * resumed one read them from manifest k. */
+private final case class WaveInputs(frontier: FrontierSnapshot, budget: SnapshotMeta,
+    robots: Seq[SnapshotMeta], seen: Seq[SnapshotMeta], bloomReady: Future[Unit])
 
 /** The Spark-native wave engine. Each crawl wave is one typed Dataset
   * transform (SURVEY.md §3.2):
@@ -78,7 +86,8 @@ private final case class WaveInputs(wave: Int, frontier: SnapshotMeta, budget: S
   *   fetched --> images_{k+1}, budget_{k+1}
   *   fetched --explode--> children --one (kind,url,depth) exchange + agg-->
   *   candidates --bloom prefilter + left-anti(bucketed seen)--> novel
-  *   novel --depth gate--> frontier_{k+1};  seen += novel (bucketed append)
+  *   seen += novel (bucketed append), read back as frontier_{k+1}
+  *   fetched, novel --per-host-bucket sums--> metrics rows of manifest k+1
   *
   * All coordination state the reference keeps in driver HashMaps
   * (archive, host_visits — src/main.rs:51-52) lives in lake tables, so
@@ -90,9 +99,26 @@ object Crawler {
     * layout knob; metrics stay comparable across configs. */
   val MetricsHostBuckets = 32
 
-  /** The per-wave metrics counters, in table column order. */
+  /** The per-wave metrics counters, in column order. */
   private val Counters = Seq("candidates", "admitted", "fetch_ok", "fetch_err",
     "novel", "dup_dropped", "images_written", "robots_dropped")
+  private val MetricsColumns = Seq("wave", "host_bucket") ++ Counters :+ "budget_dropped"
+
+  /** Counter values by (metrics host bucket, counter name). */
+  private type Cells = Map[(Int, String), Long]
+
+  /** A wave's metrics rows in MetricsColumns order, one per host bucket
+    * its frontier's candidate vector or any of its sums counts. */
+  private def metricsRows(wave: Int, candidates: Seq[Long], sums: Cells): Seq[Map[String, Long]] = {
+    val cells = sums ++
+      candidates.zipWithIndex.collect { case (n, b) if n > 0 => (b, "candidates") -> n }
+    cells.keys.map(_._1).toSeq.distinct.sorted.map { b =>
+      val c = ListMap("wave" -> wave.toLong, "host_bucket" -> b.toLong) ++
+        Counters.map(k => k -> cells.getOrElse((b, k), 0L))
+      // robots-blocked rows never reached the budget window
+      c + ("budget_dropped" -> (c("candidates") - c("admitted") - c("robots_dropped")))
+    }
+  }
 
   /** Fetch one admitted row. fetchFollowing mirrors reqwest's
     * <=10-redirect follow; page links resolve against the REQUEST url
@@ -100,7 +126,7 @@ object Crawler {
     * (src/main.rs:157,163-164). A body of the other kind is a failed
     * fetch, as in RefSim. */
   private def fetch(r: FrontierRow, web: SynthWeb.WebConfig): Fetched = {
-    val failed = Fetched(r.kind, r.url, r.depth, r.host, ok = false, Seq.empty,
+    val failed = Fetched(r.kind, r.url, r.host, ok = false, Seq.empty,
       Array.emptyByteArray, 0, 0, "", "", 0L, "")
     SynthWeb.fetchFollowing(r.url, web) match {
       case SynthWeb.PageBody(html) if r.kind == Finding.Page =>
@@ -124,7 +150,8 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
   require(cfg.saltSlots >= 1 && cfg.saltSlots <= cfg.fetchPartitions,
     s"saltSlots (${cfg.saltSlots}) must be in [1, fetchPartitions=${cfg.fetchPartitions}]")
 
-  val frontierT = new LakeTable(spark, cfg.lakeRoot, "frontier")
+  // the wave-0 frontier: the seeds, which seen never holds
+  private val seedsT = new LakeTable(spark, cfg.lakeRoot, "frontier")
   // seen is hash-BUCKETED on the dedup key (SURVEY.md §2.5 J1): the
   // cumulative URL-seen set is never re-shuffled by the per-wave
   // anti-join — its scan reports the bucket partitioning and only the
@@ -134,9 +161,24 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     Seq("kind", "url", "depth"), cfg.seenBuckets)
   val budgetT = new LakeTable(spark, cfg.lakeRoot, "host_budget")
   val imagesT = new LakeTable(spark, cfg.lakeRoot, "images")
-  val metricsT = new LakeTable(spark, cfg.lakeRoot, "metrics")
   val robotsT = new LakeTable(spark, cfg.lakeRoot, "robots_cache")
   val runLog = new RunLog(cfg.lakeRoot)
+
+  /** The frontier of each complete wave, a read view: wave 0's seeds,
+    * then each wave's seen append under the depth gate. */
+  object frontierT {
+    def snapshot(wave: Int): Option[FrontierSnapshot] =
+      (if (wave == 0) seedsT.snapshot(0) else seenT.snapshot(wave)).map(src =>
+        FrontierSnapshot(wave, src, runLog.stats(wave)("frontier"), runLog.candidates(wave)))
+    private[crawl] def read(f: FrontierSnapshot): DataFrame =
+      if (f.wave == 0) seedsT.read(Seq(f.source)) else gated(seenT.read(Seq(f.source)))
+    def readWave(wave: Int): DataFrame = read(snapshot(wave).getOrElse(
+      throw new IllegalStateException(s"frontier: no snapshot for wave $wave")))
+    def readAll(): DataFrame = seedsT.readAll().unionByName(gated(seenT.readAll()))
+    def committedWaves: Seq[Int] = runLog.completeWaves
+    private def gated(seen: DataFrame) = seen.filter($"depth" < cfg.depthLimit)
+      .select($"kind", $"url", $"depth", hostCol($"url").as("host"))
+  }
 
   /** host without port from a canonical URL — stays in codegen
     * (no UDF): scheme '://' then a bracketed IPv6 literal or everything
@@ -144,9 +186,17 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
   private def hostCol(url: Column) =
     regexp_extract(url, "^[a-z][a-z0-9+.-]*://(\\[[^\\]]*\\]|[^/:?#]+)", 1)
 
-  /** Metrics host bucket of a host column (Crawler.MetricsHostBuckets). */
-  private def hostBucket(host: Column): Column =
-    pmod(xxhash64(host), lit(Crawler.MetricsHostBuckets)).cast("int")
+  /** `counters` summed per metrics host bucket of `host`
+    * (Crawler.MetricsHostBuckets): one collect. */
+  private def bucketSums(df: DataFrame, host: Column,
+                         counters: (String, Column)*): Crawler.Cells = {
+    val sums = counters.map { case (name, c) => sum(c.cast("long")).as(name) }
+    df.groupBy(pmod(xxhash64(host), lit(Crawler.MetricsHostBuckets)).cast("int"))
+      .agg(sums.head, sums.tail: _*)
+      .collect()
+      .flatMap(r => counters.indices.map(i => (r.getInt(0), counters(i)._1) -> r.getLong(i + 1)))
+      .toMap
+  }
 
   /** Salted fetch-stage key: hot hosts spread over saltSlots sub-slots
     * while the admission window stays host-partitioned (SURVEY.md §4). */
@@ -160,42 +210,44 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     * seed fails the job (the reference panics, src/main.rs:301-307).
     * Seeds are NOT written to `seen` — the reference never archives
     * them (src/main.rs:87-92), so a page linking back to a seed
-    * re-enqueues it once. */
+    * re-enqueues it once. Their candidate vector is bucketed on the
+    * driver, by the hash Spark's xxhash64 computes. */
   def initRun(): Long = {
     val rows = cfg.seeds.map { s =>
       val u = Canon.canonicalize(s).getOrElse(
         throw new IllegalArgumentException(s"malformed seed: $s"))
       FrontierRow(Finding.Page, u.render, 0, u.host)
     }.distinct
-    val frontier = frontierT.commit(0, spark.createDataset(rows).toDF().repartition(1))
+    val seeds = seedsT.commit(0, spark.createDataset(rows).toDF().repartition(1))
     val budget = budgetT.commit(0, Seq.empty[(String, Long)].toDF("host", "visits"))
     val robots =
       if (!cfg.robots) Nil
       else Seq(robotsT.commit(0, Seq.empty[(String, Seq[String])].toDF("host", "disallow")))
-    runLog.commit(0, frontier +: budget +: robots, Map("frontier" -> frontier.totalRows))
-    inputs = Some(WaveInputs(0, frontier, budget, robots, Future.successful(Nil)))
-    frontier.totalRows
+    val byBucket = rows.groupMapReduce(r =>
+      Math.floorMod(XxHash64.hash(r.host), Crawler.MetricsHostBuckets))(_ => 1L)(_ + _)
+    runLog.commit(0, seeds +: budget +: robots, Map("frontier" -> seeds.totalRows),
+      candidates = Seq.tabulate(Crawler.MetricsHostBuckets)(byBucket.getOrElse(_, 0L)))
+    seeds.totalRows
   }
 
   // ----------------------------------------------------------- one wave
 
-  /** Runs wave k: consumes frontier_k, stages frontier_{k+1} and the
-    * wave's appends to seen/budget/images/metrics, and (asynchronously)
+  /** Runs wave k: consumes frontier_k, stages the wave's appends to
+    * seen/budget/images (seen's is frontier_{k+1}), and (asynchronously)
     * commits them with manifest k+1. Returns the size of the next
     * frontier. */
   def runWave(wave: Int, bloomState: PartitionedBloom): Long = {
     val waveT0 = System.nanoTime()
     val webCfg = cfg.web
-    val depthLimit = cfg.depthLimit
     val visitLimit = cfg.hostVisitLimit
     val in = inputsOf(wave)
 
-    val frontier = frontierT.read(Seq(in.frontier))
+    val frontier = frontierT.read(in.frontier)
     val budget = budgetT.read(Seq(in.budget))
 
     // --- engine extension: robots.txt cache + filter (OFF in conformance)
-    val (afterRobots, robotsDropped, robotsSnap) =
-      if (!cfg.robots) (frontier, frontier.limit(0), Nil)
+    val (afterRobots, robotsSums, robotsSnap) =
+      if (!cfg.robots) (frontier, Map.empty: Crawler.Cells, Nil)
       else applyRobots(wave, frontier, in.robots)
 
     // --- A3 + J2: budget-capped admission.
@@ -216,7 +268,7 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     // is also in its salt-group's top-r — so the global window sees at
     // most saltSlots * remaining rows per host (AdmissionSpec asserts
     // the bound AND exactness). Engaged adaptively: the frontier row
-    // count is free (snapshot footers), and below admitPreLimitMinRows
+    // count is free (the manifest's stat), and below admitPreLimitMinRows
     // the single-task sort it avoids is cheaper than its extra exchange.
     val preLimited =
       if (in.frontier.totalRows < cfg.admitPreLimitMinRows) base
@@ -232,21 +284,21 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
 
     // --- S3-S5 + M1..M5: ONE fetch stage for pages and images, salted by
     // host-hash so a hot host spreads over saltSlots slots. Every later
-    // reader of the wave's fetch — budget merge, images commit, the
-    // candidate explode and the metrics — reads this one cache.
+    // reader of the wave's fetch — budget merge, images commit and the
+    // candidate explode — reads this one cache.
     val fetched = persist(admitted
       .repartition(cfg.fetchPartitions, saltedKey)
       .mapPartitions(_.map(Crawler.fetch(_, webCfg))))
-    // PIPELINE with the previous wave: admission + fetch depend only on
-    // THIS wave's frontier and budget, not on the previous wave's seen
-    // append / bloom merge, which may still be committing. Warm the
-    // cache now; only the anti-join below awaits `in.seenReady`. This
-    // overlaps the longest stage of wave k+1 with the commit tail of
-    // wave k — at high core counts that tail is the non-scaling cost.
-    val admittedCount = fetched.count()
-
-    // target ~128k rows per committed file (64-file cap)
-    def nFiles(rows: Long): Int = math.max(1, math.min(64, (rows / 131072L + 1L).toInt))
+    // PIPELINE with the previous wave: admission + fetch need only THIS
+    // wave's frontier and budget, so the longest stage overlaps the
+    // previous wave's bloom merge; only the anti-join below awaits
+    // `in.bloomReady`. The per-bucket sums that warm the cache are the
+    // fetch metrics.
+    val isPage = $"kind" === Finding.Page
+    val fetchedSums = bucketSums(fetched.toDF(), $"host", "admitted" -> lit(1),
+      "fetch_ok" -> (isPage && $"ok"), "fetch_err" -> (isPage && !$"ok"),
+      "images_written" -> ($"kind" === Finding.Image && $"ok"))
+    val admittedCount = fetchedSums.collect { case ((_, "admitted"), n) => n }.sum
 
     // --- A2: merge admitted counts into the budget table (full rewrite;
     // the table is <= #hosts rows). Runs concurrently with the images
@@ -270,17 +322,15 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
           $"phash", $"basename"),
         writeOptions = Map("compression" -> "uncompressed"))
     })
-    val seenSnaps = Await.result(in.seenReady, Duration.Inf)
+    Await.result(in.bloomReady, Duration.Inf)
 
     // --- U1: children across all pages; M4 per-page dedup already done
-    // in processPage's Set. gate_depth = depth of the first parent in
-    // canonical response order (only matters when depths differ, which
-    // the reference's no-increment quirk makes impossible in practice).
-    val children = fetched
-      .select($"depth".as("pdepth"), $"host".as("phost"), $"url".as("purl"),
-        explode($"children").as("c"))
-      .select($"c.kind".as("kind"), $"c.url".as("url"), $"c.depth".as("depth"),
-        $"pdepth", $"phost", $"purl")
+    // in processPage's Set. No parent depth is kept: seeds have depth 0,
+    // child pages inherit their page's depth and images get 0
+    // (PageKernel.processPage), so every parent of a candidate has its
+    // depth and the reference's parent-depth gate is a gate on `depth`.
+    val children = fetched.select(explode($"children").as("c"))
+      .select($"c.kind".as("kind"), $"c.url".as("url"), $"c.depth".as("depth"))
     // ONE exchange: the raw children hash-partition on the dedup key to
     // seenBuckets partitions and aggregate on that partitioning, so
     // partition p holds exactly bucket p (bucketCol). Every downstream
@@ -290,9 +340,7 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     val cands = persist(children
       .repartition(cfg.seenBuckets, $"kind", $"url", $"depth")
       .groupBy($"kind", $"url", $"depth")
-      .agg(
-        min_by($"pdepth", struct($"phost", $"purl")).as("gate_depth"),
-        count(lit(1)).as("refs"))
+      .agg(count(lit(1)).as("refs"))
       .withColumn("url_hash", xxhash64($"kind", $"url", $"depth"))
       .withColumn("bucket", bloomState.bucketCol($"kind", $"url", $"depth"))) // both bloom branches read it
 
@@ -302,7 +350,7 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     // maybe-seen rows probe the exact bucketed seen table, which is
     // scanned storage-partitioned — never shuffled. Seen wave k may be
     // only staged (its manifest lands after the previous wave's tail).
-    val seen = seenT.read(seenSnaps).select($"kind", $"url", $"depth")
+    val seen = seenT.read(in.seen).select($"kind", $"url", $"depth")
     val novel0 =
       if (cfg.bloom && !bloomState.isEmpty) {
         val probe = bloomState.probeCol(spark, $"bucket", $"url_hash")
@@ -310,108 +358,52 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
         val checked = cands.filter(probe)
           .join(seen, Seq("kind", "url", "depth"), "left_anti")
         definitelyNew.unionByName(checked)
-      } else if (seenSnaps.isEmpty) cands // nothing is seen before the first commit
+      } else if (in.seen.isEmpty) cands // nothing is seen before the first commit
       else cands.join(seen, Seq("kind", "url", "depth"), "left_anti")
     // before the first seen commit novel IS the candidates' cache
     val novel = if (novel0 eq cands) cands else persist(novel0)
-    // novel's metrics counters are summed by the job that materializes
-    // its cache: one job, where a later metrics read of novel would be a
-    // second one
-    val novelByBucket = novel
-      .groupBy(hostBucket(hostCol($"url")).as("host_bucket"))
-      .agg(count(lit(1)).as("novel"), sum($"refs" - 1).as("dup_dropped"))
-      .as[(Int, Long, Long)]
-      .collect()
-    val novelCount = novelByBucket.map(_._2).sum
+    // the job that materializes novel's cache also sums its metrics and
+    // the next frontier's candidate vector
+    val novelSums = bucketSums(novel, hostCol($"url"), "novel" -> lit(1),
+      "dup_dropped" -> ($"refs" - 1), "frontier" -> ($"depth" < cfg.depthLimit))
+    val novelCount = novelSums.collect { case ((_, "novel"), n) => n }.sum
+    val nextCandidates =
+      Seq.tabulate(Crawler.MetricsHostBuckets)(b => novelSums.getOrElse((b, "frontier"), 0L))
 
-    // novel is cached: the bloom merge and the frontier commit are
-    // independent reads of it — run them concurrently. The seen append
-    // starts after both: only the next wave's anti-join, after its
-    // fetch, needs it, while the next wave's admission waits for the
-    // frontier commit (started alongside, it lengthened every wave)
-    val seenRows = seenSnaps.map(_.totalRows).sum + novelCount
+    // novel is cached: the bloom merge reads it in a Future while this
+    // thread commits seen += novel, which the next wave's admission
+    // reads as its frontier. ALL novel rows are archived, even those the
+    // depth gate keeps out of the queue (src/main.rs:130-134). The write
+    // inherits the candidates' bucket-aligned partitioning.
     val rebuild = cfg.bloom && novelCount > 0 && bloomState.wouldSaturate(novelCount)
     val fMerge =
       if (!cfg.bloom || novelCount == 0 || rebuild) Future.unit
       else track(Future(bloomState.add(novel, $"bucket", $"url_hash", novelCount)))
-    // --- D2 depth gate -> frontier_{k+1}, on this thread meanwhile
-    val frontierSnap = frontierT.commit(wave + 1, novel
-      .filter($"gate_depth" < depthLimit)
-      .select($"kind", $"url", $"depth", hostCol($"url").as("host"))
-      .coalesce(nFiles(novelCount)))
-    // --- commit seen += novel (ALL novel rows are archived, even those
-    // the depth gate keeps out of the queue — src/main.rs:130-134).
-    // The write inherits the candidates' bucket-aligned partitioning.
-    val fSeen = track(fMerge.map { _ =>
-      seenT.commit(wave + 1, novel.select($"kind", $"url", $"depth", $"url_hash"))
-    })
-    val fBloom =
+    val seenSnap = seenT.commit(wave + 1, novel.select($"kind", $"url", $"depth", $"url_hash"))
+    val bloomReady =
       if (!rebuild) fMerge
-      else track(fSeen.map { seenSnap =>
-        // capacity crossing: grow and REBUILD from the full seen set
-        // (one distributed aggregation, same shape as the per-wave
-        // merge) — runs after this wave's seen append is staged so the
-        // rebuilt filters cover it. Without this, fixed-size filters
-        // saturate at the 10^10 design point and the pre-filter
-        // silently degrades to all-pass.
-        bloomState.growTo(seenRows)
-        bloomState.add(seenT.read(seenSnaps :+ seenSnap),
-          bloomState.bucketCol($"kind", $"url", $"depth"), $"url_hash", seenRows)
-      })
-    // the seen append + bloom merge escape this wave: the NEXT wave's
-    // anti-join awaits them (its seenReady) right before it needs them
-    val seenReady = for { seenSnap <- fSeen; _ <- fBloom } yield seenSnaps :+ seenSnap
+      // capacity crossing: grow and REBUILD from the full seen set, this
+      // wave's staged append included. Without this, fixed-size filters
+      // saturate at the 10^10 design point and the pre-filter silently
+      // degrades to all-pass.
+      else track(Future(fillBloom(bloomState, in.seen :+ seenSnap)))
     val imagesSnap = Await.result(imagesChain, Duration.Inf)
     val budgetSnap = Await.result(budgetChain, Duration.Inf)
-    inputs = Some(WaveInputs(wave + 1, frontierSnap, budgetSnap, in.robots ++ robotsSnap, seenReady))
+    val next = FrontierSnapshot(wave + 1, seenSnap, nextCandidates.sum, nextCandidates)
+    inputs = Some(WaveInputs(next, budgetSnap, in.robots ++ robotsSnap, in.seen :+ seenSnap,
+      bloomReady))
 
-    // --- per-wave, per-host-bucket metrics (lineage beyond the
-    // manifests' per-file row counts): ONE job — a union of one wide
-    // row per source row (frontier, fetched, novel's per-bucket sums,
-    // robots-dropped), one column per counter, summed per host bucket
-    // with map-side combine. Committed ASYNCHRONOUSLY (chained, so
-    // manifests land in wave order): metrics are outputs, never inputs
-    // of a wave, so the next wave's compute overlaps this commit;
-    // run()/awaitQuiesce joins the tail.
-    def counters(df: DataFrame, bucket: Column, values: (String, Column)*): DataFrame = {
-      val set = values.toMap
-      df.select(bucket.as("host_bucket")
-        +: Crawler.Counters.map(c => set.getOrElse(c, lit(0L)).cast("long").as(c)): _*)
-    }
-    val isPage = $"kind" === Finding.Page
-    val raw = counters(frontier, hostBucket($"host"), "candidates" -> lit(1L))
-      .union(counters(fetched.toDF(), hostBucket($"host"), "admitted" -> lit(1L),
-        "fetch_ok" -> (isPage && $"ok"), "fetch_err" -> (isPage && !$"ok"),
-        "images_written" -> ($"kind" === Finding.Image && $"ok")))
-      .union(counters(novelByBucket.toSeq.toDF("host_bucket", "novel", "dup_dropped"),
-        $"host_bucket", "novel" -> $"novel", "dup_dropped" -> $"dup_dropped"))
-      .union(counters(robotsDropped, hostBucket($"host"), "robots_dropped" -> lit(1L)))
-    val metrics = raw.groupBy($"host_bucket")
-      .agg(sum(Crawler.Counters.head).as(Crawler.Counters.head),
-        Crawler.Counters.tail.map(c => sum(c).as(c)): _*)
-      // robots-blocked rows never reached the budget window - without
-      // the subtraction they were misreported as budget drops
-      .withColumn("budget_dropped", $"candidates" - $"admitted" - $"robots_dropped")
-      .withColumn("wave", lit(wave))
+    val metrics =
+      Crawler.metricsRows(wave, in.frontier.candidates, fetchedSums ++ novelSums ++ robotsSums)
     val waveWallMs = (System.nanoTime() - waveT0) / 1000000L
     val prevTail = pendingTail
-    // the manifest (the resume contract: wave complete <=> ALL its
-    // tables staged) and the cache releases must wait for the escaped
-    // seen+bloom commits of this wave too
-    pendingTail = track(for { _ <- prevTail; seenSnap <- fSeen; _ <- fBloom } yield {
-      // cands releases FIRST in the tail — fSeen and fBloom are its only
-      // escaped readers (seen append + bloom merge) and are done, and
-      // sequencing the release BEFORE the metrics job launches keeps the
-      // unpersist from racing an in-flight read (the r5 "Block rdd_N
-      // does not exist" fix). Holding it past the metrics commit instead
-      // kept wave k's candidate cache alive into wave k+1's fetch and
-      // heap-OOM'd the 10k-host scale probe at wave 4 (metrics reads
-      // fetched and novel's collected sums, never cands or novel).
-      release(cands)
-      val metricsSnap = metricsT.commit(wave + 1, metrics.repartition(1))
-      runLog.commit(wave + 1,
-        Seq(frontierSnap, budgetSnap, imagesSnap, seenSnap, metricsSnap) ++ robotsSnap, Map(
-        "frontier" -> frontierSnap.totalRows,
+    // the tail runs no job: once the bloom merge is done it writes
+    // manifest k+1 (the resume contract: wave complete <=> ALL its
+    // tables staged), chained so manifests land in wave order, and
+    // releases the wave's caches
+    pendingTail = track(for { _ <- prevTail; _ <- bloomReady } yield {
+      runLog.commit(wave + 1, Seq(budgetSnap, imagesSnap, seenSnap) ++ robotsSnap, Map(
+        "frontier" -> next.totalRows,
         "admitted" -> admittedCount,
         "novel" -> seenSnap.totalRows,
         "images" -> imagesSnap.totalRows,
@@ -419,13 +411,13 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
         // bloom fill observability: capacity vs items quantifies how
         // far the pre-filter is from its next adaptive rebuild
         "bloom_capacity" -> (if (cfg.bloom) bloomState.capacity else 0L),
-        "bloom_items" -> (if (cfg.bloom) bloomState.itemsAdded else 0L)))
-      release(fetched, novel)
+        "bloom_items" -> (if (cfg.bloom) bloomState.itemsAdded else 0L)), metrics, nextCandidates)
+      release(cands, fetched, novel)
     })
-    frontierSnap.totalRows
+    next.totalRows
   }
 
-  // async tail of metrics commits + manifests, chained to stay ordered
+  // async tail of manifests, chained to stay ordered
   @transient private var pendingTail: Future[Unit] = Future.unit
 
   // the inputs the last runWave staged for the next one
@@ -453,24 +445,39 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     cached = cached.filterNot(c => dss.exists(_ eq c))
   }
 
-  private def inputsOf(wave: Int): WaveInputs = inputs.filter(_.wave == wave).getOrElse {
-    val in = WaveInputs(wave, frontierT.snapshot(wave).get, budgetT.snapshot(wave).get,
-      if (cfg.robots) robotsT.snapshots(wave) else Nil, Future.successful(seenT.snapshots(wave)))
-    inputs = Some(in)
-    in
+  private def inputsOf(wave: Int): WaveInputs = inputs.filter(_.frontier.wave == wave).getOrElse(
+    WaveInputs(frontierT.snapshot(wave).get, budgetT.snapshot(wave).get,
+      if (cfg.robots) robotsT.snapshots(wave) else Nil, seenT.snapshots(wave), Future.unit))
+
+  /** Add all of seen's `snaps` to the bloom (one distributed
+    * aggregation, the per-wave merge's shape), grown first if they would
+    * overfill it. */
+  private def fillBloom(bloom: PartitionedBloom, snaps: Seq[SnapshotMeta]): Unit = {
+    val rows = snaps.map(_.totalRows).sum
+    if (bloom.wouldSaturate(rows)) bloom.growTo(rows)
+    bloom.add(seenT.read(snaps), bloom.bucketCol($"kind", $"url", $"depth"), $"url_hash", rows)
   }
 
-  /** Join the async metrics/manifest tail (call before reading final
-    * state or abandoning the Crawler). */
+  /** Join the async manifest tail (call before reading final state or
+    * abandoning the Crawler). */
   def awaitQuiesce(): Unit = Await.result(pendingTail, Duration.Inf)
+
+  /** The per-wave, per-host-bucket metrics rows (the north rule's
+    * lineage beyond the manifests' per-file row counts) of every
+    * complete wave: manifest k+1 carries wave k's. */
+  def metrics(): DataFrame =
+    runLog.completeWaves.flatMap(runLog.metrics).map(m => Crawler.MetricsColumns.map(m)).toDF("row")
+      .select(Crawler.MetricsColumns.zipWithIndex.map { case (c, i) =>
+        $"row"(i).cast(if (c == "wave" || c == "host_bucket") "int" else "long").as(c) }: _*)
 
   /** Engine extension D4: consult/populate the robots cache table and
     * drop disallowed URLs BEFORE budget admission. The robots fetch for
     * new hosts runs INSIDE executors (mapPartitions over the
     * host-distinct Dataset) — at web scale (10^7+ hosts) a driver-side
-    * collect+loop would serialize the wave. */
-  private def applyRobots(wave: Int, frontier: DataFrame,
-                          known: Seq[SnapshotMeta]): (DataFrame, DataFrame, Seq[SnapshotMeta]) = {
+    * collect+loop would serialize the wave. Returns the allowed rows,
+    * the dropped ones' per-bucket sums and the cache's new snapshot. */
+  private def applyRobots(wave: Int, frontier: DataFrame, known: Seq[SnapshotMeta])
+      : (DataFrame, Crawler.Cells, Seq[SnapshotMeta]) = {
     val fetched = frontier.select($"host").distinct()
       .join(robotsT.read(known).select($"host"), Seq("host"), "left_anti")
       .as[String]
@@ -490,14 +497,13 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
       .withColumn("blocked",
         coalesce(exists($"disallow", p => startswith($"path", p)), lit(false)))
     val allowed = joined.filter(!$"blocked").select($"kind", $"url", $"depth", $"host")
-    val dropped = joined.filter($"blocked").select($"kind", $"url", $"depth", $"host")
-    (allowed, dropped, Seq(snap))
+    (allowed, bucketSums(joined.filter($"blocked"), $"host", "robots_dropped" -> lit(1)), Seq(snap))
   }
 
   // ------------------------------------------------------------- driver
 
   /** Full run (or resume). The loop is thin: per wave one transform,
-    * counts come from parquet footers (no collect of data). */
+    * counts come from the manifests (no collect of data). */
   def run(): CrawlSummary = try {
     val bloomState = new PartitionedBloom(cfg.seenBuckets, cfg.bloomExpectedItems, cfg.bloomFpp)
     var wave = runLog.lastCompleteWave.getOrElse { initRun(); 0 }
@@ -505,13 +511,8 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     // a resumed run rebuilds the bloom from the complete waves. Skip it
     // when the frontier is empty - a finished crawl's re-run must be a
     // no-op, not a full-seen-table aggregation
-    val seenSnaps = Await.result(in.seenReady, Duration.Inf)
-    val seenRows = seenSnaps.map(_.totalRows).sum
-    if (cfg.bloom && in.frontier.totalRows > 0 && seenRows > 0) {
-      if (bloomState.wouldSaturate(seenRows)) bloomState.growTo(seenRows)
-      bloomState.add(seenT.read(seenSnaps),
-        bloomState.bucketCol($"kind", $"url", $"depth"), $"url_hash", seenRows)
-    }
+    if (cfg.bloom && in.frontier.totalRows > 0 && in.seen.exists(_.totalRows > 0))
+      fillBloom(bloomState, in.seen)
     var frontierSize = in.frontier.totalRows
     while (frontierSize > 0 && wave < cfg.maxWaves) {
       // fail fast: after a failed tail no later manifest can land

@@ -29,7 +29,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * Layout of a crawl lake:
   *   <root>/<table>/data/wave=<k>/part-*.parquet   (staged by commit;
-  *                                                  seen: one file a bucket)
+  *                                                  seen: one file a bucket;
+  *                                                  frontier: wave 0 only)
   *   <root>/_run/wave-<k>.json                     (THE commit point)
   *
   * A table commit only stages data files and returns their
@@ -482,9 +483,9 @@ class BucketedLakeTable(
 
 /** Run-level commit log, and the one commit point of a crawl lake:
   * wave k is COMPLETE iff `_run/wave-<k>.json` exists. That manifest
-  * lists every table's snapshot k plus the wave's stats and lands by
-  * one atomic rename after the tables staged their data. Resume scans
-  * for the max complete wave and restarts the loop there.
+  * lists every table's snapshot k, the wave's stats, wave k-1's metrics
+  * rows and wave k's candidate vector, and lands by one atomic rename
+  * after the tables staged their data. Resume restarts at the max one.
   */
 class RunLog(rootDir: String) {
   private val runDir = Paths.get(rootDir, "_run")
@@ -493,12 +494,15 @@ class RunLog(rootDir: String) {
   private def manifestPath(wave: Int): Path = runDir.resolve(s"wave-$wave.json")
 
   /** Make wave `wave` complete: publish its staged table snapshots. */
-  def commit(wave: Int, tables: Seq[SnapshotMeta], stats: Map[String, Long]): Unit = {
+  def commit(wave: Int, tables: Seq[SnapshotMeta], stats: Map[String, Long],
+             metrics: Seq[Map[String, Long]] = Nil, candidates: Seq[Long] = Nil): Unit = {
     Lake.testCommitHook("_run", wave)
+    def tree(value: AnyRef): JsonNode = Lake.mapper.valueToTree[JsonNode](value)
     val node = Lake.mapper.createObjectNode()
     node.put("wave", wave)
-    val s = node.putObject("stats")
-    stats.foreach { case (k, v) => s.put(k, v) }
+    node.set[JsonNode]("stats", tree(stats.asJava))
+    node.set[JsonNode]("metrics", tree(metrics.map(_.asJava).asJava))
+    node.set[JsonNode]("candidates", tree(candidates.asJava))
     val arr = node.putArray("tables")
     tables.foreach(t => arr.add(SnapshotMeta.toJson(t)))
     Lake.writeAtomically(manifestPath(wave), node)
@@ -509,9 +513,20 @@ class RunLog(rootDir: String) {
     if (!Files.exists(p)) None else Some(Lake.mapper.readTree(Files.readString(p)))
   }
 
+  private def elements(wave: Int, key: String): Seq[JsonNode] =
+    manifest(wave).toSeq.flatMap(_.get(key).elements().asScala)
+
+  private def longs(node: JsonNode): Map[String, Long] =
+    node.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
+
   def stats(wave: Int): Map[String, Long] =
-    manifest(wave).map(_.get("stats").properties().asScala
-      .map(e => e.getKey -> e.getValue.asLong()).toMap).getOrElse(Map.empty)
+    manifest(wave).map(m => longs(m.get("stats"))).getOrElse(Map.empty)
+
+  /** The metrics rows of wave `wave - 1`. */
+  def metrics(wave: Int): Seq[Map[String, Long]] = elements(wave, "metrics").map(longs)
+
+  /** The candidate vector of wave `wave`. */
+  def candidates(wave: Int): Seq[Long] = elements(wave, "candidates").map(_.asLong())
 
   /** The table snapshots complete wave `wave` published (empty if none). */
   def tables(wave: Int): Seq[SnapshotMeta] =

@@ -11,17 +11,19 @@ import graft.core.{Finding, RefSim, SynthWeb}
 class ConformanceSpec extends SparkTestBase {
   import org.apache.spark.sql.functions._
 
+  // admitPreLimitMinRows = 0 forces the skew pre-limit ON for every
+  // conformance case — its exactness (bit-identical admission) is
+  // part of what these tests prove; other specs crawl with the
+  // default adaptive threshold (pre-limit off at their sizes)
+  private def engineCfg(cfg: SynthWeb.WebConfig, seeds: Seq[String], lake: String,
+                        depthLimit: Int, bloom: Boolean): CrawlConfig =
+    CrawlConfig(web = cfg, seeds = seeds, lakeRoot = lake, depthLimit = depthLimit, bloom = bloom,
+      fetchPartitions = 8, saltSlots = 2, admitPreLimitMinRows = 0L)
+
   private def runBoth(cfg: SynthWeb.WebConfig, seeds: Seq[String], depthLimit: Int = 4,
-                      bloom: Boolean = true): (Crawler, RefSim.SimResult) = {
+                      bloom: Boolean = true, lake: String = tmpDir("lake")): (Crawler, RefSim.SimResult) = {
     val sim = RefSim.run(seeds, cfg, depthLimit = depthLimit)
-    // admitPreLimitMinRows = 0 forces the skew pre-limit ON for every
-    // conformance case — its exactness (bit-identical admission) is
-    // part of what these tests prove; other specs crawl with the
-    // default adaptive threshold (pre-limit off at their sizes)
-    val crawler = new Crawler(spark, CrawlConfig(
-      web = cfg, seeds = seeds, lakeRoot = tmpDir("lake"),
-      depthLimit = depthLimit, bloom = bloom,
-      fetchPartitions = 8, saltSlots = 2, admitPreLimitMinRows = 0L))
+    val crawler = new Crawler(spark, engineCfg(cfg, seeds, lake, depthLimit, bloom))
     crawler.run()
     (crawler, sim)
   }
@@ -86,9 +88,20 @@ class ConformanceSpec extends SparkTestBase {
 
   test("depth limit 0: seeds-only") {
     val cfg = SynthWeb.WebConfig(nHosts = 4, pagesPerHost = 10, imagesPerHost = 5)
-    val (c, sim) = runBoth(cfg, SynthWeb.seeds(2), depthLimit = 0)
+    val lake = tmpDir("depth0")
+    val (c, sim) = runBoth(cfg, SynthWeb.seeds(2), depthLimit = 0, lake = lake)
     assertConformance(c, sim)
     assert(sim.frontiers.length == 1)
+    // wave 1 archived the seeds' children but queued none: a re-run
+    // starts from manifest 1's frontier stat (0), not from seen's rows,
+    // so it is a no-op with the same summary and no new manifest
+    val manifests = c.runLog.completeWaves
+    val summary = CrawlSummary(manifests.last, c.seenT.rowCountThrough(Int.MaxValue),
+      c.imagesT.rowCountThrough(Int.MaxValue))
+    assert(summary.seenRows > 0)
+    val again = new Crawler(spark, engineCfg(cfg, SynthWeb.seeds(2), lake, 0, bloom = true)).run()
+    assert(again == summary, s"re-run changed the summary: $again vs $summary")
+    assert(c.runLog.completeWaves == manifests)
   }
 
   test("bloom pre-filter never changes the result (on vs off)") {

@@ -35,7 +35,7 @@ class CrashPointSpec extends SparkTestBase {
     summary
   }
 
-  Seq("frontier", "host_budget", "images", "seen", "metrics", "robots_cache", "_run").foreach { point =>
+  Seq("host_budget", "images", "seen", "robots_cache", "_run").foreach { point =>
     test(s"a crash at wave 2's $point commit resumes to the uninterrupted state") {
       assert(uninterrupted.waves > 5, s"corpus too shallow: ${uninterrupted.waves} waves")
       val lake = tmpDir(s"crash_$point")
@@ -52,8 +52,8 @@ class CrashPointSpec extends SparkTestBase {
       val complete = new RunLog(lake).completeWaves
       assert(complete.size <= 2, s"wave 2 completed despite the crash: $complete")
       // fail fast: the loop stops at a wave boundary once a commit failed,
-      // so no wave past 3 ran (its frontier would be staged as wave 4)
-      val staged = new java.io.File(lake, "frontier/data").list().map(_.stripPrefix("wave=").toInt)
+      // so no wave past 3 ran (its seen append would be staged as wave 4)
+      val staged = new java.io.File(lake, "seen/data").list().map(_.stripPrefix("wave=").toInt)
       assert(staged.max <= 4, s"waves kept running after the crash: ${staged.sorted.toSeq}")
 
       val c = new Crawler(spark, cfg(lake))

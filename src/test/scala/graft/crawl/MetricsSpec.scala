@@ -3,8 +3,9 @@ package graft.crawl
 import graft.SparkTestBase
 import graft.core.{Finding, RefSim, SynthWeb}
 
-/** S6 — the per-wave, per-host-bucket metrics table (the north rule's
-  * "per-partition lineage + metrics"). Until round 3 it was only
+/** S6 — the per-wave, per-host-bucket metrics rows the wave manifests
+  * carry (the north rule's "per-partition lineage + metrics", read
+  * through `Crawler.metrics()`). Until round 3 they were only
   * exercised indirectly through RunLog stats; here its per-wave sums
   * are asserted ≡ RefSim's independently-maintained counters, on a
   * normal corpus and on a binding-budget corpus (budget_dropped > 0),
@@ -17,7 +18,7 @@ class MetricsSpec extends SparkTestBase {
   private def metricSums(crawler: Crawler): Map[Int, Map[String, Long]] = {
     val cols = Seq("candidates", "admitted", "fetch_ok", "fetch_err",
       "novel", "dup_dropped", "images_written", "budget_dropped")
-    crawler.metricsT.readAll()
+    crawler.metrics()
       .groupBy(col("wave"))
       .agg(sum(cols.head).as(cols.head), cols.tail.map(c => sum(c).as(c)): _*)
       .collect()
@@ -31,7 +32,7 @@ class MetricsSpec extends SparkTestBase {
 
   /** Non-zero per-(wave, host_bucket) counters of the engine's table. */
   private def engineBuckets(crawler: Crawler): Map[(Int, Int, String), Long] =
-    crawler.metricsT.readAll().collect().toSeq.flatMap { r =>
+    crawler.metrics().collect().toSeq.flatMap { r =>
       BucketCounters.map(c =>
         (r.getAs[Int]("wave"), r.getAs[Int]("host_bucket"), c) -> r.getAs[Long](c))
     }.filter(_._2 != 0).toMap
@@ -107,6 +108,37 @@ class MetricsSpec extends SparkTestBase {
       SynthWeb.seeds(4), hostVisitLimit = 10)
     val dropped = metricSums(crawler).values.map(_("budget_dropped")).sum
     assert(dropped > 0, "expected the 11-cap to drop candidates")
+  }
+
+  test("every manifest's candidate vector counts its frontier's rows per host bucket") {
+    val crawler = new Crawler(spark, CrawlConfig(
+      web = SynthWeb.WebConfig(nHosts = 6, pagesPerHost = 20, imagesPerHost = 8),
+      seeds = SynthWeb.seeds(4), lakeRoot = tmpDir("candidates_lake"),
+      fetchPartitions = 8, saltSlots = 2))
+    crawler.run()
+    val waves = crawler.runLog.completeWaves
+    assert(waves.size > 2)
+    waves.foreach { k =>
+      // wave 0's vector is bucketed on the driver, later ones by Spark
+      val want = crawler.frontierT.readWave(k)
+        .groupBy(pmod(xxhash64(col("host")), lit(Crawler.MetricsHostBuckets)).cast("int"))
+        .count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val got = crawler.runLog.candidates(k).zipWithIndex.collect { case (n, b) if n > 0 => b -> n }.toMap
+      assert(got == want, s"wave $k candidate vector $got vs frontier rows $want")
+      assert(crawler.runLog.stats(k)("frontier") == want.values.sum)
+    }
+  }
+
+  test("a crawl writes no metrics table and no frontier past the seeds") {
+    val lake = tmpDir("derived_lake")
+    val crawler = new Crawler(spark, CrawlConfig(
+      web = SynthWeb.WebConfig(nHosts = 4, pagesPerHost = 15, imagesPerHost = 5),
+      seeds = SynthWeb.seeds(2), lakeRoot = lake, fetchPartitions = 8, saltSlots = 2))
+    crawler.run()
+    assert(crawler.runLog.completeWaves.size > 2)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(lake, "metrics")))
+    assert(new java.io.File(lake, "frontier/data").list().toSeq == Seq("wave=0"))
+    assert(crawler.metrics().count() > 0)
   }
 
   test("metrics under redirects: fetch errors (redirect loops) are counted") {

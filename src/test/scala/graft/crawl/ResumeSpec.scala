@@ -17,7 +17,8 @@ class ResumeSpec extends SparkTestBase {
 
     // uninterrupted reference run
     val fullRoot = tmpDir("full")
-    val fullSummary = new Crawler(spark, cfg(fullRoot)).run()
+    val full = new Crawler(spark, cfg(fullRoot))
+    val fullSummary = full.run()
 
     // interrupted run: execute only waves 0..1 then "crash"
     val root = tmpDir("resume")
@@ -27,7 +28,7 @@ class ResumeSpec extends SparkTestBase {
     val bloom1 = new PartitionedBloom(c.seenBuckets, c.bloomExpectedItems, c.bloomFpp)
     c1.runWave(0, bloom1)
     c1.runWave(1, bloom1)
-    c1.awaitQuiesce() // join async metrics so the two writers don't race in-JVM
+    c1.awaitQuiesce() // join the async manifest tail so the two writers don't race in-JVM
     // a later, uncommitted wave's partial data would be overwritten on
     // resume; simulate one by dropping junk into the data dir
     val junk = java.nio.file.Paths.get(root, "frontier", "data", "wave=99")
@@ -45,6 +46,19 @@ class ResumeSpec extends SparkTestBase {
     val b = new Crawler(spark, cfg(fullRoot)).seenT.readAll()
       .select("kind", "url", "depth").collect().toSet
     assert(a == b)
+
+    // the metrics too: the resumed waves' candidate counts come from
+    // the candidate vector manifest 2 carries
+    def metricCells(c: Crawler): Map[(Int, Int, String), Long] = {
+      val df = c.metrics()
+      val counters = df.columns.filterNot(Set("wave", "host_bucket"))
+      df.collect().toSeq.flatMap { r =>
+        counters.map(k => (r.getAs[Int]("wave"), r.getAs[Int]("host_bucket"), k) -> r.getAs[Long](k))
+      }.toMap
+    }
+    val (resumedCells, fullCells) = (metricCells(c2), metricCells(full))
+    assert(resumedCells.nonEmpty && resumedCells == fullCells,
+      s"resumed metrics differ: ${resumedCells.toSet diff fullCells.toSet}")
 
     // and both equal the oracle
     val sim = RefSim.run(seeds, web)

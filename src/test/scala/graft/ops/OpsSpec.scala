@@ -790,18 +790,20 @@ class OpsSpec extends SparkTestBase {
 
   test("phash near-dup equals brute force at hamming <= 6 (complete AND sound)") {
     val imgs = Multimodal.syntheticImages(spark, 48).cache()
-    val hashes = imgs.select("image_id", "phash").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val brute = (for {
-      (a, ha) <- hashes; (b, hb) <- hashes if a < b
-      if java.lang.Long.bitCount(ha ^ hb) <= 6
-    } yield (a, b)).toSet
-    val rows = Multimodal.phashNearDup(imgs, maxHamming = 6)
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    val res = rows.toSet
-    assert(rows.length == res.size, s"duplicate pairs: ${rows.diff(rows.distinct).toSeq}")
-    assert(res == brute, s"banding diff: missing=${brute -- res} extra=${res -- brute}")
-    assert(brute.nonEmpty, "test corpus should contain phash near-dups")
+    try {
+      val hashes = imgs.select("image_id", "phash").collect()
+        .map(r => (r.getString(0), r.getLong(1)))
+      val brute = (for {
+        (a, ha) <- hashes; (b, hb) <- hashes if a < b
+        if java.lang.Long.bitCount(ha ^ hb) <= 6
+      } yield (a, b)).toSet
+      val rows = Multimodal.phashNearDup(imgs, maxHamming = 6)
+        .collect().map(r => (r.getString(0), r.getString(1)))
+      val res = rows.toSet
+      assert(rows.length == res.size, s"duplicate pairs: ${rows.diff(rows.distinct).toSeq}")
+      assert(res == brute, s"banding diff: missing=${brute -- res} extra=${res -- brute}")
+      assert(brute.nonEmpty, "test corpus should contain phash near-dups")
+    } finally imgs.unpersist()
   }
 
   test("phash clusters: brute-force components, one keep per cluster, String ids on both paths") {

@@ -508,9 +508,10 @@ class PlanSpec extends SparkTestBase {
     }, "seen scan is not bucketed")
 
     // the wave's fixed cost in jobs (each adaptive query stage and each
-    // cache build is one): fetch count, novel sums, bloom merge, and the
-    // budget, images, seen, frontier and metrics commits. Measured: 23.
-    assert(jobs.get <= 23, s"${jobs.get} jobs in one warm wave (measured: 23)")
+    // cache build is one): fetch sums, novel sums, bloom merge, and the
+    // budget, images and seen commits; the next frontier and the
+    // metrics are derived, never written. Measured: 19.
+    assert(jobs.get <= 19, s"${jobs.get} jobs in one warm wave (measured: 19)")
   }
 
   test("bloom probe expression stays inside whole-stage codegen") {
