@@ -3,9 +3,9 @@ package graft.crawl
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
-import scala.util.control.NonFatal
 
 import scala.collection.immutable.ListMap
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -71,13 +71,6 @@ final case class Fetched(
 final case class FrontierSnapshot(wave: Int, source: SnapshotMeta, totalRows: Long,
     candidates: Seq[Long])
 
-/** The snapshots wave k reads: its frontier and budget, the robots
-  * cache and seen through k, and the previous wave's bloom merge. A
-  * wave hands its successor the ones it staged; the first wave and a
-  * resumed one read them from manifest k. */
-private final case class WaveInputs(frontier: FrontierSnapshot, budget: SnapshotMeta,
-    robots: Seq[SnapshotMeta], seen: Seq[SnapshotMeta], bloomReady: Future[Unit])
-
 /** The Spark-native wave engine. Each crawl wave is one typed Dataset
   * transform (SURVEY.md §3.2):
   *
@@ -92,6 +85,13 @@ private final case class WaveInputs(frontier: FrontierSnapshot, budget: Snapshot
   * All coordination state the reference keeps in driver HashMaps
   * (archive, host_visits — src/main.rs:51-52) lives in lake tables, so
   * the design point is the table size, not driver memory.
+  *
+  * Waves are bulk-synchronous, like the reference's loop
+  * (src/main.rs:86-147): wave k reads every input from manifest k and
+  * ends by writing manifest k+1, so a fresh, a continuing and a resumed
+  * wave start alike. Concurrency stays inside a wave: the budget and
+  * images commits overlap the novelty chain, and the bloom merge
+  * overlaps the seen commit.
   */
 object Crawler {
   /** Fixed observability granularity of the per-wave metrics rows —
@@ -232,222 +232,189 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
 
   // ----------------------------------------------------------- one wave
 
-  /** Runs wave k: consumes frontier_k, stages the wave's appends to
-    * seen/budget/images (seen's is frontier_{k+1}), and (asynchronously)
-    * commits them with manifest k+1. Returns the size of the next
-    * frontier. */
+  /** Runs wave k: reads its inputs from manifest k, consumes frontier_k,
+    * stages the wave's appends to seen/budget/images (seen's is
+    * frontier_{k+1}) and commits them with manifest k+1. Before it
+    * returns or throws it joins every Future it started and releases
+    * every cache it built, so nothing of wave k outlives it. Returns the
+    * size of the next frontier. */
   def runWave(wave: Int, bloomState: PartitionedBloom): Long = {
     val waveT0 = System.nanoTime()
     val webCfg = cfg.web
     val visitLimit = cfg.hostVisitLimit
-    val in = inputsOf(wave)
+    val frontierIn = frontierT.snapshot(wave).get
+    val budgetIn = budgetT.snapshot(wave).get
+    val robotsIn = if (cfg.robots) robotsT.snapshots(wave) else Nil
+    val seenIn = seenT.snapshots(wave)
+    val started = ArrayBuffer.empty[Future[Any]]
+    val cached = ArrayBuffer.empty[Dataset[_]]
+    def async[T](body: => T): Future[T] = { val f = Future(body); started += f; f }
+    def persist[T](ds: Dataset[T]): Dataset[T] = {
+      cached += ds
+      ds.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    try {
+      val frontier = frontierT.read(frontierIn)
+      val budget = budgetT.read(Seq(budgetIn))
 
-    val frontier = frontierT.read(in.frontier)
-    val budget = budgetT.read(Seq(in.budget))
+      // --- engine extension: robots.txt cache + filter (OFF in conformance)
+      val (afterRobots, robotsSums, robotsSnap) =
+        if (!cfg.robots) (frontier, Map.empty: Crawler.Cells, Nil)
+        else applyRobots(wave, frontier, robotsIn)
 
-    // --- engine extension: robots.txt cache + filter (OFF in conformance)
-    val (afterRobots, robotsSums, robotsSnap) =
-      if (!cfg.robots) (frontier, Map.empty: Crawler.Cells, Nil)
-      else applyRobots(wave, frontier, in.robots)
+      // --- A3 + J2: budget-capped admission.
+      // row_number per host in canonical (kind,url,depth) order — the
+      // fixed linearization shared with RefSim (SURVEY.md §3.4); broadcast
+      // the budget (bounded by #hosts, tiny next to the frontier).
+      // adaptive dim-join strategy (see CrawlConfig.budgetBroadcastMaxRows)
+      val smallBudget = budgetIn.totalRows <= cfg.budgetBroadcastMaxRows
+      val base = afterRobots
+        .filter($"host" =!= "")                              // P2 null-host drop
+        .join(if (smallBudget) broadcast(budget) else budget, Seq("host"), "left")
+        .na.fill(0L, Seq("visits"))
+      // Budget-aware PRE-LIMIT (SURVEY.md §7 hard part 5): a hot host's
+      // candidates would otherwise all land in ONE window partition (the
+      // wave's straggler at 100x). Within salted (host, psalt) partitions
+      // keep only each host's `remaining`-smallest rows in canonical
+      // order first — exact, because any row in the host's global top-r
+      // is also in its salt-group's top-r — so the global window sees at
+      // most saltSlots * remaining rows per host (AdmissionSpec asserts
+      // the bound AND exactness). Engaged adaptively: the frontier row
+      // count is free (the manifest's stat), and below admitPreLimitMinRows
+      // the single-task sort it avoids is cheaper than its extra exchange.
+      val preLimited =
+        if (frontierIn.totalRows < cfg.admitPreLimitMinRows) base
+        else Admission.preLimit(base, visitLimit, cfg.saltSlots)
+      val w = Window.partitionBy($"host").orderBy($"kind", $"url", $"depth")
+      val ranked = preLimited.withColumn("rn", row_number().over(w))
+      val quotaFilter = cfg.perWaveHostQuota
+        .map(q => $"rn" <= q).getOrElse(lit(true))           // token bucket (ext.)
+      val admitted = ranked
+        .filter($"visits" + $"rn" <= lit(visitLimit + 1) && quotaFilter)
+        .select($"kind", $"url", $"depth", $"host")
+        .as[FrontierRow]
 
-    // --- A3 + J2: budget-capped admission.
-    // row_number per host in canonical (kind,url,depth) order — the
-    // fixed linearization shared with RefSim (SURVEY.md §3.4); broadcast
-    // the budget (bounded by #hosts, tiny next to the frontier).
-    // adaptive dim-join strategy (see CrawlConfig.budgetBroadcastMaxRows)
-    val smallBudget = in.budget.totalRows <= cfg.budgetBroadcastMaxRows
-    val base = afterRobots
-      .filter($"host" =!= "")                              // P2 null-host drop
-      .join(if (smallBudget) broadcast(budget) else budget, Seq("host"), "left")
-      .na.fill(0L, Seq("visits"))
-    // Budget-aware PRE-LIMIT (SURVEY.md §7 hard part 5): a hot host's
-    // candidates would otherwise all land in ONE window partition (the
-    // wave's straggler at 100x). Within salted (host, psalt) partitions
-    // keep only each host's `remaining`-smallest rows in canonical
-    // order first — exact, because any row in the host's global top-r
-    // is also in its salt-group's top-r — so the global window sees at
-    // most saltSlots * remaining rows per host (AdmissionSpec asserts
-    // the bound AND exactness). Engaged adaptively: the frontier row
-    // count is free (the manifest's stat), and below admitPreLimitMinRows
-    // the single-task sort it avoids is cheaper than its extra exchange.
-    val preLimited =
-      if (in.frontier.totalRows < cfg.admitPreLimitMinRows) base
-      else Admission.preLimit(base, visitLimit, cfg.saltSlots)
-    val w = Window.partitionBy($"host").orderBy($"kind", $"url", $"depth")
-    val ranked = preLimited.withColumn("rn", row_number().over(w))
-    val quotaFilter = cfg.perWaveHostQuota
-      .map(q => $"rn" <= q).getOrElse(lit(true))           // token bucket (ext.)
-    val admitted = ranked
-      .filter($"visits" + $"rn" <= lit(visitLimit + 1) && quotaFilter)
-      .select($"kind", $"url", $"depth", $"host")
-      .as[FrontierRow]
+      // --- S3-S5 + M1..M5: ONE fetch stage for pages and images, salted by
+      // host-hash so a hot host spreads over saltSlots slots. Every later
+      // reader of the wave's fetch — budget merge, images commit and the
+      // candidate explode — reads this one cache. The per-bucket sums
+      // that warm it are the fetch metrics.
+      val fetched = persist(admitted
+        .repartition(cfg.fetchPartitions, saltedKey)
+        .mapPartitions(_.map(Crawler.fetch(_, webCfg))))
+      val isPage = $"kind" === Finding.Page
+      val fetchedSums = bucketSums(fetched.toDF(), $"host", "admitted" -> lit(1),
+        "fetch_ok" -> (isPage && $"ok"), "fetch_err" -> (isPage && !$"ok"),
+        "images_written" -> ($"kind" === Finding.Image && $"ok"))
+      val admittedCount = fetchedSums.collect { case ((_, "admitted"), n) => n }.sum
 
-    // --- S3-S5 + M1..M5: ONE fetch stage for pages and images, salted by
-    // host-hash so a hot host spreads over saltSlots slots. Every later
-    // reader of the wave's fetch — budget merge, images commit and the
-    // candidate explode — reads this one cache.
-    val fetched = persist(admitted
-      .repartition(cfg.fetchPartitions, saltedKey)
-      .mapPartitions(_.map(Crawler.fetch(_, webCfg))))
-    // PIPELINE with the previous wave: admission + fetch need only THIS
-    // wave's frontier and budget, so the longest stage overlaps the
-    // previous wave's bloom merge; only the anti-join below awaits
-    // `in.bloomReady`. The per-bucket sums that warm the cache are the
-    // fetch metrics.
-    val isPage = $"kind" === Finding.Page
-    val fetchedSums = bucketSums(fetched.toDF(), $"host", "admitted" -> lit(1),
-      "fetch_ok" -> (isPage && $"ok"), "fetch_err" -> (isPage && !$"ok"),
-      "images_written" -> ($"kind" === Finding.Image && $"ok"))
-    val admittedCount = fetchedSums.collect { case ((_, "admitted"), n) => n }.sum
+      // --- A2: merge admitted counts into the budget table (full rewrite;
+      // the table is <= #hosts rows). Runs concurrently with the images
+      // commit and the novelty chain, all off the fetched cache.
+      val budgetChain = async {
+        val newBudget = budget.unionByName(fetched.select($"host", lit(1L).as("visits")))
+          .groupBy($"host").agg(sum($"visits").as("visits"))
+        // repartition(1), NOT coalesce(1): coalesce propagates up and would
+        // run the whole aggregation single-task at any core count; a big
+        // (10^7-host) budget instead spreads over host-hashed files
+        val out =
+          if (smallBudget) newBudget.repartition(1)
+          else newBudget.repartition(cfg.seenBuckets, $"host")
+        budgetT.commit(wave + 1, out)
+      }
+      // PNG/JPEG payloads are already entropy-coded — snappy on top only
+      // burns CPU, so the images table is written uncompressed
+      val imagesChain = async {
+        imagesT.commit(wave + 1, fetched.filter($"kind" === Finding.Image && $"ok")
+          .select($"url".as("image_id"), $"bytes", $"w", $"h", $"fmt", $"caption",
+            $"phash", $"basename"),
+          writeOptions = Map("compression" -> "uncompressed"))
+      }
 
-    // --- A2: merge admitted counts into the budget table (full rewrite;
-    // the table is <= #hosts rows). Runs concurrently with the images
-    // commit and the novelty chain, all off the fetched cache.
-    val budgetChain = track(Future {
-      val newBudget = budget.unionByName(fetched.select($"host", lit(1L).as("visits")))
-        .groupBy($"host").agg(sum($"visits").as("visits"))
-      // repartition(1), NOT coalesce(1): coalesce propagates up and would
-      // run the whole aggregation single-task at any core count; a big
-      // (10^7-host) budget instead spreads over host-hashed files
-      val out =
-        if (smallBudget) newBudget.repartition(1)
-        else newBudget.repartition(cfg.seenBuckets, $"host")
-      budgetT.commit(wave + 1, out)
-    })
-    // PNG/JPEG payloads are already entropy-coded — snappy on top only
-    // burns CPU, so the images table is written uncompressed
-    val imagesChain = track(Future {
-      imagesT.commit(wave + 1, fetched.filter($"kind" === Finding.Image && $"ok")
-        .select($"url".as("image_id"), $"bytes", $"w", $"h", $"fmt", $"caption",
-          $"phash", $"basename"),
-        writeOptions = Map("compression" -> "uncompressed"))
-    })
-    Await.result(in.bloomReady, Duration.Inf)
+      // --- U1: children across all pages; M4 per-page dedup already done
+      // in processPage's Set. No parent depth is kept: seeds have depth 0,
+      // child pages inherit their page's depth and images get 0
+      // (PageKernel.processPage), so every parent of a candidate has its
+      // depth and the reference's parent-depth gate is a gate on `depth`.
+      val children = fetched.select(explode($"children").as("c"))
+        .select($"c.kind".as("kind"), $"c.url".as("url"), $"c.depth".as("depth"))
+      // ONE exchange: the raw children hash-partition on the dedup key to
+      // seenBuckets partitions and aggregate on that partitioning, so
+      // partition p holds exactly bucket p (bucketCol). Every downstream
+      // stage — bloom probe, anti-join against the bucketed seen scan,
+      // and the bucketed seen WRITE — reuses it: each write task holds
+      // exactly one bucket (no small-file explosion).
+      val cands = persist(children
+        .repartition(cfg.seenBuckets, $"kind", $"url", $"depth")
+        .groupBy($"kind", $"url", $"depth")
+        .agg(count(lit(1)).as("refs"))
+        .withColumn("url_hash", xxhash64($"kind", $"url", $"depth"))
+        .withColumn("bucket", bloomState.bucketCol($"kind", $"url", $"depth"))) // both bloom branches read it
 
-    // --- U1: children across all pages; M4 per-page dedup already done
-    // in processPage's Set. No parent depth is kept: seeds have depth 0,
-    // child pages inherit their page's depth and images get 0
-    // (PageKernel.processPage), so every parent of a candidate has its
-    // depth and the reference's parent-depth gate is a gate on `depth`.
-    val children = fetched.select(explode($"children").as("c"))
-      .select($"c.kind".as("kind"), $"c.url".as("url"), $"c.depth".as("depth"))
-    // ONE exchange: the raw children hash-partition on the dedup key to
-    // seenBuckets partitions and aggregate on that partitioning, so
-    // partition p holds exactly bucket p (bucketCol). Every downstream
-    // stage — bloom probe, anti-join against the bucketed seen scan,
-    // and the bucketed seen WRITE — reuses it: each write task holds
-    // exactly one bucket (no small-file explosion).
-    val cands = persist(children
-      .repartition(cfg.seenBuckets, $"kind", $"url", $"depth")
-      .groupBy($"kind", $"url", $"depth")
-      .agg(count(lit(1)).as("refs"))
-      .withColumn("url_hash", xxhash64($"kind", $"url", $"depth"))
-      .withColumn("bucket", bloomState.bucketCol($"kind", $"url", $"depth"))) // both bloom branches read it
+      // --- J1 (+A4): novelty = candidates minus seen. The partitioned
+      // Bloom pre-filter routes definitely-new rows around the anti-join
+      // (codegen might_contain, one bucket probe per row); only
+      // maybe-seen rows probe the exact bucketed seen table, which is
+      // scanned storage-partitioned — never shuffled.
+      val seen = seenT.read(seenIn).select($"kind", $"url", $"depth")
+      val novel0 =
+        if (cfg.bloom && !bloomState.isEmpty) {
+          val probe = bloomState.probeCol(spark, $"bucket", $"url_hash")
+          val definitelyNew = cands.filter(!probe)
+          val checked = cands.filter(probe)
+            .join(seen, Seq("kind", "url", "depth"), "left_anti")
+          definitelyNew.unionByName(checked)
+        } else if (seenIn.isEmpty) cands // nothing is seen before the first commit
+        else cands.join(seen, Seq("kind", "url", "depth"), "left_anti")
+      // before the first seen commit novel IS the candidates' cache
+      val novel = if (novel0 eq cands) cands else persist(novel0)
+      // the job that materializes novel's cache also sums its metrics and
+      // the next frontier's candidate vector
+      val novelSums = bucketSums(novel, hostCol($"url"), "novel" -> lit(1),
+        "dup_dropped" -> ($"refs" - 1), "frontier" -> ($"depth" < cfg.depthLimit))
+      val novelCount = novelSums.collect { case ((_, "novel"), n) => n }.sum
+      val nextCandidates =
+        Seq.tabulate(Crawler.MetricsHostBuckets)(b => novelSums.getOrElse((b, "frontier"), 0L))
 
-    // --- J1 (+A4): novelty = candidates minus seen. The partitioned
-    // Bloom pre-filter routes definitely-new rows around the anti-join
-    // (codegen might_contain, one bucket probe per row); only
-    // maybe-seen rows probe the exact bucketed seen table, which is
-    // scanned storage-partitioned — never shuffled. Seen wave k may be
-    // only staged (its manifest lands after the previous wave's tail).
-    val seen = seenT.read(in.seen).select($"kind", $"url", $"depth")
-    val novel0 =
-      if (cfg.bloom && !bloomState.isEmpty) {
-        val probe = bloomState.probeCol(spark, $"bucket", $"url_hash")
-        val definitelyNew = cands.filter(!probe)
-        val checked = cands.filter(probe)
-          .join(seen, Seq("kind", "url", "depth"), "left_anti")
-        definitelyNew.unionByName(checked)
-      } else if (in.seen.isEmpty) cands // nothing is seen before the first commit
-      else cands.join(seen, Seq("kind", "url", "depth"), "left_anti")
-    // before the first seen commit novel IS the candidates' cache
-    val novel = if (novel0 eq cands) cands else persist(novel0)
-    // the job that materializes novel's cache also sums its metrics and
-    // the next frontier's candidate vector
-    val novelSums = bucketSums(novel, hostCol($"url"), "novel" -> lit(1),
-      "dup_dropped" -> ($"refs" - 1), "frontier" -> ($"depth" < cfg.depthLimit))
-    val novelCount = novelSums.collect { case ((_, "novel"), n) => n }.sum
-    val nextCandidates =
-      Seq.tabulate(Crawler.MetricsHostBuckets)(b => novelSums.getOrElse((b, "frontier"), 0L))
-
-    // novel is cached: the bloom merge reads it in a Future while this
-    // thread commits seen += novel, which the next wave's admission
-    // reads as its frontier. ALL novel rows are archived, even those the
-    // depth gate keeps out of the queue (src/main.rs:130-134). The write
-    // inherits the candidates' bucket-aligned partitioning.
-    val rebuild = cfg.bloom && novelCount > 0 && bloomState.wouldSaturate(novelCount)
-    val fMerge =
-      if (!cfg.bloom || novelCount == 0 || rebuild) Future.unit
-      else track(Future(bloomState.add(novel, $"bucket", $"url_hash", novelCount)))
-    val seenSnap = seenT.commit(wave + 1, novel.select($"kind", $"url", $"depth", $"url_hash"))
-    val bloomReady =
-      if (!rebuild) fMerge
+      // novel is cached: the bloom merge reads it in a Future while this
+      // thread commits seen += novel, which the next wave's admission
+      // reads as its frontier. ALL novel rows are archived, even those the
+      // depth gate keeps out of the queue (src/main.rs:130-134). The write
+      // inherits the candidates' bucket-aligned partitioning.
+      val rebuild = cfg.bloom && novelCount > 0 && bloomState.wouldSaturate(novelCount)
+      val merge =
+        if (!cfg.bloom || novelCount == 0 || rebuild) Future.unit
+        else async(bloomState.add(novel, $"bucket", $"url_hash", novelCount))
+      val seenSnap = seenT.commit(wave + 1, novel.select($"kind", $"url", $"depth", $"url_hash"))
       // capacity crossing: grow and REBUILD from the full seen set, this
       // wave's staged append included. Without this, fixed-size filters
       // saturate at the 10^10 design point and the pre-filter silently
       // degrades to all-pass.
-      else track(Future(fillBloom(bloomState, in.seen :+ seenSnap)))
-    val imagesSnap = Await.result(imagesChain, Duration.Inf)
-    val budgetSnap = Await.result(budgetChain, Duration.Inf)
-    val next = FrontierSnapshot(wave + 1, seenSnap, nextCandidates.sum, nextCandidates)
-    inputs = Some(WaveInputs(next, budgetSnap, in.robots ++ robotsSnap, in.seen :+ seenSnap,
-      bloomReady))
+      if (rebuild) fillBloom(bloomState, seenIn :+ seenSnap)
+      val imagesSnap = Await.result(imagesChain, Duration.Inf)
+      val budgetSnap = Await.result(budgetChain, Duration.Inf)
+      Await.result(merge, Duration.Inf)
 
-    val metrics =
-      Crawler.metricsRows(wave, in.frontier.candidates, fetchedSums ++ novelSums ++ robotsSums)
-    val waveWallMs = (System.nanoTime() - waveT0) / 1000000L
-    val prevTail = pendingTail
-    // the tail runs no job: once the bloom merge is done it writes
-    // manifest k+1 (the resume contract: wave complete <=> ALL its
-    // tables staged), chained so manifests land in wave order, and
-    // releases the wave's caches
-    pendingTail = track(for { _ <- prevTail; _ <- bloomReady } yield {
+      // manifest k+1: the resume contract (wave complete <=> ALL its
+      // tables staged) and the next wave's only input
+      val metrics =
+        Crawler.metricsRows(wave, frontierIn.candidates, fetchedSums ++ novelSums ++ robotsSums)
       runLog.commit(wave + 1, Seq(budgetSnap, imagesSnap, seenSnap) ++ robotsSnap, Map(
-        "frontier" -> next.totalRows,
+        "frontier" -> nextCandidates.sum,
         "admitted" -> admittedCount,
         "novel" -> seenSnap.totalRows,
         "images" -> imagesSnap.totalRows,
-        "wall_ms" -> waveWallMs,
+        "wall_ms" -> (System.nanoTime() - waveT0) / 1000000L,
         // bloom fill observability: capacity vs items quantifies how
         // far the pre-filter is from its next adaptive rebuild
         "bloom_capacity" -> (if (cfg.bloom) bloomState.capacity else 0L),
         "bloom_items" -> (if (cfg.bloom) bloomState.itemsAdded else 0L)), metrics, nextCandidates)
-      release(cands, fetched, novel)
-    })
-    next.totalRows
+      nextCandidates.sum
+    } finally {
+      started.foreach(Await.ready(_, Duration.Inf))
+      cached.foreach(_.unpersist(false))
+    }
   }
-
-  // async tail of manifests, chained to stay ordered
-  @transient private var pendingTail: Future[Unit] = Future.unit
-
-  // the inputs the last runWave staged for the next one
-  @transient private var inputs: Option[WaveInputs] = None
-  // every commit Future not yet seen complete: run() joins them all
-  // before it rethrows a failure, so none still writes to the lake
-  @transient private var inFlight: List[Future[Any]] = Nil
-
-  // the Datasets waves persisted and their tails have not released:
-  // a failed run() releases them, leaving no cache behind
-  @transient private var cached: List[Dataset[_]] = Nil
-
-  private def track[T](f: Future[T]): Future[T] = {
-    inFlight = f :: inFlight.filterNot(_.isCompleted)
-    f
-  }
-
-  private def persist[T](ds: Dataset[T]): Dataset[T] = synchronized {
-    cached = ds :: cached
-    ds.persist(StorageLevel.MEMORY_AND_DISK)
-  }
-
-  private def release(dss: Dataset[_]*): Unit = synchronized {
-    dss.foreach(_.unpersist(false))
-    cached = cached.filterNot(c => dss.exists(_ eq c))
-  }
-
-  private def inputsOf(wave: Int): WaveInputs = inputs.filter(_.frontier.wave == wave).getOrElse(
-    WaveInputs(frontierT.snapshot(wave).get, budgetT.snapshot(wave).get,
-      if (cfg.robots) robotsT.snapshots(wave) else Nil, seenT.snapshots(wave), Future.unit))
 
   /** Add all of seen's `snaps` to the bloom (one distributed
     * aggregation, the per-wave merge's shape), grown first if they would
@@ -457,10 +424,6 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
     if (bloom.wouldSaturate(rows)) bloom.growTo(rows)
     bloom.add(seenT.read(snaps), bloom.bucketCol($"kind", $"url", $"depth"), $"url_hash", rows)
   }
-
-  /** Join the async manifest tail (call before reading final state or
-    * abandoning the Crawler). */
-  def awaitQuiesce(): Unit = Await.result(pendingTail, Duration.Inf)
 
   /** The per-wave, per-host-bucket metrics rows (the north rule's
     * lineage beyond the manifests' per-file row counts) of every
@@ -503,30 +466,23 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
   // ------------------------------------------------------------- driver
 
   /** Full run (or resume). The loop is thin: per wave one transform,
-    * counts come from the manifests (no collect of data). */
-  def run(): CrawlSummary = try {
+    * counts come from the manifests (no collect of data). A failure
+    * surfaces from the wave that hit it, which has already joined its
+    * Futures and released its caches. */
+  def run(): CrawlSummary = {
     val bloomState = new PartitionedBloom(cfg.seenBuckets, cfg.bloomExpectedItems, cfg.bloomFpp)
     var wave = runLog.lastCompleteWave.getOrElse { initRun(); 0 }
-    val in = inputsOf(wave)
+    var frontierSize = frontierT.snapshot(wave).get.totalRows
+    val seen = seenT.snapshots(wave)
     // a resumed run rebuilds the bloom from the complete waves. Skip it
     // when the frontier is empty - a finished crawl's re-run must be a
     // no-op, not a full-seen-table aggregation
-    if (cfg.bloom && in.frontier.totalRows > 0 && in.seen.exists(_.totalRows > 0))
-      fillBloom(bloomState, in.seen)
-    var frontierSize = in.frontier.totalRows
+    if (cfg.bloom && frontierSize > 0 && seen.exists(_.totalRows > 0)) fillBloom(bloomState, seen)
     while (frontierSize > 0 && wave < cfg.maxWaves) {
-      // fail fast: after a failed tail no later manifest can land
-      pendingTail.value.foreach(_.get)
       frontierSize = runWave(wave, bloomState)
       wave += 1
     }
-    awaitQuiesce()
     CrawlSummary(wave, seenT.rowCountThrough(wave), imagesT.rowCountThrough(wave))
-  } catch {
-    case NonFatal(e) =>
-      inFlight.foreach(Await.ready(_, Duration.Inf))
-      release(cached: _*)
-      throw e
   }
 }
 

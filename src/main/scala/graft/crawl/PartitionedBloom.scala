@@ -94,11 +94,11 @@ class PartitionedBloom(val buckets: Int, expectedItems: Long, fpp: Double) {
   // added; when an add would cross capacity it calls [[growTo]] and
   // re-adds the FULL seen set at the larger size — one distributed
   // aggregation, the same job shape as the per-wave merge.
-  // @volatile: the metrics tail of wave k reads capacity/itemsAdded
-  // while wave k+1's escaped bloom merge may be mutating them on
-  // another thread — volatile gives the reads a happens-before edge
-  // (and atomic 64-bit loads); attribution can still be one wave off
-  // by design, which the run-log comment documents.
+  // @volatile: a wave's bloom merge mutates these on a Future's thread
+  // and the wave thread reads capacity/itemsAdded for its manifest once
+  // it has joined that Future, so manifest k records exactly the rows
+  // merged through wave k-1 (WaveStressSpec pins it); volatile keeps
+  // the 64-bit reads atomic on any thread.
   @volatile private var perBucketItems = math.max(expectedItems / buckets, 1024L)
   @volatile private var numBits = BloomFilter.create(perBucketItems, fpp).bitSize()
   private val filters: Array[BloomFilter] = new Array[BloomFilter](buckets)

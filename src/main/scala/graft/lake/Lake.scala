@@ -114,9 +114,9 @@ object LakeTable {
 object Lake {
   /** TEST HOOK: called with (table, wave) at the top of every table
     * commit and with ("_run", wave) before a wave's manifest is
-    * written. WaveStressSpec sleeps in it to widen the pipelined commit
-    * windows; CrashPointSpec throws in it to crash a wave at each
-    * commit point. A no-op outside tests. */
+    * written. WaveStressSpec sleeps in it to spread a wave's concurrent
+    * commits and its manifest apart in time; CrashPointSpec throws in it
+    * to crash a wave at each commit point. A no-op outside tests. */
   @volatile private[graft] var testCommitHook: (String, Int) => Unit = (_, _) => ()
 
   private[lake] val mapper = new ObjectMapper()

@@ -103,7 +103,6 @@ class BloomSaturationSpec extends SparkTestBase {
       frontierSize = crawler.runWave(wave, bloom)
       wave += 1
     }
-    crawler.awaitQuiesce()
 
     assert(bloom.capacity > initialCapacity,
       s"rebuild never triggered (capacity stayed $initialCapacity for ${sim.seen.size} rows)")

@@ -26,13 +26,20 @@ class ExtensionsSpec extends SparkTestBase {
     // host 2 disallows the /p1 prefix -> p1 and p1x never admitted
     val robotsLake = crawler.robotsT.readAll().as[(String, Seq[String])].collect().toMap
     assert(robotsLake("h2.test").contains("/p1"))
-    val seenP1 = crawler.frontierT.readAll()
-      .filter($"host" === "h2.test" && $"url".contains("/p1")).count()
+    val h2 = crawler.frontierT.readAll().filter($"host" === "h2.test")
+    val p1 = $"url".startsWith("http://h2.test/p1")
+    val seenP1 = h2.filter(p1).count()
+    assert(seenP1 > 0, "h2 discovered no /p1 url: its rule was never exercised")
     // p1-prefixed URLs may be DISCOVERED (frontier) but never fetched:
-    // no h2 /p1 page can appear as a parent of any archived finding.
-    // Cheap proxy: budget for h2 is strictly below the unfiltered run's.
+    // every admission counts once in the budget and no host reaches the
+    // visit limit here, so h2's budget is exactly its frontier rows
+    // outside /p1
     val budgets = crawler.budgetT.readWave(crawler.budgetT.latestWave.get)
       .as[(String, Long)].collect().toMap
+    assert(budgets.values.max < 257, s"a host reached the 257-admission cap: $budgets")
+    val h2Allowed = h2.filter(!p1).count()
+    assert(budgets("h2.test") == h2Allowed,
+      s"h2 admitted a /p1 url: budget ${budgets("h2.test")}, frontier outside /p1 $h2Allowed")
     val noRobots = new Crawler(spark, CrawlConfig(
       web = web, seeds = SynthWeb.seeds(4), lakeRoot = tmpDir("norobots"),
       robots = false, fetchPartitions = 8, saltSlots = 2))
@@ -41,7 +48,6 @@ class ExtensionsSpec extends SparkTestBase {
       .as[(String, Long)].collect().toMap
     assert(budgets("h1.test") < budgetsFree("h1.test"),
       s"robots should reduce h1 admissions: ${budgets("h1.test")} vs ${budgetsFree("h1.test")}")
-    val _ = seenP1
   }
 
   test("robots rules survive a crash between the robots commit and the run-log mark") {

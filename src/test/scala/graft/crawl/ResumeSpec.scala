@@ -28,7 +28,6 @@ class ResumeSpec extends SparkTestBase {
     val bloom1 = new PartitionedBloom(c.seenBuckets, c.bloomExpectedItems, c.bloomFpp)
     c1.runWave(0, bloom1)
     c1.runWave(1, bloom1)
-    c1.awaitQuiesce() // join the async manifest tail so the two writers don't race in-JVM
     // a later, uncommitted wave's partial data would be overwritten on
     // resume; simulate one by dropping junk into the data dir
     val junk = java.nio.file.Paths.get(root, "frontier", "data", "wave=99")

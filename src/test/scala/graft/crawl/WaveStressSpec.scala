@@ -5,18 +5,17 @@ import graft.core.{Finding, RefSim, SynthWeb}
 import graft.lake.{Lake, RunLog}
 import scala.jdk.CollectionConverters._
 
-/** Stress for the wave-commit pipelining (VERDICT r2 next #9): the
-  * chained pendingTail/bloomReady futures let wave k+1's admission +
-  * fetch overlap wave k's bloom merge and manifest tail. Correct today
-  * but subtle — this spec drives 29 TINY waves with every table commit
-  * artificially slowed (Lake.testCommitHook), so the overlap windows
-  * are wide and any ordering bug (mark-before-commit, torn snapshot
-  * visible to the next wave's anti-join, a manifest racing cache release)
-  * surfaces deterministically. Asserts: run-log marks are complete,
-  * ordered in time, and only written after their tables' snapshots; the
-  * result conforms to RefSim; a re-run resumes as a no-op; and a crawl
-  * resumed from a torn tail (run-log marks deleted) converges to the
-  * same state.
+/** Stress for the wave commits: 29 TINY waves with every table commit
+  * and manifest write artificially slowed (Lake.testCommitHook), so a
+  * wave's concurrent commits, its bloom merge and its manifest are far
+  * apart in time and any ordering bug (a manifest before its tables, a
+  * torn snapshot visible to the next wave's anti-join, a cache released
+  * under a running reader, bloom stats from another wave) surfaces
+  * deterministically. Asserts: the run-log manifests are contiguous,
+  * ordered in time and only written after their tables' snapshots, and
+  * each records exactly the seen rows its bloom holds; the result
+  * conforms to RefSim; a re-run resumes as a no-op; and a crawl resumed
+  * from a torn tail (manifests deleted) converges to the same state.
   */
 class WaveStressSpec extends SparkTestBase {
   import spark.implicits._
@@ -45,8 +44,8 @@ class WaveStressSpec extends SparkTestBase {
     val log = new RunLog(lake)
     val waves = log.completeWaves
     assert(waves == (0 to summary.waves), s"run log not contiguous: $waves")
-    // marks must have landed in wave order (pipelining must not let a
-    // later wave's mark overtake an earlier one)
+    // marks must have landed in wave order (a later wave's mark never
+    // overtakes an earlier one)
     val times = waves.map(w => java.nio.file.Files.getLastModifiedTime(
       java.nio.file.Paths.get(lake, "_run", s"wave-$w.json")).toMillis)
     assert(times.zip(times.tail).forall { case (a, b) => a <= b },
@@ -57,6 +56,9 @@ class WaveStressSpec extends SparkTestBase {
       assert(c.frontierT.snapshot(w).isDefined, s"wave $w marked but frontier snapshot missing")
       assert(c.seenT.snapshot(w).isDefined, s"wave $w marked but seen snapshot missing")
       assert(log.metrics(w).nonEmpty, s"wave $w marked but its manifest carries no metrics rows")
+      assert(log.stats(w)("bloom_items") == c.seenT.rowCountThrough(w),
+        s"wave $w's manifest records ${log.stats(w)("bloom_items")} bloom items, " +
+          s"seen holds ${c.seenT.rowCountThrough(w)} rows")
     }
     assert(engineSeen(c) == sim.seen)
     // one commit point: the wave manifests are the lake's only JSON

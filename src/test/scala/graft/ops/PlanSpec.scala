@@ -433,7 +433,6 @@ class PlanSpec extends SparkTestBase {
     crawler.initRun()
     crawler.runWave(0, bloom)
     crawler.runWave(1, bloom)
-    crawler.awaitQuiesce()
     assert(crawler.frontierT.snapshot(2).get.totalRows > 0 && !bloom.isEmpty,
       "wave 2 must be a warm wave: a frontier to crawl and a bloom to probe")
 
@@ -466,7 +465,6 @@ class PlanSpec extends SparkTestBase {
     sc.addSparkListener(jl)
     try {
       crawler.runWave(2, bloom)
-      crawler.awaitQuiesce()
       GraftTestBus.drain(sc)
     } finally {
       sc.removeSparkListener(jl)
