@@ -28,7 +28,9 @@ final case class CrawlConfig(
     bloom: Boolean = true,
     bloomExpectedItems: Long = 4L * 1000 * 1000,
     bloomFpp: Double = 0.01,
-    seenBuckets: Int = 32,        // seen-table hash buckets (= bloom shards)
+    // seen-table hash buckets (= bloom shards), fixed for a lake's
+    // lifetime: every seen snapshot records it and a read checks it
+    seenBuckets: Int = 32,
     // engage the budget-aware pre-limit before the admission window
     // only when the wave's frontier is big enough that one viral host's
     // window partition could actually straggle;

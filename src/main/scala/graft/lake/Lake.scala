@@ -241,14 +241,16 @@ class LakeTable(spark: SparkSession, rootDir: String, name: String)
   }
 }
 
-/** A maintained DERIVED-data table (e.g. the IVF inverted-list index):
-  * its content is a deterministic function of some source corpus, so
-  * the manifest is keyed by the corpus SNAPSHOT STRING — readers reuse
-  * the committed data iff the key still matches, and a rebuild for a
-  * new corpus snapshot lands in a fresh `key=<hash>/` directory with
-  * the manifest flipped atomically last (readers never observe a
-  * half-built index). Shared across JVMs via the stable on-disk layout;
-  * superseded key directories are cleaned on commit.
+/** A maintained DERIVED-data table (the IVF inverted lists, the
+  * keyword-search postings): its content is a deterministic function of
+  * some source corpus, so the manifest is keyed by the corpus SNAPSHOT
+  * STRING — readers reuse the committed data iff the key still
+  * matches, and any other key rebuilds the whole index into a fresh
+  * `key=<md5(key)>/` directory with the manifest flipped atomically
+  * last (readers never observe a half-built index). There is no
+  * incremental path: a grown or rewritten corpus is a new key. Shared
+  * across JVMs via the stable on-disk layout; superseded key
+  * directories are cleaned on commit.
   *
   * Layout: `<root>/<name>/data/key=<md5>/<part>=<v>/part-*.parquet`
   *         `<root>/<name>/_meta/snapshot-0.json` (properties: key)
@@ -270,9 +272,6 @@ class IndexTable(rootDir: String, val name: String) {
 
   private def snapshotPath(wave: Int): Path = metaDir.resolve(s"snapshot-$wave.json")
 
-  private def writeSnapshot(snap: SnapshotMeta): Unit =
-    Lake.writeAtomically(snapshotPath(snap.wave), SnapshotMeta.toJson(snap))
-
   /** The committed manifest (an index only ever commits snapshot 0). */
   def snapshot(wave: Int): Option[SnapshotMeta] = {
     val p = snapshotPath(wave)
@@ -280,30 +279,12 @@ class IndexTable(rootDir: String, val name: String) {
     else Some(SnapshotMeta.fromJson(Lake.mapper.readTree(Files.readString(p))))
   }
 
-  private def keyHash(key: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  private def keyDir(key: String): Path = dataDir.resolve(s"key=${IndexTable.md5Hex(key)}")
 
-  /** The committed data directory iff the manifest's key matches AND
-    * the index is single-dir — an index grown via [[appendDelta]] must
-    * be read through [[currentDirs]] (returning just the base here
-    * would silently serve a stale subset). */
+  /** The committed data directory iff the manifest's key matches. */
   def currentDir(key: String): Option[Path] =
-    currentDirs(key).collect { case Seq(only) => only }
-
-  /** ALL committed data directories for `key`: the base build first,
-    * then append deltas in commit order. A reader scans their union. */
-  def currentDirs(key: String): Option[Seq[Path]] =
-    snapshot(0)
-      .filter(_.properties.get("key").contains(key))
-      .map { m =>
-        m.properties.get("dirs")
-          .map(_.split(",").toSeq)
-          // pre-delta manifests carry no dirs property: single key dir
-          .getOrElse(Seq(s"key=${keyHash(key)}"))
-          .map(d => dataDir.resolve(d))
-      }
-      .filter(ds => ds.nonEmpty && ds.forall(Files.isDirectory(_)))
+    snapshot(0).filter(_.properties.get("key").contains(key))
+      .map(_ => keyDir(key)).filter(Files.isDirectory(_))
 
   /** Build (or replace) the index for corpus snapshot `key`: write the
     * partitioned data to a staging dir, publish it with one atomic
@@ -316,13 +297,12 @@ class IndexTable(rootDir: String, val name: String) {
     * fail to scan (advisor r4; two builders can only disagree while
     * the corpus itself is changing mid-flight, so retries terminate in
     * practice and are bounded here regardless). */
-  def rebuild(key: String, partitionCols: Seq[String], df: DataFrame,
-              extraProps: Map[String, String] = Map.empty): Path = {
+  def rebuild(key: String, partitionCols: Seq[String], df: DataFrame): Path = {
     var attempt = 0
-    var dir = rebuildOnce(key, partitionCols, df, extraProps)
+    var dir = rebuildOnce(key, partitionCols, df)
     while (!Files.isDirectory(dir) && attempt < 3) {
       attempt += 1
-      dir = rebuildOnce(key, partitionCols, df, extraProps)
+      dir = rebuildOnce(key, partitionCols, df)
     }
     if (!Files.isDirectory(dir))
       throw new IllegalStateException(
@@ -330,69 +310,36 @@ class IndexTable(rootDir: String, val name: String) {
     dir
   }
 
-  /** Append-only evolution: commit `deltaDf` as an ADDITIONAL data
-    * directory for the grown corpus snapshot `newKey`, leaving the
-    * base directories (built for `baseKey`) untouched — delta-sized
-    * build work instead of a full-corpus re-shuffle when the corpus
-    * only gained rows. Returns None (caller falls back to a full
-    * rebuild) when the base is gone or a concurrent builder superseded
-    * the commit. ONLY correct when the delta rows are SELF-CONTAINED
-    * additions — e.g. postings of brand-new doc ids, which never merge
-    * with any base row — a contract the CALLER must guarantee. */
-  def appendDelta(baseKey: String, newKey: String, partitionCols: Seq[String],
-                  deltaDf: DataFrame,
-                  extraProps: Map[String, String] = Map.empty): Option[Seq[Path]] = {
-    currentDirs(baseKey).flatMap { base =>
-      val keyDir = writeKeyDir(keyHash(newKey), partitionCols, deltaDf)
-      val dirs = base :+ keyDir
-      val files = dirs.toVector.flatMap(LakeTable.footerMetas)
-      writeSnapshot(SnapshotMeta(name, 0, files, files.map(_.rows).sum,
-        Map("key" -> newKey,
-          "dirs" -> dirs.map(_.getFileName.toString).mkString(",")) ++ extraProps))
-      cleanupRetired()
-      // re-resolve: a concurrent publish may have superseded ours (and
-      // retired our dirs) — never hand back paths we may have deleted
-      currentDirs(newKey)
-    }
-  }
-
-  private def rebuildOnce(key: String, partitionCols: Seq[String], df: DataFrame,
-                          extraProps: Map[String, String]): Path = {
-    val kh = keyHash(key)
-    val keyDir = writeKeyDir(kh, partitionCols, df)
-    val files = LakeTable.footerMetas(keyDir)
-    writeSnapshot(SnapshotMeta(name, 0, files, files.map(_.rows).sum,
-      Map("key" -> key, "dirs" -> s"key=$kh") ++ extraProps))
-    cleanupRetired()
-    keyDir
-  }
-
-  /** Materialize one data directory for `kh` (idempotent): write into
-    * a private staging dir, publish with one atomic rename. */
-  private def writeKeyDir(kh: String, partitionCols: Seq[String], df: DataFrame): Path = {
-    val keyDir = dataDir.resolve(s"key=$kh")
-    if (!Files.isDirectory(keyDir)) {
+  /** Materialize the key dir (idempotent: write into a private staging
+    * dir, publish with one atomic rename), then commit the manifest. */
+  private def rebuildOnce(key: String, partitionCols: Seq[String], df: DataFrame): Path = {
+    val dir = keyDir(key)
+    if (!Files.isDirectory(dir)) {
       // staging name: pid-disambiguated, not random — determinism
       // hygiene (the name never influences any output)
       val staging = dataDir.resolve(
-        s".stage-$kh-${ProcessHandle.current().pid()}-${IndexTable.stageSeq.incrementAndGet()}")
+        s".stage-${dir.getFileName}-${ProcessHandle.current().pid()}-${IndexTable.stageSeq.incrementAndGet()}")
       df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(staging.toString)
-      try Files.move(staging, keyDir, StandardCopyOption.ATOMIC_MOVE)
+      try Files.move(staging, dir, StandardCopyOption.ATOMIC_MOVE)
       catch {
         case e: java.nio.file.FileSystemException =>
           // either we lost the race (the winner's dir is complete — it
           // appeared atomically) or the move genuinely failed (disk
           // full, permissions, non-atomic filesystem). Only the first
-          // is recoverable: a missing keyDir means a REAL failure, and
+          // is recoverable: a missing key dir means a REAL failure, and
           // swallowing it would commit a vacuous manifest pointing at
           // nothing (FileAlreadyExists/DirectoryNotEmpty are
           // FileSystemException subclasses, so the dir check — not the
           // exception type — is what distinguishes the two).
           Lake.deleteRecursively(staging)
-          if (!Files.isDirectory(keyDir)) throw e
+          if (!Files.isDirectory(dir)) throw e
       }
     }
-    keyDir
+    val files = LakeTable.footerMetas(dir)
+    Lake.writeAtomically(snapshotPath(0),
+      SnapshotMeta.toJson(SnapshotMeta(name, 0, files, files.map(_.rows).sum, Map("key" -> key))))
+    cleanupRetired()
+    dir
   }
 
   /** Retire key dirs the CURRENT manifest doesn't reference — re-read
@@ -400,21 +347,13 @@ class IndexTable(rootDir: String, val name: String) {
     * builder for a NEWER corpus key may have published after us, and
     * wall-clock-ordered cleanup would delete its live index (the
     * remaining microscopic read-then-delete window is the CAS point a
-    * real catalog closes; see the class doc). An appended index lists
-    * ALL its live dirs in the manifest's dirs property. */
+    * real catalog closes; see the class doc). */
   private def cleanupRetired(): Unit = {
-    val live: Set[String] = snapshot(0).map { m =>
-      m.properties.get("dirs").map(_.split(",").toSet).getOrElse(
-        m.properties.get("key").map(k => Set(s"key=${keyHash(k)}")).getOrElse(Set.empty))
-    }.getOrElse(Set.empty)
+    val live = snapshot(0).flatMap(_.properties.get("key")).map(keyDir)
     Lake.listPaths(dataDir)
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("key=") && !live.contains(n)
-      }
+      .filter(p => p.getFileName.toString.startsWith("key=") && !live.contains(p))
       .foreach(Lake.deleteRecursively)
   }
-
 }
 
 object IndexTable {
@@ -423,6 +362,11 @@ object IndexTable {
     * collided when two instances raced the same key — caught by
     * IndexTableSpec's concurrency test). */
   private[lake] val stageSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Hex md5 of `s`: key dir names, corpus fingerprints, index names. */
+  private[graft] def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** Align an index build with its write layout before `rebuild`:
     * hash-repartition on (partition column, a salt bounded to `slots`)
@@ -465,8 +409,21 @@ class BucketedLakeTable(
   override protected def emptySchema: Option[StructType] = Some(columns)
   override protected def bucketSpec: Option[BucketSpec] = Some(BucketSpec(buckets, bucketCols, Nil))
 
+  /** [[WaveTable.read]], refusing snapshots written with another bucket
+    * count: the scan groups files by the bucket id in their names, so
+    * such files would silently land in the wrong join partitions. */
+  override def read(snaps: Seq[SnapshotMeta]): DataFrame = {
+    snaps.find(!_.properties.get("buckets").contains(buckets.toString)).foreach { s =>
+      throw new IllegalStateException(s"$name: snapshot ${s.wave} was written with " +
+        s"${s.properties.getOrElse("buckets", "an unrecorded number of")} buckets, " +
+        s"this table has $buckets (a lake's bucket count is fixed)")
+    }
+    super.read(snaps)
+  }
+
   /** Stage `df`, whose columns must be `columnsDdl`, as the data of
-    * snapshot `wave` (idempotent, like [[LakeTable.commit]]). */
+    * snapshot `wave` (idempotent, like [[LakeTable.commit]]), recording
+    * the bucket count in its properties. */
   def commit(wave: Int, df: DataFrame): SnapshotMeta = {
     Lake.testCommitHook(name, wave)
     require(GraftSqlBridge.asNullable(df.schema) == columns,
@@ -477,7 +434,7 @@ class BucketedLakeTable(
       Lake.hadoopPath(waveDir), Map.empty, ifPartitionNotExists = false, Nil, bucketSpec,
       new ParquetFileFormat, Map.empty, query, SaveMode.Overwrite, None, None,
       query.output.map(_.name)))
-    staged(wave, waveDir, df.schema)
+    staged(wave, waveDir, df.schema).copy(properties = Map("buckets" -> buckets.toString))
   }
 }
 

@@ -24,17 +24,10 @@ object Search {
 
   /** Tokenizer shared with TextOps: whitespace split of trimmed text —
     * `split(trim(text), '\s+')` ≡ DuckDB `regexp_split_to_array`. */
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
-  private[ops] def tokens(spark: SparkSession, dir: String): DataFrame =
-    tokensOf(docs(spark, dir))
-
-  private def tokensOf(corpus: DataFrame): DataFrame = {
-    val spark = corpus.sparkSession
+  private[ops] def tokens(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    corpus.select($"doc_id", $"source",
-      explode(split(trim($"text"), "\\s+")).as("term"))
+    spark.read.parquet(s"$dir/documents.parquet")
+      .select($"doc_id", $"source", explode(split(trim($"text"), "\\s+")).as("term"))
   }
 
   /** Term-bucket count for the postings layout. At web scale the vocab
@@ -45,13 +38,9 @@ object Search {
 
   /** The inverted index rows: one posting per (term, doc) with its
     * term frequency, bucketed by term hash. */
-  private[ops] def postings(spark: SparkSession, dir: String): DataFrame =
-    postingsOf(docs(spark, dir))
-
-  private def postingsOf(corpus: DataFrame): DataFrame = {
-    val spark = corpus.sparkSession
+  private[ops] def postings(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    tokensOf(corpus)
+    tokens(spark, dir)
       .groupBy($"term", $"doc_id").agg(count(lit(1)).as("tf"))
       .withColumn("bucket", pmod(xxhash64($"term"), lit(NBuckets.toLong)))
   }
@@ -67,115 +56,27 @@ object Search {
   }
 
   /** Write-layout salt slots: bounds the postings index to at most
-    * NBuckets × SaltSlots files PER BUILD (see
+    * NBuckets × SaltSlots files (see
     * [[graft.lake.IndexTable.writeLayout]]) while keeping SaltSlots
     * parallel writers inside a hot bucket. */
   val SaltSlots = 4
 
-  /** (file name, mtime) of the documents parquet data files, sorted —
-    * the corpus snapshot identity AND the append-detection state
-    * stored in the index manifest (a real catalog reads this from its
-    * table snapshots instead of the filesystem). */
-  private def docFileSig(dir: String): Seq[(String, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    // the driver fixtures are single parquet FILES; engine-written
-    // corpora are directories of part files (only those can append)
-    if (!java.nio.file.Files.isDirectory(p))
-      Seq(p.getFileName.toString ->
-        java.nio.file.Files.getLastModifiedTime(p).toMillis)
-    else {
-      val files = scala.util.Using.resource(java.nio.file.Files.list(p))(
-        _.iterator().asScala.toVector)
-      files.map(_.getFileName.toString).filter(_.endsWith(".parquet")).sorted
-        .map(n => n -> java.nio.file.Files.getLastModifiedTime(p.resolve(n)).toMillis)
-    }
-  }
-
-  private def sigString(sig: Seq[(String, Long)]): String =
-    sig.map { case (n, m) => s"$n:$m" }.mkString(",")
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  /** The postings index as a maintained lake table: snapshot-keyed on
-    * the documents parquet (cross-JVM reuse via the manifest), the
-    * [[Similarity.ivfIndexDir]] discipline — PLUS incremental append:
-    * when the corpus has only GAINED data files (old files present
-    * with identical mtimes), the update tokenizes and shuffles ONLY
-    * the new files into a delta directory — delta-sized work instead
-    * of a 100 TB re-shuffle for a 1% append. Sound because appended
-    * docs are brand-new doc_ids: their (term, doc_id, tf) postings
-    * never merge with any base row, so base ∪ delta IS the full
-    * index. Any other change (rewrite, deletion, compaction) falls
-    * back to a full rebuild. */
-  private[ops] def postingsIndexDirs(spark: SparkSession, dir: String): Seq[String] =
-    synchronized { // serialize same-JVM builders; cross-JVM: see IndexTable
-      import spark.implicits._
-      val sig = docFileSig(dir)
-      val params = s"|nb=$NBuckets|ls=$SaltSlots"
-      val key = md5Hex(sigString(sig)) + params
-      val h = md5Hex(java.nio.file.Paths.get(dir).toAbsolutePath.toString).take(16)
-      val table = new graft.lake.IndexTable(Similarity.indexRoot(spark), s"post_${h}_$NBuckets")
-      def layout(df: DataFrame) =
-        graft.lake.IndexTable.writeLayout(df, NBuckets, SaltSlots, $"bucket", $"term")
-      table.currentDirs(key).getOrElse {
-        val prior = table.snapshot(0)
-        val priorKey = prior.flatMap(_.properties.get("key"))
-        val priorFiles = prior.flatMap(_.properties.get("files")).toSeq
-          .flatMap(_.split(",")).filter(_.nonEmpty)
-          .map { s => val i = s.lastIndexOf(':'); (s.take(i), s.drop(i + 1).toLong) }
-        val sigSet = sig.toSet
-        val newFiles = sig.filterNot(priorFiles.toSet)
-        // append soundness needs BRAND-NEW doc_ids, and file-level
-        // detection alone cannot see ids (r6, advisor): appended part
-        // files carrying EXISTING doc_ids would split a (term, doc_id)
-        // posting across base+delta — sum(tf) still agrees but
-        // keywordSearch's n_terms (posting-row count) double-counts.
-        // The base manifest records its max doc_id; a delta whose min
-        // id does not exceed it falls back to a full rebuild.
-        val priorMaxId = prior.flatMap(_.properties.get("max_doc_id")).map(_.toLong)
-        val appendable = priorKey.exists(_.endsWith(params)) &&
-          priorFiles.nonEmpty && newFiles.nonEmpty && priorFiles.forall(sigSet) &&
-          priorMaxId.isDefined
-        val appended =
-          if (!appendable) None
-          else {
-            val paths = newFiles.map { case (n, _) => s"$dir/documents.parquet/$n" }
-            val delta = spark.read.parquet(paths: _*)
-            val mm = delta.agg(min($"doc_id"), max($"doc_id")).head
-            if (mm.isNullAt(0) || mm.getLong(0) <= priorMaxId.get) None
-            else table.appendDelta(priorKey.get, key, Seq("bucket"),
-              layout(postingsOf(delta)),
-              Map("files" -> sigString(sig),
-                "max_doc_id" -> math.max(priorMaxId.get, mm.getLong(1)).toString))
-          }
-        appended.getOrElse {
-          val maxId = spark.read.parquet(s"$dir/documents.parquet")
-            .agg(max($"doc_id")).head
-          Seq(table.rebuild(key, Seq("bucket"), layout(postings(spark, dir)),
-            Map("files" -> sigString(sig),
-              "max_doc_id" -> (if (maxId.isNullAt(0)) "-1"
-                               else maxId.getLong(0).toString))))
-        }
-      }.map(_.toString)
-    }
+  /** The postings index as a maintained lake table, resolved like the
+    * IVF inverted lists ([[Similarity.indexDir]]): keyed on the
+    * documents parquet's snapshot, reused across JVMs while it is
+    * unchanged, rebuilt whole on any change. */
+  private[ops] def postingsIndexDir(spark: SparkSession, dir: String): String =
+    Similarity.indexDir(spark, "post", dir, "documents.parquet", s"|nb=$NBuckets|ls=$SaltSlots",
+      "bucket", NBuckets, SaltSlots, "term")(postings(spark, dir))
 
   /** Matched postings via the index, scanning ONLY the query terms'
     * buckets (the literal bucket IN-filter reaches the partitioned
-    * scan of EVERY index dir — base plus append deltas; PlanSpec
-    * asserts actual file pruning like the IVF probe). Dirs are read
-    * individually and unioned so partition discovery never walks
-    * above a key dir (a multi-root read would otherwise infer the
-    * key= level as a partition column). */
+    * scan; PlanSpec asserts actual file pruning like the IVF probe). */
   private[ops] def prunedPostingsScan(spark: SparkSession, dir: String,
                                       terms: Seq[String]): DataFrame = {
     import spark.implicits._
     val buckets = termBuckets(spark, terms)
-    postingsIndexDirs(spark, dir)
-      .map(spark.read.parquet(_))
-      .reduce(_ unionByName _)
+    spark.read.parquet(postingsIndexDir(spark, dir))
       .filter($"bucket".isin(buckets: _*) && $"term".isin(terms: _*))
   }
 

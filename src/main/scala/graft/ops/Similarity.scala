@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.core.XxHash64
+import graft.lake.IndexTable
 
 /** Similarity search over the `embeddings` table (Array[Float],
   * 64-dim): brute-force cosine top-k as the exact baseline, and
@@ -499,74 +500,69 @@ object Similarity {
     }).toDF("vec_id", "cluster")
   }
 
-  /** The inverted-list index is a MAINTAINED lake table
-    * ([[graft.lake.IndexTable]]): built under `spark.graft.indexRoot`
-    * (a lake path on a real cluster; a stable local default here),
-    * with its manifest keyed by the corpus SNAPSHOT (file names +
-    * sizes + mtimes of the embeddings parquet) — so a regenerated
-    * corpus at the same path rebuilds instead of serving a stale
-    * index, an unchanged corpus is reused across JVMs with zero
-    * rebuild cost, and a rebuild lands in a fresh key directory with
-    * the manifest flipped atomically last (no temp dirs, no
-    * per-process copies — the r3 session cache made the index
-    * JVM-lifetime; this makes it corpus-lifetime). */
+  /** The snapshot identity of `dir/embeddings.parquet`, which keys
+    * the IVF centroid and PQ codebook caches. */
   private[ops] def corpusSnapshotKey(dir: String): String =
     corpusSnapshotKey(dir, "embeddings.parquet")
 
-  /** File-generic variant (Search's postings index now keys on its own
-    * richer (file, mtime) signature — kept generic for the next
-    * derived-table family). */
+  /** The snapshot identity of `dir/fileName` (a parquet file or a
+    * directory of part files): the dir plus the md5 of its sorted
+    * `name:size:mtime` list, so a regenerated corpus at the same path
+    * reads as a new snapshot (a real catalog reads this from its table
+    * snapshots instead of the filesystem). */
   private[ops] def corpusSnapshotKey(dir: String, fileName: String): String = {
     import scala.jdk.CollectionConverters._
     val p = java.nio.file.Paths.get(s"$dir/$fileName")
     // close the listing stream (a bare Files.list leaks one fd per
-    // call — and this runs on every IVF index lookup)
+    // call — and this runs on every index lookup)
     val files =
       if (java.nio.file.Files.isDirectory(p))
         scala.util.Using.resource(java.nio.file.Files.list(p))(
           _.iterator().asScala.toVector.sortBy(_.toString))
       else Vector(p)
-    dir + "|" + files.map { f =>
+    dir + "|" + IndexTable.md5Hex(files.map { f =>
       s"${f.getFileName}:${java.nio.file.Files.size(f)}:" +
         java.nio.file.Files.getLastModifiedTime(f).toMillis
-    }.mkString(",").hashCode
+    }.mkString(","))
   }
 
   private[ops] def indexRoot(spark: SparkSession): String =
     spark.conf.getOption("spark.graft.indexRoot")
       .getOrElse(sys.props("java.io.tmpdir") + "/graft_index_lake")
 
-  private def ivfIndexDir(spark: SparkSession, dir: String, nCentroids: Int): String =
+  /** The data dir of a MAINTAINED index over `dir/fileName`: an
+    * [[IndexTable]] under `spark.graft.indexRoot` (a lake path on a
+    * real cluster; a stable local default here) whose manifest is keyed
+    * by the corpus snapshot plus the build `params`. An unchanged
+    * corpus is reused across JVMs with zero rebuild cost; any change
+    * rebuilds `rows`, laid out by [[IndexTable.writeLayout]] on
+    * (`partCol`, a salt of `saltSrc` in `slots`), into a fresh key dir
+    * with the manifest flipped atomically last. */
+  private[ops] def indexDir(spark: SparkSession, family: String, dir: String, fileName: String,
+                            params: String, partCol: String, partitions: Int, slots: Int,
+                            saltSrc: String)(rows: => DataFrame): String =
     synchronized { // serialize same-JVM builders; cross-JVM: see IndexTable
-      // cv2: Lloyd-trained centroids; ls: salted write layout (file
-      // count ≤ nCentroids × slots, see IndexTable.writeLayout).
-      // Deliberately NO IndexTable.appendDelta here (the postings
-      // index has it): appending with FROZEN centroids is the
-      // standard IVF evolution, but this table's centroids are
-      // Lloyd-trained on the full corpus, so a grown corpus retrains
-      // them and can re-assign OLD vectors — a frozen-centroid delta
-      // would diverge from the retrained-assignment aux oracle.
-      // Append-with-frozen-quantizer would need its own key family
-      // and a drift bound; out of scope, rebuild is the honest path.
-      val key = corpusSnapshotKey(dir) + "|nc=" + nCentroids + "|cv2|ls=" + IvfSaltSlots
-      // md5 of the absolute corpus path, not String.hashCode: a 32-bit
-      // hash collision between two corpus dirs would share ONE
+      val key = corpusSnapshotKey(dir, fileName) + params
+      // md5 of the absolute corpus path, not a 32-bit hash: a
+      // collision between two corpus dirs would share ONE
       // IndexTable, silently and with no error — the key
       // check prevents wrong reads, but each rebuild would retire the
       // other corpus's live key dir (perpetual thrash, and a concurrent
       // reader's files deleted mid-scan)
-      val h = java.security.MessageDigest.getInstance("MD5")
-        .digest(java.nio.file.Paths.get(dir).toAbsolutePath.toString.getBytes("UTF-8"))
-        .take(8).map("%02x".format(_)).mkString
-      val name = s"ivf_${h}_$nCentroids"
-      val table = new graft.lake.IndexTable(indexRoot(spark), name)
-      table.currentDir(key).getOrElse {
-        import spark.implicits._
-        val cB = spark.sparkContext.broadcast(coarseCentroids(spark, dir, nCentroids))
-        table.rebuild(key, Seq("cluster"),
-          graft.lake.IndexTable.writeLayout(ivfAssigned(spark, dir, cB),
-            nCentroids, IvfSaltSlots, $"cluster", $"vec_id"))
-      }.toString
+      val h = IndexTable.md5Hex(java.nio.file.Paths.get(dir).toAbsolutePath.toString).take(16)
+      val table = new IndexTable(indexRoot(spark), s"${family}_${h}_$partitions")
+      table.currentDir(key).getOrElse(table.rebuild(key, Seq(partCol),
+        IndexTable.writeLayout(rows, partitions, slots, col(partCol), col(saltSrc)))).toString
+    }
+
+  /** The IVF inverted lists: every vector with its Lloyd-trained coarse
+    * cluster, partitioned by cluster. cv2: Lloyd-trained centroids; ls:
+    * the salted write layout. A grown corpus retrains the centroids and
+    * can re-assign old vectors, so only a rebuild is exact. */
+  private def ivfIndexDir(spark: SparkSession, dir: String, nCentroids: Int): String =
+    indexDir(spark, "ivf", dir, "embeddings.parquet", s"|nc=$nCentroids|cv2|ls=$IvfSaltSlots",
+      "cluster", nCentroids, IvfSaltSlots, "vec_id") {
+      ivfAssigned(spark, dir, spark.sparkContext.broadcast(coarseCentroids(spark, dir, nCentroids)))
     }
 
   /** Inverted-list write-layout salt slots: bounds the index to

@@ -65,6 +65,24 @@ class ResumeSpec extends SparkTestBase {
       sim.seen.map(f => (f.kind, f.url, f.depth)))
   }
 
+  test("a resume with another seen bucket count fails before it commits") {
+    // the bucketed seen scan groups files by the bucket id in their
+    // names: read with another count, seen rows would land in the
+    // wrong anti-join partitions and be crawled again
+    val web = SynthWeb.WebConfig(nHosts = 4, pagesPerHost = 20, imagesPerHost = 8)
+    val root = tmpDir("rebucket")
+    val cfg = CrawlConfig(web = web, seeds = SynthWeb.seeds(2), lakeRoot = root,
+      fetchPartitions = 8, saltSlots = 2, seenBuckets = 8, maxWaves = 2)
+    new Crawler(spark, cfg).run()
+    val log = new graft.lake.RunLog(root)
+    val waves = log.completeWaves
+    assert(waves.last == 2)
+    val e = intercept[IllegalStateException](
+      new Crawler(spark, cfg.copy(seenBuckets = 4, maxWaves = 100)).run())
+    assert(e.getMessage.contains("with 8 buckets") && e.getMessage.contains("has 4"), e.getMessage)
+    assert(log.completeWaves == waves, "the failed resume wrote a manifest")
+  }
+
   test("a crawl and its resume leave the session catalog untouched") {
     val web = SynthWeb.WebConfig(nHosts = 2, pagesPerHost = 6, imagesPerHost = 2)
     val root = tmpDir("nocatalog")

@@ -6,9 +6,9 @@ import scala.jdk.CollectionConverters._
 import graft.SparkTestBase
 
 /** Contract of the snapshot-keyed derived-data table behind the IVF
-  * inverted lists: reuse iff the corpus key matches, rebuild into a
-  * fresh key dir on key change, superseded key dirs cleaned, manifest
-  * flipped last. */
+  * inverted lists and the keyword postings: reuse iff the corpus key
+  * matches, rebuild into a fresh key dir on key change, superseded key
+  * dirs cleaned, manifest flipped last. */
 class IndexTableSpec extends SparkTestBase {
 
   test("index table: reuse on matching key, rebuild + cleanup on key change") {
@@ -53,41 +53,6 @@ class IndexTableSpec extends SparkTestBase {
     assert(spark.read.parquet(d2.toString).count() == 2, "winner's data must be kept")
     assert(!Files.list(d2.getParent).iterator().asScala
       .exists(_.getFileName.toString.startsWith(".stage-")), "staging residue left")
-  }
-
-  test("append delta: base untouched, chain served, rebuild retires the whole chain") {
-    val spark0 = spark
-    import spark0.implicits._
-    val root = tmpDir("idxappend")
-    val t = new IndexTable(root, "post_test")
-
-    val base = t.rebuild("k1", Seq("b"), Seq((1L, 0), (2L, 1)).toDF("id", "b"))
-    val baseFiles = Files.walk(base).iterator().asScala
-      .filter(_.toString.endsWith(".parquet")).map(_.toString).toVector.sorted
-
-    // append against a missing base -> None (caller falls back)
-    assert(t.appendDelta("nope", "k2", Seq("b"), Seq((3L, 0)).toDF("id", "b")).isEmpty)
-
-    val dirs = t.appendDelta("k1", "k2", Seq("b"), Seq((3L, 0), (4L, 2)).toDF("id", "b")).get
-    assert(dirs.size == 2 && dirs.head == base, "base first, delta second")
-    // base files bit-untouched; the union serves all rows; manifest
-    // lineage spans both dirs
-    val after = Files.walk(base).iterator().asScala
-      .filter(_.toString.endsWith(".parquet")).map(_.toString).toVector.sorted
-    assert(after == baseFiles)
-    assert(dirs.map(d => spark.read.parquet(d.toString).count()).sum == 4)
-    assert(t.snapshot(0).get.totalRows == 4)
-    // single-dir accessor must REFUSE the multi-dir index (a legacy
-    // reader scanning just the base would serve a stale subset)
-    assert(t.currentDir("k2").isEmpty && t.currentDirs("k2").contains(dirs))
-    assert(t.currentDirs("k1").isEmpty, "old key must not be served")
-
-    // chain grows once more, then a full rebuild retires EVERY dir
-    val dirs3 = t.appendDelta("k2", "k3", Seq("b"), Seq((5L, 1)).toDF("id", "b")).get
-    assert(dirs3.size == 3 && t.snapshot(0).get.totalRows == 5)
-    val fresh = t.rebuild("k4", Seq("b"), Seq((9L, 0)).toDF("id", "b"))
-    assert(t.currentDirs("k4").contains(Seq(fresh)))
-    dirs3.foreach(d => assert(!Files.exists(d), s"chain dir $d not retired"))
   }
 
   test("concurrent rebuilds of the same key: one atomic publish, no torn data") {

@@ -22,73 +22,56 @@ class SearchSpec extends SparkTestBase {
   }
 
   test("postings index is built once per corpus snapshot, manifest hit after") {
-    val first = Search.postingsIndexDirs(spark, dir)
-    val again = Search.postingsIndexDirs(spark, dir)
+    val first = Search.postingsIndexDir(spark, dir)
+    val again = Search.postingsIndexDir(spark, dir)
     assert(first == again, "second resolve must be a manifest hit, not a rebuild")
-    assert(first.size == 1, "an unchanged corpus must resolve to the single base dir")
     // layout: one bucket=<v> partition dir per realized term bucket
-    val buckets = new java.io.File(first.head).listFiles().count(_.getName.startsWith("bucket="))
+    val buckets = new java.io.File(first).listFiles().count(_.getName.startsWith("bucket="))
     assert(buckets > 1 && buckets <= Search.NBuckets, s"buckets=$buckets")
     // salted write layout: file count bounded by buckets × slots, NOT
     // by upstream task count (the 1000-executor file-explosion guard)
-    val files = spark.read.parquet(first.head).inputFiles.length
+    val files = spark.read.parquet(first).inputFiles.length
     assert(files <= Search.NBuckets * Search.SaltSlots, s"files=$files")
   }
 
-  test("postings index appends a delta for a grown corpus; rewrite rebuilds") {
+  /** Builds a 60-doc corpus, then applies each (ids, body, write mode)
+    * change in turn. After each change the postings index must rebuild
+    * into a fresh key dir, retire the superseded one and serve the
+    * corpus exactly. The first change's docs carry the most term mass,
+    * so they must surface in the top-k. */
+  private def assertRebuildsOnEachChange(name: String, changes: Seq[(Range, String, String)]): Unit = {
     import spark.implicits._
-    val tmp = tmpDir("graft_post_append")
+    val tmp = tmpDir(name)
+    val docsDir = s"$tmp/documents.parquet"
     def corpusDocs(ids: Range, body: String) =
       ids.map(i => (i.toLong, "alpha", s"$body w$i")).toDF("doc_id", "source", "text")
-    corpusDocs(0 until 60, "join hash").coalesce(2)
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val base = Search.postingsIndexDirs(spark, tmp)
-    assert(base.size == 1)
-    val baseListing = spark.read.parquet(base.head).inputFiles.sorted.toSeq
-    // grow the corpus by NEW doc_ids (new part files, old untouched);
-    // higher term mass so appended docs MUST surface in the top-k
-    corpusDocs(100 until 140, "join join join hash").coalesce(1)
-      .write.mode("append").parquet(s"$tmp/documents.parquet")
-    val grown = Search.postingsIndexDirs(spark, tmp)
-    assert(grown.size == 2, s"expected base + delta, got $grown")
-    assert(grown.head == base.head, "base dir must be reused, not rebuilt")
-    assert(spark.read.parquet(grown.head).inputFiles.sorted.toSeq == baseListing,
-      "base dir contents must be untouched by the append")
-    // the delta-built index serves the grown corpus exactly
-    val viaIndex = Search.keywordSearch(spark, tmp).collect().toSet
-    val brute = Search.keywordSearchBrute(spark, tmp).collect().toSet
-    assert(viaIndex == brute)
-    assert(viaIndex.exists(_.getLong(1) >= 100L), "appended docs missing from results")
-    // an in-place REWRITE (same names impossible — overwrite changes
-    // files) must fall back to a full single-dir rebuild
-    corpusDocs(0 until 30, "join hash").coalesce(1)
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val rebuilt = Search.postingsIndexDirs(spark, tmp)
-    assert(rebuilt.size == 1, s"rewrite must rebuild, got $rebuilt")
-    assert(rebuilt.head != base.head)
+    corpusDocs(0 until 60, "join hash").coalesce(2).write.mode("overwrite").parquet(docsDir)
+    var current = Search.postingsIndexDir(spark, tmp)
+    changes.zipWithIndex.foreach { case ((ids, body, mode), i) =>
+      corpusDocs(ids, body).coalesce(1).write.mode(mode).parquet(docsDir)
+      val rebuilt = Search.postingsIndexDir(spark, tmp)
+      assert(rebuilt != current, s"change $i must rebuild into a fresh key dir")
+      assert(!new java.io.File(current).exists(), s"change $i left the superseded dir $current")
+      val viaIndex = Search.keywordSearch(spark, tmp).collect().toSet
+      assert(viaIndex == Search.keywordSearchBrute(spark, tmp).collect().toSet, s"change $i")
+      if (i == 0) assert(viaIndex.exists(r => ids.contains(r.getLong(1).toInt)), "grown docs missing from results")
+      current = rebuilt
+    }
   }
 
-  test("append with OVERLAPPING doc_ids falls back to a full rebuild (id guard)") {
-    import spark.implicits._
-    // file-level detection alone would append here (old files
-    // untouched), but the new part file re-uses doc_id 10 — a split
-    // (term, doc_id) posting across base+delta would double-count
-    // n_terms. The max_doc_id guard must force a rebuild instead.
-    val tmp = tmpDir("graft_post_overlap")
-    def corpusDocs(ids: Range, body: String) =
-      ids.map(i => (i.toLong, "alpha", s"$body w$i")).toDF("doc_id", "source", "text")
-    corpusDocs(0 until 60, "join hash").coalesce(2)
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val base = Search.postingsIndexDirs(spark, tmp)
-    assert(base.size == 1)
-    corpusDocs(10 until 12, "join join join hash").coalesce(1)
-      .write.mode("append").parquet(s"$tmp/documents.parquet")
-    val grown = Search.postingsIndexDirs(spark, tmp)
-    assert(grown.size == 1, s"overlapping-id append must rebuild, got $grown")
-    assert(grown.head != base.head)
-    val viaIndex = Search.keywordSearch(spark, tmp).collect().toSet
-    val brute = Search.keywordSearchBrute(spark, tmp).collect().toSet
-    assert(viaIndex == brute)
+  test("a grown or rewritten corpus rebuilds its postings index, served exactly") {
+    // growth by NEW doc_ids (higher term mass, so the grown docs must
+    // surface in the top-k), then an in-place rewrite
+    assertRebuildsOnEachChange("graft_post_rebuild",
+      Seq((100 until 140, "join join join hash", "append"),
+          (0 until 30, "join hash", "overwrite")))
+  }
+
+  test("a corpus grown by re-used doc_ids rebuilds its postings index, served exactly") {
+    // the new part file re-uses doc_ids 10 and 11: postings split per
+    // (term, doc_id) across two builds would double-count n_terms
+    assertRebuildsOnEachChange("graft_post_reused_ids",
+      Seq((10 until 12, "join join join join hash", "append")))
   }
 
   test("tfidf distinctive terms rank a planted source-exclusive word first") {
