@@ -281,7 +281,9 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
       // order first — exact, because any row in the host's global top-r
       // is also in its salt-group's top-r — so the global window sees at
       // most saltSlots * remaining rows per host (AdmissionSpec asserts
-      // the bound AND exactness). Engaged adaptively: the frontier row
+      // the bound AND exactness). Spark's own InferWindowGroupLimit
+      // cannot do this: it needs a literal rank limit, and `remaining`
+      // is per row. Engaged adaptively: the frontier row
       // count is free (the manifest's stat), and below admitPreLimitMinRows
       // the single-task sort it avoids is cheaper than its extra exchange.
       val preLimited =
@@ -493,7 +495,10 @@ final case class CrawlSummary(waves: Int, seenRows: Long, imageRows: Long)
 /** The skew-safe admission pre-limit, separated for direct testing:
   * AdmissionSpec proves (a) the bound — at most saltSlots * remaining
   * rows per host survive into the global window — and (b) exactness —
-  * the admitted set is bit-identical with and without it. */
+  * the admitted set is bit-identical with and without it. The ops
+  * layer's top-k windows need no such stage (Catalyst infers a
+  * map-side group limit for a literal k); a per-row limit defeats
+  * InferWindowGroupLimit, so admission keeps this one. */
 object Admission {
   import org.apache.spark.sql.functions._
 

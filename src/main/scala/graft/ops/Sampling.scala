@@ -46,27 +46,17 @@ object Sampling {
     * of stratum size). Ties broken by doc_id so the draw is
     * total-ordered and exact.
     *
-    * SKEW-PROOF like the crawler's admission window (Admission.preLimit,
-    * same exactness argument): a giant stratum would otherwise sort its
-    * ENTIRE membership in one window partition — the single-task
-    * straggler at 10^9 docs/source. A salted pre-limit first keeps each
-    * (source, salt)'s `quota` smallest rows — any row in the stratum's
-    * global top-quota is also in its salt-group's top-quota, so the
-    * final window sees at most saltSlots x quota rows per source and
-    * the result is bit-identical to the unlimited window. */
-  def stratifiedSample(spark: SparkSession, dir: String, quota: Int = 50,
-                       saltSlots: Int = 8): DataFrame = {
+    * A giant stratum (10^9 docs/source) reaches its window as at most
+    * (map tasks x quota) rows because quota is a literal <= 1000
+    * (spark.sql.optimizer.windowGroupLimitThreshold): Catalyst then
+    * keeps each map task's `quota` smallest rows per source below the
+    * exchange. The crawler's admission window cannot lean on this —
+    * its limit is per row, so it keeps its own Admission.preLimit. */
+  def stratifiedSample(spark: SparkSession, dir: String, quota: Int = 50): DataFrame = {
     import spark.implicits._
-    val base = docs(spark, dir)
-      .select($"doc_id", $"source", sampleHash($"doc_id").as("h"))
-    val pw = Window.partitionBy($"source", $"psalt").orderBy($"h", $"doc_id")
-    val pre = base
-      .withColumn("psalt", pmod(xxhash64($"doc_id"), lit(math.max(1, saltSlots))))
-      .withColumn("prn", row_number().over(pw))
-      .filter($"prn" <= quota)
-      .drop("psalt", "prn")
     val w = Window.partitionBy($"source").orderBy($"h", $"doc_id")
-    pre
+    docs(spark, dir)
+      .select($"doc_id", $"source", sampleHash($"doc_id").as("h"))
       .withColumn("rnk", row_number().over(w).cast("bigint"))
       .filter($"rnk" <= quota)
       .select($"doc_id", $"source", $"rnk")
@@ -123,23 +113,13 @@ object Sampling {
   /** Cluster-balanced embedding sample: the `quota` lowest-hash
     * vectors per IVF cluster — semantic-diversity subsampling (equal
     * representation per embedding-space region regardless of region
-    * density, the SemDeDup-adjacent curation step). Same skew-proof
-    * shape as [[stratifiedSample]]: a salted pre-limit bounds the
-    * final window to saltSlots × quota rows per cluster, bit-identical
-    * to the unlimited window (any row in a cluster's global
-    * top-quota is also in its salt-group's top-quota). */
-  def clusterSample(spark: SparkSession, dir: String, quota: Int = ClusterQuota,
-                    saltSlots: Int = 8): DataFrame = {
+    * density, the SemDeDup-adjacent curation step). Skew-bounded like
+    * [[stratifiedSample]], under the same literal-quota <= 1000
+    * condition. */
+  def clusterSample(spark: SparkSession, dir: String, quota: Int = ClusterQuota): DataFrame = {
     import spark.implicits._
-    val base = clusterSampleAux(spark, dir)
-    val pw = Window.partitionBy($"cluster", $"psalt").orderBy($"h", $"vec_id")
-    val pre = base
-      .withColumn("psalt", pmod(xxhash64($"vec_id"), lit(math.max(1, saltSlots))))
-      .withColumn("prn", row_number().over(pw))
-      .filter($"prn" <= quota)
-      .drop("psalt", "prn")
     val w = Window.partitionBy($"cluster").orderBy($"h", $"vec_id")
-    pre
+    clusterSampleAux(spark, dir)
       .withColumn("rnk", row_number().over(w).cast("bigint"))
       .filter($"rnk" <= quota)
       .select($"vec_id", $"cluster", $"rnk")

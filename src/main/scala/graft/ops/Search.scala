@@ -141,29 +141,18 @@ object Search {
     *
     * Scale shape: two token shuffles (tf on (source, term), df on
     * term), then the vocab-sized df side joins tf (AQE broadcasts
-    * it). The top-k rank is SKEW-PROOF like stratifiedSample: a
-    * per-source vocabulary can be 10^8 terms, so a plain
-    * Window.partitionBy(source) would sort a source's whole vocab in
-    * ONE task — a salted pre-limit keeps each (source, salt)'s k best
-    * first (any term in a source's global top-k is also in its
-    * salt-group's top-k), bounding the final window to saltSlots × k
-    * rows per source, bit-identical to the unlimited window. */
-  def tfidfTerms(spark: SparkSession, dir: String, k: Int = TfidfTopK,
-                 saltSlots: Int = 8): DataFrame = {
+    * it). A source's vocabulary (up to 10^8 terms) reaches the rank
+    * window as at most (map tasks x k) rows because k is a literal
+    * <= 1000 (spark.sql.optimizer.windowGroupLimitThreshold): Catalyst
+    * then keeps each map task's k best per source below the exchange. */
+  def tfidfTerms(spark: SparkSession, dir: String, k: Int = TfidfTopK): DataFrame = {
     import spark.implicits._
     val toks = tokens(spark, dir)
     val tf = toks.groupBy($"source", $"term").agg(count(lit(1)).as("tf"))
     val df = toks.groupBy($"term").agg(countDistinct($"doc_id").as("df"))
-    val scored = tf.join(df, Seq("term"))
-      .withColumn("score", expr(s"(tf * $TfidfScale) div df"))
-    val pw = Window.partitionBy($"source", $"psalt").orderBy($"score".desc, $"term")
-    val pre = scored
-      .withColumn("psalt", pmod(xxhash64($"term"), lit(math.max(1, saltSlots))))
-      .withColumn("prn", row_number().over(pw))
-      .filter($"prn" <= k)
-      .drop("psalt", "prn")
     val w = Window.partitionBy($"source").orderBy($"score".desc, $"term")
-    pre
+    tf.join(df, Seq("term"))
+      .withColumn("score", expr(s"(tf * $TfidfScale) div df"))
       .withColumn("rnk", row_number().over(w).cast("bigint"))
       .filter($"rnk" <= k)
       .select($"source", $"term", $"tf", $"df", $"score", $"rnk")

@@ -137,7 +137,8 @@ object Sketches {
   private def valCents(c: Column): Column =
     floor(c * 100).cast("bigint")
 
-  /** (event_id, event_type, h, val_cents) dump for the {AUX} oracle. */
+  /** (event_id, event_type, h, val_cents): the rows [[bottomkQuantile]]
+    * ranks, dumped for the {AUX} oracle. */
   def bottomkHashesAux(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     events(spark, dir).select($"event_id", $"event_type",
@@ -156,22 +157,13 @@ object Sketches {
     * pattern: that is what makes an approx operator oracle-exact);
     * [[bottomkQuantileEstimate]] is the driver-side epilogue.
     *
-    * Skew-proof like [[Sampling.stratifiedSample]]: a salted pre-limit
-    * bounds the final per-type window to saltSlots × k rows — bit-equal
-    * to the unlimited window by the same top-k-of-salt-groups argument. */
-  def bottomkQuantile(spark: SparkSession, dir: String, k: Int = BottomK,
-                      saltSlots: Int = 8): DataFrame = {
+    * Skew-bounded like [[Sampling.stratifiedSample]], under the same
+    * condition: k is a literal <= 1000, so Catalyst keeps each map
+    * task's k smallest per type below the window's exchange. */
+  def bottomkQuantile(spark: SparkSession, dir: String, k: Int = BottomK): DataFrame = {
     import spark.implicits._
-    val base = events(spark, dir).select($"event_id", $"event_type",
-      bkHash($"event_id").as("h"), valCents($"value").as("val_cents"))
-    val pw = Window.partitionBy($"event_type", $"psalt").orderBy($"h", $"event_id")
-    val pre = base
-      .withColumn("psalt", pmod(xxhash64($"event_id"), lit(math.max(1, saltSlots))))
-      .withColumn("prn", row_number().over(pw))
-      .filter($"prn" <= k)
-      .drop("psalt", "prn")
     val w = Window.partitionBy($"event_type").orderBy($"h", $"event_id")
-    pre
+    bottomkHashesAux(spark, dir)
       .withColumn("rnk", row_number().over(w).cast("bigint"))
       .filter($"rnk" <= k)
       .select($"event_type", $"rnk", $"h", $"val_cents")

@@ -422,11 +422,7 @@ class OpsSpec extends SparkTestBase {
     }
   }
 
-  test("cluster sample: salted pre-limit equals the plain window, quota binds per cluster") {
-    val spark0 = spark
-    import spark0.implicits._
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
+  test("cluster sample is the exact per-cluster bottom-quota, quota binds per cluster") {
     val dir = "/root/testdata/sf0.001"
     // quota 10: the densest sf0.001 cluster holds 38 vectors, so the
     // driver default of 40 would never truncate here (at the driver's
@@ -434,13 +430,14 @@ class OpsSpec extends SparkTestBase {
     val quota = 10
     val got = Sampling.clusterSample(spark, dir, quota = quota).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    // oracle-in-Spark: the unlimited window over the same dump
-    val w = Window.partitionBy($"cluster").orderBy($"h", $"vec_id")
-    val want = Sampling.clusterSampleAux(spark, dir)
-      .withColumn("rnk", row_number().over(w).cast("bigint"))
-      .filter($"rnk" <= quota)
-      .select($"vec_id", $"cluster", $"rnk").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    // driver-side reference: per cluster, sort the dump by (h, vec_id)
+    // and take the first `quota`
+    val all = Sampling.clusterSampleAux(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    val want = all.groupBy(_._2).values.flatMap { rows =>
+      rows.sortBy(t => (t._3, t._1)).take(quota).zipWithIndex
+        .map { case ((id, c, _), i) => (id, c, (i + 1).toLong) }
+    }.toSet
     assert(got == want)
     // the quota binds (dense clusters truncated) and every realized
     // cluster is represented — the diversity property
@@ -915,7 +912,7 @@ class OpsSpec extends SparkTestBase {
     val sketch = Sketches.bottomkQuantile(spark, sfDir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     // exactness: per type, the sketch is PRECISELY the k lowest-hash
-    // events (the salted pre-limit must not change the draw)
+    // events, ranked by (h, event_id)
     val all = Sketches.bottomkHashesAux(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     all.groupBy(_._2).foreach { case (tpe, rows) =>

@@ -1,6 +1,13 @@
 package graft.ops
 
 import graft.SparkTestBase
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{DenseRank, Expression, Rank, RowNumber}
+import org.apache.spark.sql.execution.{CommandResultExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
 
 /** Plan-quality gates (the 100 TB checklist): filters reach the
   * parquet scan, projections prune columns, small dims broadcast, and
@@ -11,10 +18,52 @@ class PlanSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def plan(df: org.apache.spark.sql.DataFrame): String = {
+  private def plan(df: DataFrame): String = {
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(out)) { df.explain("formatted") }
     out.toString
+  }
+
+  // every node of a physical plan, through adaptive wrappers, query
+  // stages, commands and cached relations (a cached relation's plan is
+  // shared by every query reading it)
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case i: InMemoryTableScanExec => nodes(i.relation.cachedPlan)
+    case c: CommandResultExec => nodes(c.commandPhysicalPlan)
+    case o => o.children.flatMap(nodes)
+  })
+
+  /** The per-group top-k skew bound: every exchange feeding a rank
+    * window must read Catalyst's map-side `WindowGroupLimit … Partial`
+    * on the window's own partition keys, so no group ships more than
+    * (map tasks x k) rows into its window. InferWindowGroupLimit adds
+    * it only for a literal rank filter with k <= 1000; a non-literal
+    * filter or a larger k silently brings back the unbounded window.
+    * Returns the number of exchanges checked. */
+  private def groupLimitedExchanges(df: DataFrame): Int = {
+    val windows = nodes(df.queryExecution.executedPlan).collect {
+      case w: WindowExec if w.windowExpression.exists(_.exists {
+        case _: RowNumber | _: Rank | _: DenseRank => true
+        case _ => false
+      }) => w
+    }
+    assert(windows.nonEmpty, "no rank window:\n" + plan(df))
+    def feed(p: SparkPlan): Option[ShuffleExchangeExec] = p match {
+      case e: ShuffleExchangeExec => Some(e)
+      case u: UnaryExecNode => feed(u.child)
+      case _ => None
+    }
+    def sameKeys(a: Seq[Expression], b: Seq[Expression]) =
+      a.size == b.size && a.zip(b).forall { case (x, y) => x.semanticEquals(y) }
+    windows.flatMap(w => feed(w.child).map(w -> _)).map { case (w, e) =>
+      e.child match {
+        case g: WindowGroupLimitExec if g.mode == Partial && sameKeys(g.partitionSpec, w.partitionSpec) =>
+        case other => fail(s"the exchange under the window on ${w.partitionSpec} reads " +
+          s"${other.nodeName}, not a partial WindowGroupLimit on the same keys:\n" + plan(df))
+      }
+    }.size
   }
 
   test("substring filter is pushed into the parquet scan") {
@@ -272,23 +321,25 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
-  test("hash sample never shuffles; stratified = salted pre-limit + bounded final window") {
+  test("hash sample never shuffles; stratified = one group-limited window shuffle") {
     val p1 = plan(Sampling.hashSample(spark, dir))
     assert(!p1.contains("Exchange"), "bernoulli-by-hash must not shuffle:\n" + p1)
     val pm = plan(Sampling.mixSources(spark, dir))
     assert(!pm.contains("Exchange"), "weighted mix must not shuffle:\n" + pm)
-    // the skew-proof shape: one (source, salt) shuffle for the
-    // pre-limit, one source shuffle for the final (bounded) window -
-    // a single unlimited window would sort a whole stratum in one task
-    val p2 = plan(Sampling.stratifiedSample(spark, dir))
+    // the skew-proof shape: one source shuffle, fed by a map-side
+    // group limit - an unlimited window would sort a whole stratum in
+    // one task
+    val s = Sampling.stratifiedSample(spark, dir)
+    val p2 = plan(s)
     val exchanges = "\\(\\d+\\) Exchange".r.findAllIn(p2).size
-    assert(exchanges == 2, s"expected 2 shuffles (salted pre-limit + final), got $exchanges:\n" + p2)
-    assert("Window".r.findAllIn(p2).size >= 2, p2)
-    // the bottom-k sketch rides the same skew-proof two-window shape
-    val p3 = plan(graft.ops.Sketches.bottomkQuantile(spark, dir))
+    assert(exchanges == 1, s"expected 1 shuffle, got $exchanges:\n" + p2)
+    assert(groupLimitedExchanges(s) == 1)
+    // the bottom-k sketch rides the same one-window shape
+    val b = graft.ops.Sketches.bottomkQuantile(spark, dir)
+    val p3 = plan(b)
     val ex3 = "\\(\\d+\\) Exchange".r.findAllIn(p3).size
-    assert(ex3 == 2, s"expected 2 shuffles (salted pre-limit + final), got $ex3:\n" + p3)
-    assert("Window".r.findAllIn(p3).size >= 2, p3)
+    assert(ex3 == 1, s"expected 1 shuffle, got $ex3:\n" + p3)
+    assert(groupLimitedExchanges(b) == 1)
   }
 
   test("count-min: full-data + item-sized shuffles only; point query broadcasts the sketch") {
@@ -415,10 +466,7 @@ class PlanSpec extends SparkTestBase {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.catalyst.plans.LeftAnti
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution._
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec, QueryExecution, exchange}
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.util.QueryExecutionListener
     import graft.core.SynthWeb
@@ -436,17 +484,8 @@ class PlanSpec extends SparkTestBase {
     assert(crawler.frontierT.snapshot(2).get.totalRows > 0 && !bloom.isEmpty,
       "wave 2 must be a warm wave: a frontier to crawl and a bloom to probe")
 
-    // every node of a final plan, through adaptive wrappers, query
-    // stages, commands and cached relations (a cached relation's plan is
-    // shared by every query reading it, so nodes are de-duplicated by
-    // identity below: one node = one operator the wave ran)
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case i: InMemoryTableScanExec => nodes(i.relation.cachedPlan)
-      case c: CommandResultExec => nodes(c.commandPhysicalPlan)
-      case o => o.children.flatMap(nodes)
-    })
+    // cached plans are shared by every query reading them, so nodes are
+    // de-duplicated by identity below: one node = one operator the wave ran
     val plans = new ConcurrentLinkedQueue[SparkPlan]()
     val jobs = new AtomicInteger
     val qel = new QueryExecutionListener {
@@ -575,13 +614,14 @@ class PlanSpec extends SparkTestBase {
     assert(shuffles.size <= 3, s"expected <=3 lineage shuffles, got ${shuffles.size}")
   }
 
-  test("cluster sample: kernel assignment + two bounded window shuffles") {
-    val p = plan(Sampling.clusterSample(spark, dir))
+  test("cluster sample: kernel assignment + one group-limited window shuffle") {
+    val s = Sampling.clusterSample(spark, dir)
+    val p = plan(s)
     // assignment is a broadcast-centroid map over the embeddings scan;
-    // the salted pre-limit + final window are the only exchanges, and
-    // the final window sees <= saltSlots x quota rows per cluster
+    // the window's cluster shuffle is the only exchange
     val ex = "\\(\\d+\\) Exchange".r.findAllIn(p).size
-    assert(ex <= 2, s"expected <=2 shuffles, got $ex:\n" + p)
+    assert(ex <= 1, s"expected <=1 shuffle, got $ex:\n" + p)
+    assert(groupLimitedExchanges(s) == 1)
     assert(!p.contains("CartesianProduct"), p)
   }
 
@@ -596,14 +636,19 @@ class PlanSpec extends SparkTestBase {
       "no map-side combine:\n" + p)
   }
 
-  test("tfidf: salted pre-limit bounds the rank window; no cartesian") {
-    val p = plan(Search.tfidfTerms(spark, dir))
-    // two pre-limit/final window partitionings must both appear — the
-    // final one sees <= saltSlots x k rows per source, never the
+  test("tfidf: a map-side group limit bounds the rank window; no cartesian") {
+    val t = Search.tfidfTerms(spark, dir)
+    val p = plan(t)
+    // the window sees <= (map tasks x k) rows per source, never the
     // source's whole vocabulary
-    assert("partitionBy.*psalt|psalt".r.findFirstIn(p).isDefined ||
-      p.contains("psalt"), "salted pre-limit missing:\n" + p)
+    assert(groupLimitedExchanges(t) == 1)
     assert(!p.contains("CartesianProduct"), p)
+  }
+
+  test("spark-only top-k queries keep the map-side group limit under the rank window") {
+    // no hand-rolled pre-limit in these: the bound is Catalyst's alone
+    for (q <- Seq("q_topk_per_group", "q_lsh_ann", "q_ivf_ann", "q_ivf_partitioned"))
+      assert(groupLimitedExchanges(graft.SparkEntry.queries(q)(spark, dir)) == 1, q)
   }
 
   test("image quality gate is a pure scan->map pipeline (zero shuffles)") {
