@@ -42,14 +42,6 @@ final case class CrawlConfig(
     saltSlots: Int = 8,           // sub-slots one hot host spreads over
     robots: Boolean = false,      // engine extension: robots.txt cache table
     perWaveHostQuota: Option[Int] = None, // engine extension: token bucket
-    // broadcast the budget only while it's small: at 10^7+ hosts the
-    // per-wave broadcast (hundreds of MB, deserialized on every
-    // executor) and the repartition(1) budget rewrite both become the
-    // wave's fixed cost. Above this row count the budget joins as a
-    // plain shuffled join (the admission window shuffles by host
-    // anyway, so the extra exchange is only the budget's own) and the
-    // rewrite spreads over seenBuckets host-hashed files.
-    budgetBroadcastMaxRows: Long = 4L * 1000 * 1000,
     maxWaves: Int = 100
 )
 
@@ -76,7 +68,7 @@ final case class FrontierSnapshot(wave: Int, source: SnapshotMeta, totalRows: Lo
 /** The Spark-native wave engine. Each crawl wave is one typed Dataset
   * transform (SURVEY.md §3.2):
   *
-  *   frontier_k --window+broadcast-join--> admitted
+  *   frontier_k --budget join+window--> admitted
   *     --salted mapPartitions(fetch pages AND images)--> fetched (cached)
   *   fetched --> images_{k+1}, budget_{k+1}
   *   fetched --explode--> children --one (kind,url,depth) exchange + agg-->
@@ -266,13 +258,13 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
 
       // --- A3 + J2: budget-capped admission.
       // row_number per host in canonical (kind,url,depth) order — the
-      // fixed linearization shared with RefSim (SURVEY.md §3.4); broadcast
-      // the budget (bounded by #hosts, tiny next to the frontier).
-      // adaptive dim-join strategy (see CrawlConfig.budgetBroadcastMaxRows)
-      val smallBudget = budgetIn.totalRows <= cfg.budgetBroadcastMaxRows
+      // fixed linearization shared with RefSim (SURVEY.md §3.4). Catalyst
+      // picks the budget join by the scan's recorded file bytes: a
+      // broadcast while the budget is under autoBroadcastJoinThreshold,
+      // else a shuffled join whose host partitioning the window reuses.
       val base = afterRobots
         .filter($"host" =!= "")                              // P2 null-host drop
-        .join(if (smallBudget) broadcast(budget) else budget, Seq("host"), "left")
+        .join(budget, Seq("host"), "left")
         .na.fill(0L, Seq("visits"))
       // Budget-aware PRE-LIMIT (SURVEY.md §7 hard part 5): a hot host's
       // candidates would otherwise all land in ONE window partition (the
@@ -314,17 +306,12 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
 
       // --- A2: merge admitted counts into the budget table (full rewrite;
       // the table is <= #hosts rows). Runs concurrently with the images
-      // commit and the novelty chain, all off the fetched cache.
+      // commit and the novelty chain, all off the fetched cache. The
+      // aggregation's host exchange is the write's layout: AQE coalesces
+      // it to one file while the budget is small.
       val budgetChain = async {
-        val newBudget = budget.unionByName(fetched.select($"host", lit(1L).as("visits")))
-          .groupBy($"host").agg(sum($"visits").as("visits"))
-        // repartition(1), NOT coalesce(1): coalesce propagates up and would
-        // run the whole aggregation single-task at any core count; a big
-        // (10^7-host) budget instead spreads over host-hashed files
-        val out =
-          if (smallBudget) newBudget.repartition(1)
-          else newBudget.repartition(cfg.seenBuckets, $"host")
-        budgetT.commit(wave + 1, out)
+        budgetT.commit(wave + 1, budget.unionByName(fetched.select($"host", lit(1L).as("visits")))
+          .groupBy($"host").agg(sum($"visits").as("visits")))
       }
       // PNG/JPEG payloads are already entropy-coded — snappy on top only
       // burns CPU, so the images table is written uncompressed
@@ -450,16 +437,10 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
       .as[String]
       .mapPartitions(_.map(h => (h, SynthWeb.robots(h))))
       .toDF("host", "disallow")
-    val snap = robotsT.commit(wave + 1, fetched.repartition(1))
-    val allRules = robotsT.read(known :+ snap)
-    // same adaptive dim-join rule as the budget: per-host rules stop
-    // broadcasting once the host space outgrows the threshold
-    val rulesJoin =
-      if ((known :+ snap).map(_.totalRows).sum <= cfg.budgetBroadcastMaxRows)
-        broadcast(allRules)
-      else allRules
+    // the distinct's host exchange is the write's layout, as for the budget
+    val snap = robotsT.commit(wave + 1, fetched)
     val pathCol = regexp_replace($"url", "^[a-z][a-z0-9+.-]*://[^/]*", "")
-    val joined = frontier.join(rulesJoin, Seq("host"), "left")
+    val joined = frontier.join(robotsT.read(known :+ snap), Seq("host"), "left")
       .withColumn("path", pathCol)
       .withColumn("blocked",
         coalesce(exists($"disallow", p => startswith($"path", p)), lit(false)))

@@ -242,8 +242,7 @@ object Dedup {
   }
 
   /** Edge-count threshold below which components are resolved by a
-    * driver-side union-find instead of the distributed loop — the same
-    * adaptive small-side pattern as the budget broadcast join: a pair
+    * driver-side union-find instead of the distributed loop: a pair
     * graph under ~4M edges is tens of MB of driver-bounded metadata
     * and resolves in milliseconds, where every distributed round pays
     * fresh codegen + scheduling (~1s/round measured). Both paths

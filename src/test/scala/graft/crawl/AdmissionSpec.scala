@@ -55,20 +55,29 @@ class AdmissionSpec extends SparkTestBase {
   }
 
   test("shuffled (non-broadcast) budget join path conforms to RefSim") {
-    // budgetBroadcastMaxRows = 0 forces the 10^7-host strategy (plain
-    // shuffled dim join + host-hashed budget rewrite) on a small crawl;
-    // the admitted/seen results must be bit-identical to the broadcast
-    // path (i.e. to RefSim)
+    // with broadcasts off, Catalyst plans the 10^7-host shape on a small
+    // crawl (plain shuffled budget join, budget rewrite off the
+    // aggregation's host exchange); the admitted/seen results must be
+    // bit-identical to the broadcast path (i.e. to RefSim)
     val spark0 = spark
     import spark0.implicits._
+    import graft.Plans.{captured, nodes, scans, withConf}
     import graft.core.{Finding, RefSim, SynthWeb}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
     val web = SynthWeb.WebConfig(nHosts = 6, pagesPerHost = 25, imagesPerHost = 8)
     val seeds = SynthWeb.seeds(3)
     val sim = RefSim.run(seeds, web)
     val crawler = new Crawler(spark, CrawlConfig(
       web = web, seeds = seeds, lakeRoot = tmpDir("shuffled_budget"),
-      fetchPartitions = 8, saltSlots = 2, budgetBroadcastMaxRows = 0L))
-    crawler.run()
+      fetchPartitions = 8, saltSlots = 2))
+    val qes = withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1") {
+      captured(spark)(crawler.run())
+    }
+    val budgetJoins = qes.flatMap(qe => nodes(qe.executedPlan))
+      .collect { case j: BaseJoinExec if scans(j.right, "host_budget") => j }
+    assert(budgetJoins.nonEmpty, "no budget join ran")
+    assert(!budgetJoins.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+      "the budget was broadcast with broadcasts off")
     val engineSeen = crawler.seenT.readAll()
       .select($"kind", $"url", $"depth").as[(String, String, Int)]
       .collect().map(t => Finding(t._1, t._2, t._3)).toSet
