@@ -24,19 +24,20 @@ final case class CrawlConfig(
     seeds: Seq[String],
     lakeRoot: String,
     depthLimit: Int = 4,          // src/main.rs:23; frontier_{k+1} = seen_{k+1} with depth < it
-    hostVisitLimit: Int = 256,    // src/main.rs:24 (=> 257 admissions/host)
+    // src/main.rs:24 (=> 257 admissions/host). The admission window's
+    // skew bound needs hostVisitLimit + 1 <= 1000
+    // (spark.sql.optimizer.windowGroupLimitThreshold); above that,
+    // admission is still exact but the window's input is unbounded
+    hostVisitLimit: Int = 256,
     bloom: Boolean = true,
     bloomExpectedItems: Long = 4L * 1000 * 1000,
     bloomFpp: Double = 0.01,
     // seen-table hash buckets (= bloom shards), fixed for a lake's
     // lifetime: every seen snapshot records it and a read checks it
     seenBuckets: Int = 32,
-    // engage the budget-aware pre-limit before the admission window
-    // only when the wave's frontier is big enough that one viral host's
-    // window partition could actually straggle;
-    // below this the pre-limit's extra exchange costs more than the
-    // single-task sort it avoids (measured: ~25% admit overhead at
-    // sandbox sizes). 0 forces it on (specs + conformance do this).
+    // unused: nothing reads it; it stays for callers that pass it by
+    // name. Admission's skew bound is the window's map-side group limit,
+    // at every wave size (see hostVisitLimit)
     admitPreLimitMinRows: Long = 4L * 1000 * 1000,
     fetchPartitions: Int = 64,    // salted fetch-stage slots
     saltSlots: Int = 8,           // sub-slots one hot host spreads over
@@ -68,7 +69,7 @@ final case class FrontierSnapshot(wave: Int, source: SnapshotMeta, totalRows: Lo
 /** The Spark-native wave engine. Each crawl wave is one typed Dataset
   * transform (SURVEY.md §3.2):
   *
-  *   frontier_k --budget join+window--> admitted
+  *   frontier_k --budget join+group-limited window--> admitted
   *     --salted mapPartitions(fetch pages AND images)--> fetched (cached)
   *   fetched --> images_{k+1}, budget_{k+1}
   *   fetched --explode--> children --one (kind,url,depth) exchange + agg-->
@@ -195,7 +196,7 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
   /** Salted fetch-stage key: hot hosts spread over saltSlots sub-slots
     * while the admission window stays host-partitioned (SURVEY.md §4). */
   private def saltedKey =
-    pmod(xxhash64(col("host")), lit(cfg.fetchPartitions / math.max(1, cfg.saltSlots))) *
+    pmod(xxhash64(col("host")), lit(cfg.fetchPartitions / cfg.saltSlots)) *
       lit(cfg.saltSlots) + pmod(xxhash64(col("url")), lit(cfg.saltSlots))
 
   // ---------------------------------------------------------------- seeds
@@ -235,7 +236,6 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
   def runWave(wave: Int, bloomState: PartitionedBloom): Long = {
     val waveT0 = System.nanoTime()
     val webCfg = cfg.web
-    val visitLimit = cfg.hostVisitLimit
     val frontierIn = frontierT.snapshot(wave).get
     val budgetIn = budgetT.snapshot(wave).get
     val robotsIn = if (cfg.robots) robotsT.snapshots(wave) else Nil
@@ -256,38 +256,14 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
         if (!cfg.robots) (frontier, Map.empty: Crawler.Cells, Nil)
         else applyRobots(wave, frontier, robotsIn)
 
-      // --- A3 + J2: budget-capped admission.
-      // row_number per host in canonical (kind,url,depth) order — the
-      // fixed linearization shared with RefSim (SURVEY.md §3.4). Catalyst
-      // picks the budget join by the scan's recorded file bytes: a
-      // broadcast while the budget is under autoBroadcastJoinThreshold,
+      // --- A3 + J2: budget-capped admission (Admission.admit).
+      // Catalyst picks the budget join by the scan's recorded file bytes:
+      // a broadcast while the budget is under autoBroadcastJoinThreshold,
       // else a shuffled join whose host partitioning the window reuses.
-      val base = afterRobots
+      val admitted = Admission.admit(afterRobots
         .filter($"host" =!= "")                              // P2 null-host drop
         .join(budget, Seq("host"), "left")
-        .na.fill(0L, Seq("visits"))
-      // Budget-aware PRE-LIMIT (SURVEY.md §7 hard part 5): a hot host's
-      // candidates would otherwise all land in ONE window partition (the
-      // wave's straggler at 100x). Within salted (host, psalt) partitions
-      // keep only each host's `remaining`-smallest rows in canonical
-      // order first — exact, because any row in the host's global top-r
-      // is also in its salt-group's top-r — so the global window sees at
-      // most saltSlots * remaining rows per host (AdmissionSpec asserts
-      // the bound AND exactness). Spark's own InferWindowGroupLimit
-      // cannot do this: it needs a literal rank limit, and `remaining`
-      // is per row. Engaged adaptively: the frontier row
-      // count is free (the manifest's stat), and below admitPreLimitMinRows
-      // the single-task sort it avoids is cheaper than its extra exchange.
-      val preLimited =
-        if (frontierIn.totalRows < cfg.admitPreLimitMinRows) base
-        else Admission.preLimit(base, visitLimit, cfg.saltSlots)
-      val w = Window.partitionBy($"host").orderBy($"kind", $"url", $"depth")
-      val ranked = preLimited.withColumn("rn", row_number().over(w))
-      val quotaFilter = cfg.perWaveHostQuota
-        .map(q => $"rn" <= q).getOrElse(lit(true))           // token bucket (ext.)
-      val admitted = ranked
-        .filter($"visits" + $"rn" <= lit(visitLimit + 1) && quotaFilter)
-        .select($"kind", $"url", $"depth", $"host")
+        .na.fill(0L, Seq("visits")), cfg.hostVisitLimit, cfg.perWaveHostQuota)
         .as[FrontierRow]
 
       // --- S3-S5 + M1..M5: ONE fetch stage for pages and images, salted by
@@ -473,26 +449,30 @@ class Crawler(spark: SparkSession, cfg: CrawlConfig) extends Serializable {
 
 final case class CrawlSummary(waves: Int, seenRows: Long, imageRows: Long)
 
-/** The skew-safe admission pre-limit, separated for direct testing:
-  * AdmissionSpec proves (a) the bound — at most saltSlots * remaining
-  * rows per host survive into the global window — and (b) exactness —
-  * the admitted set is bit-identical with and without it. The ops
-  * layer's top-k windows need no such stage (Catalyst infers a
-  * map-side group limit for a literal k); a per-row limit defeats
-  * InferWindowGroupLimit, so admission keeps this one. */
+/** Budget-capped admission, the window and filter `runWave` runs,
+  * separated so AdmissionSpec tests the shipped expression. */
 object Admission {
-  import org.apache.spark.sql.functions._
-
-  /** `base` must carry (kind, url, depth, host, visits). Keeps each
-    * host's `visitLimit + 1 - visits` smallest rows per salt slot in
-    * canonical (kind, url, depth) order. */
-  def preLimit(base: DataFrame, visitLimit: Int, saltSlots: Int): DataFrame = {
-    val pw = Window.partitionBy(col("host"), col("psalt"))
-      .orderBy(col("kind"), col("url"), col("depth"))
+  /** `base` carries (kind, url, depth, host, visits). Admits each host's
+    * `visitLimit + 1 - visits` first rows in the canonical (kind, url,
+    * depth) order shared with RefSim (SURVEY.md §3.4), at most `quota`
+    * of them (token bucket, engine extension).
+    *
+    * The skew bound (SURVEY.md §7 hard part 5): `rn <= visitLimit + 1`
+    * is implied by the budget term (visits >= 0), but only a literal
+    * rank limit lets Catalyst's InferWindowGroupLimit plan a map-side
+    * `WindowGroupLimit … Partial` below the window's host exchange, so
+    * a hot host ships at most (map tasks x min(quota, visitLimit + 1))
+    * rows into its window instead of its whole candidate flood. The
+    * rule needs that limit <= spark.sql.optimizer.windowGroupLimitThreshold
+    * (1000). A shuffled budget join is itself the host exchange: the
+    * window adds none, and the limit then trims only its input. */
+  def admit(base: DataFrame, visitLimit: Int, quota: Option[Int]): DataFrame = {
+    val w = Window.partitionBy(col("host")).orderBy(col("kind"), col("url"), col("depth"))
+    val rn = col("rn")
+    val cap = lit(visitLimit + 1)
     base
-      .withColumn("psalt", pmod(xxhash64(col("url")), lit(math.max(1, saltSlots))))
-      .withColumn("prn", row_number().over(pw))
-      .filter(col("prn") <= lit(visitLimit + 1).cast("long") - col("visits"))
-      .drop("psalt", "prn")
+      .withColumn("rn", row_number().over(w))
+      .filter(col("visits") + rn <= cap && rn <= cap && quota.fold(lit(true))(rn <= _))
+      .select(col("kind"), col("url"), col("depth"), col("host"))
   }
 }

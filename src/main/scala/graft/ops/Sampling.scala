@@ -50,8 +50,8 @@ object Sampling {
     * (map tasks x quota) rows because quota is a literal <= 1000
     * (spark.sql.optimizer.windowGroupLimitThreshold): Catalyst then
     * keeps each map task's `quota` smallest rows per source below the
-    * exchange. The crawler's admission window cannot lean on this —
-    * its limit is per row, so it keeps its own Admission.preLimit. */
+    * exchange. The crawler's admission window leans on the same rule
+    * through its literal `rn <= hostVisitLimit + 1` conjunct. */
   def stratifiedSample(spark: SparkSession, dir: String, quota: Int = 50): DataFrame = {
     import spark.implicits._
     val w = Window.partitionBy($"source").orderBy($"h", $"doc_id")

@@ -2,21 +2,21 @@ package graft.crawl
 
 import graft.SparkTestBase
 
-/** The skew-safety property of the budget-aware admission pre-limit
-  * (SURVEY.md §7 hard part 5): with a viral host holding 100k+
-  * candidates, the global per-host admission window would receive that
-  * entire flood in ONE partition (the wave's single-task straggler at
-  * scale). The pre-limit must (a) bound what reaches the window to
-  * saltSlots * remaining rows per host and (b) change NOTHING about
-  * which rows are admitted. */
+/** The skew-safety of budget-capped admission (SURVEY.md §7 hard part
+  * 5): with a viral host holding 100k+ candidates, the per-host
+  * admission window would receive that entire flood in ONE partition
+  * (the wave's single-task straggler at scale). Admission.admit, the
+  * expression runWave runs, must (a) plan a map-side group limit under
+  * the window's host exchange, (b) so that exchange ships at most
+  * (map tasks x limit) rows of a host, and (c) admit exactly each
+  * host's remaining budget in canonical order. */
 class AdmissionSpec extends SparkTestBase {
-  import org.apache.spark.sql.functions._
 
-  test("pre-limit bounds per-host window input and preserves the admitted set exactly") {
+  test("admission window input is group-limited and exact") {
     val spark0 = spark
     import spark0.implicits._
     val visitLimit = 256
-    val saltSlots = 8
+    val mapTasks = 16
 
     // hot host: 120k candidates; 10 cold hosts: 50 each; mixed prior
     // budgets (hot host half-spent, one cold host fully spent)
@@ -24,34 +24,42 @@ class AdmissionSpec extends SparkTestBase {
       (0 until 120000).map(i => ("page", f"http://hot.test/p$i%06d", 0, "hot.test")) ++
       (for (h <- 0 until 10; i <- 0 until 50)
         yield ("page", s"http://c$h.test/p$i", 0, s"c$h.test"))
-    val budget = Seq(("hot.test", 128L), ("c0.test", 257L)).toDF("host", "visits")
+    val visits = Map("hot.test" -> 128L, "c0.test" -> 257L)
     val base = rows.toDF("kind", "url", "depth", "host")
-      .join(broadcast(budget), Seq("host"), "left").na.fill(0L, Seq("visits"))
-      .repartition(16)
+      .join(visits.toSeq.toDF("host", "visits"), Seq("host"), "left").na.fill(0L, Seq("visits"))
+      .repartition(mapTasks)
 
-    val pre = Admission.preLimit(base, visitLimit, saltSlots)
+    // driver-side reference: per host, the first (visitLimit + 1 -
+    // visits) rows in (kind, url, depth) order, at most `quota`
+    def reference(quota: Int) = rows.groupBy(_._4).values.flatMap { hs =>
+      val remaining = visitLimit + 1 - visits.getOrElse(hs.head._4, 0L).toInt
+      hs.sortBy(r => (r._1, r._2, r._3)).take(math.min(quota, remaining))
+    }.toSet
 
-    // (a) the bound: each host contributes at most saltSlots * remaining
-    val perHost = pre.groupBy($"host").count().as[(String, Long)].collect().toMap
-    assert(perHost("hot.test") <= saltSlots.toLong * (visitLimit + 1 - 128),
-      s"hot host not bounded: ${perHost("hot.test")}")
-    assert(!perHost.contains("c0.test"), "spent host must be dropped entirely")
-    assert(perHost("c1.test") == 50) // under budget: untouched
-    // vs the unbounded flood the window would otherwise sort in one task
-    assert(perHost("hot.test") < 120000 / 50, s"bound not material: ${perHost.get("hot.test")}")
+    for ((quota, limit) <- Seq(None -> (visitLimit + 1), Some(100) -> 100)) {
+      val admitted = Admission.admit(base, visitLimit, quota).as[(String, String, Int, String)]
+      val got = admitted.collect().toSet
+      // (c) exactness
+      val want = reference(quota.getOrElse(Int.MaxValue))
+      assert(got == want, s"quota $quota: admitted ${got.size} rows, reference ${want.size}; " +
+        s"only admitted ${(got diff want).take(3)}, only reference ${(want diff got).take(3)}")
+      assert(got.count(_._4 == "hot.test") == math.min(limit, visitLimit + 1 - 128))
+      assert(!got.exists(_._4 == "c0.test"), "spent host must be dropped entirely")
 
-    // (b) exactness: admitted set identical with and without pre-limit
-    def admit(in: org.apache.spark.sql.DataFrame) = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"host").orderBy($"kind", $"url", $"depth")
-      in.withColumn("rn", row_number().over(w))
-        .filter($"visits" + $"rn" <= lit(visitLimit + 1))
-        .select($"kind", $"url", $"depth", $"host")
+      // (a) the bound's plan: the window's host exchange reads a
+      // partial group limit at min(quota, visitLimit + 1)
+      val limited = graft.Plans.groupLimitedExchanges(admitted.queryExecution.executedPlan)
+      assert(limited.size == 1, s"quota $quota: ${limited.size} group-limited exchanges")
+      val (exchange, g) = limited.head
+      assert(g.partitionSpec.map(_.sql) == Seq("host") && g.limit == limit,
+        s"quota $quota: group limit on ${g.partitionSpec.map(_.sql)} at ${g.limit}, want host at $limit")
+
+      // (b) the bound is material: each map task ships at most `limit`
+      // rows of a host, against the 120,500-row flood without it
+      val shipped = exchange.metrics("shuffleRecordsWritten").value
+      assert(shipped <= mapTasks.toLong * limit + 500,
+        s"quota $quota: the window's exchange shipped $shipped rows")
     }
-    val withPre = admit(pre).collect().map(_.toSeq).toSet
-    val without = admit(base).collect().map(_.toSeq).toSet
-    assert(withPre == without, s"pre-limit changed admission: ${(withPre diff without).take(3)}")
-    assert(withPre.count(_.apply(3) == "hot.test") == visitLimit + 1 - 128)
   }
 
   test("shuffled (non-broadcast) budget join path conforms to RefSim") {

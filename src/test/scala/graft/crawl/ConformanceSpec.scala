@@ -11,14 +11,10 @@ import graft.core.{Finding, RefSim, SynthWeb}
 class ConformanceSpec extends SparkTestBase {
   import org.apache.spark.sql.functions._
 
-  // admitPreLimitMinRows = 0 forces the skew pre-limit ON for every
-  // conformance case — its exactness (bit-identical admission) is
-  // part of what these tests prove; other specs crawl with the
-  // default adaptive threshold (pre-limit off at their sizes)
   private def engineCfg(cfg: SynthWeb.WebConfig, seeds: Seq[String], lake: String,
                         depthLimit: Int, bloom: Boolean): CrawlConfig =
     CrawlConfig(web = cfg, seeds = seeds, lakeRoot = lake, depthLimit = depthLimit, bloom = bloom,
-      fetchPartitions = 8, saltSlots = 2, admitPreLimitMinRows = 0L)
+      fetchPartitions = 8, saltSlots = 2)
 
   private def runBoth(cfg: SynthWeb.WebConfig, seeds: Seq[String], depthLimit: Int = 4,
                       bloom: Boolean = true, lake: String = tmpDir("lake")): (Crawler, RefSim.SimResult) = {

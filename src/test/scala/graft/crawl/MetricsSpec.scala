@@ -69,7 +69,7 @@ class MetricsSpec extends SparkTestBase {
     val crawler = new Crawler(spark, CrawlConfig(
       web = cfg, seeds = seeds, lakeRoot = tmpDir("metrics_lake"),
       hostVisitLimit = hostVisitLimit,
-      fetchPartitions = 8, saltSlots = 2, admitPreLimitMinRows = 0L))
+      fetchPartitions = 8, saltSlots = 2))
     crawler.run()
     val eng = metricSums(crawler)
     assert(eng.keySet == sim.waveStats.indices.toSet,

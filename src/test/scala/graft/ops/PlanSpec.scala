@@ -1,12 +1,11 @@
 package graft.ops
 
-import graft.SparkTestBase
+import graft.{Plans, SparkTestBase}
 import graft.Plans.{captured, nodes, scans, withConf}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{DenseRank, Expression, Rank, RowNumber}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Plan-quality gates (the 100 TB checklist): filters reach the
   * parquet scan, projections prune columns, small dims broadcast, and
@@ -23,36 +22,10 @@ class PlanSpec extends SparkTestBase {
     out.toString
   }
 
-  /** The per-group top-k skew bound: every exchange feeding a rank
-    * window must read Catalyst's map-side `WindowGroupLimit … Partial`
-    * on the window's own partition keys, so no group ships more than
-    * (map tasks x k) rows into its window. InferWindowGroupLimit adds
-    * it only for a literal rank filter with k <= 1000; a non-literal
-    * filter or a larger k silently brings back the unbounded window.
-    * Returns the number of exchanges checked. */
-  private def groupLimitedExchanges(df: DataFrame): Int = {
-    val windows = nodes(df.queryExecution.executedPlan).collect {
-      case w: WindowExec if w.windowExpression.exists(_.exists {
-        case _: RowNumber | _: Rank | _: DenseRank => true
-        case _ => false
-      }) => w
-    }
-    assert(windows.nonEmpty, "no rank window:\n" + plan(df))
-    def feed(p: SparkPlan): Option[ShuffleExchangeExec] = p match {
-      case e: ShuffleExchangeExec => Some(e)
-      case u: UnaryExecNode => feed(u.child)
-      case _ => None
-    }
-    def sameKeys(a: Seq[Expression], b: Seq[Expression]) =
-      a.size == b.size && a.zip(b).forall { case (x, y) => x.semanticEquals(y) }
-    windows.flatMap(w => feed(w.child).map(w -> _)).map { case (w, e) =>
-      e.child match {
-        case g: WindowGroupLimitExec if g.mode == Partial && sameKeys(g.partitionSpec, w.partitionSpec) =>
-        case other => fail(s"the exchange under the window on ${w.partitionSpec} reads " +
-          s"${other.nodeName}, not a partial WindowGroupLimit on the same keys:\n" + plan(df))
-      }
-    }.size
-  }
+  /** Plans.groupLimitedExchanges over `df`'s plan: the number of
+    * group-limited exchanges checked. */
+  private def groupLimitedExchanges(df: DataFrame): Int =
+    Plans.groupLimitedExchanges(df.queryExecution.executedPlan).size
 
   test("substring filter is pushed into the parquet scan") {
     val p = plan(Relational.substringFilter(spark, dir))
@@ -424,10 +397,11 @@ class PlanSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     val spark0 = spark
     import spark0.implicits._
-    val crawler = new Crawler(spark, CrawlConfig(
+    val cfg = CrawlConfig(
       web = SynthWeb.WebConfig(nHosts = 3, pagesPerHost = 10, imagesPerHost = 4),
       seeds = SynthWeb.seeds(2), lakeRoot = tmpDir("planlake"),
-      fetchPartitions = 8, saltSlots = 2))
+      fetchPartitions = 8, saltSlots = 2)
+    val crawler = new Crawler(spark, cfg)
     val qes = captured(spark)(crawler.run())
     // a small host space: Catalyst broadcasts the budget by its scan's
     // recorded size, with no hint in any wave's plan
@@ -437,6 +411,20 @@ class PlanSpec extends SparkTestBase {
       s"budget joins: ${budgetJoins.map(_.nodeName).distinct}")
     val hints = qes.flatMap(_.analyzed.collect { case h: ResolvedHint => h.hints })
     assert(hints.isEmpty, "a crawl query carries a join hint")
+    // the admission skew bound: past a broadcast budget join, every
+    // admission window's host exchange reads a map-side group limit at
+    // hostVisitLimit + 1, so a hot host ships at most (map tasks x 257)
+    // rows into its window
+    val admissions = qes.map(_.executedPlan).filter(Plans.rankWindows(_).nonEmpty)
+    assert(admissions.nonEmpty, "no admission window ran")
+    admissions.foreach { p =>
+      val limited = Plans.groupLimitedExchanges(p)
+      assert(limited.size == Plans.rankWindows(p).size, "an admission window has no exchange:\n" + p)
+      limited.foreach { case (_, g) =>
+        assert(g.partitionSpec.map(_.sql) == Seq("host") && g.limit == cfg.hostVisitLimit + 1,
+          s"admission group limit on ${g.partitionSpec.map(_.sql)} at ${g.limit}")
+      }
+    }
     val k = crawler.seenT.latestWave.get
     // the at-scale join shape: candidates exchanged to the bucket count,
     // the cumulative seen scan NEVER shuffled (and never broadcast)
@@ -527,7 +515,7 @@ class PlanSpec extends SparkTestBase {
 
     // the budget, past the threshold, joins shuffled on host, and the
     // admission window reads that join's partitioning: no exchange of
-    // its own between the two
+    // its own between the two (its group limits are unary nodes)
     val budgetJoins = ran.collect { case j: BaseJoinExec if scans(j.right, "host_budget") => j }
     assert(budgetJoins.size == 1, s"expected one budget join, got ${budgetJoins.map(_.nodeName)}")
     val budgetJoin = budgetJoins.head
